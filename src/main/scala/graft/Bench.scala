@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: representative scale-path queries per operator
   * family, timed end-to-end (plan + execute + count) at

@@ -15,7 +15,6 @@ object BucketedProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchRig.buildSession()
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bprobe").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.write.mode("overwrite").parquet(s"$dir/plain")

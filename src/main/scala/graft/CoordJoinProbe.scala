@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Coordinate-join 10× scale probe (VERDICT r18 task 8 — SURVEY §7.3
   * risk #1): the geometry path's one big join (`GeometryBuilder.coordJoin`

@@ -16,7 +16,6 @@ object DistRankProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.headOption.map(_.toInt).getOrElse(5000000)
     val spark = BenchRig.buildSession()
-    import spark.implicits._
     // input materialized once, off the clock; PINNED so the per-run
     // block sweep below cannot orphan it (lineage is truncated)
     val df = graft.operators.Checkpoints.pinCheckpointed(

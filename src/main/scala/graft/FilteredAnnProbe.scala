@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Filtered-ANN selectivity sweep (VERDICT r18 task 3): measures, at a
   * corpus size where list pruning is real (default 100k × 64-dim, the
   * VecScaleProbe clustered model, ~√N coarse lists), how recall@10
@@ -32,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   * predicate is indexable; the recall bounds hold at every size). */
 object FilteredAnnProbe {
 
-  import VecScaleProbe.{Dim, vec, l2, nearestIdx, mix, unit}
+  import VecScaleProbe.{vec, l2, nearestIdx, mix, unit}
 
   private val TopK = 10
   private val BaseNprobe = 4

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * neighbors can masquerade as a per-query regression).
   * sbt "runMain graft.TimeQuery <reps> <name> [name ...]"
   * SPARK_GRAFT_CONF="k=v;k=v" applies session confs before timing
-  * (e.g. spark.graft.pbf.columnar=false for a row-path A/B). */
+  * (e.g. spark.graft.fanout=false for a fan-out A/B). */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)

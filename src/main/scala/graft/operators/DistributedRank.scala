@@ -294,7 +294,9 @@ object DistributedRank {
                 if (row.isNullAt(keyIdx(i))) null
                 else keyConvs(i)._1(row.get(keyIdx(i), keyTypes(i)))
               val p = prevKey(i)
-              same = if (p == null) cur == null else p.equals(cur)
+              // Java equals, not Scala's numeric `==`: a boxed NaN key
+              // must equal itself (normTop leaves NaN as is)
+              same = if (p == null) cur == null else p.asInstanceOf[AnyRef].equals(cur)
               i += 1
             }
             if (!same) {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object FanOut {
   /** Session kill-switch (`spark.graft.fanout=false`) for deployment
-    * A/Bs, same doctrine as `spark.graft.pbf.columnar`. */
+    * A/Bs. */
   val ConfKey = "spark.graft.fanout"
 
   def apply(df: DataFrame, keys: Column*): DataFrame = {

@@ -2,7 +2,7 @@ package graft.osm
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.Wkb
 import graft.geom.Wkb.Coord
@@ -391,30 +391,11 @@ object OsmQueryExec {
 
     val nodes = all.filter(col("type") === TypeNode)
       .select(col("id").as("nid"), col("lon"), col("lat"))
+    // the walk and the attribute projection read the ways through two
+    // pruned scans: sharing one checkpoint of the filtered ways was
+    // measured 2x slower at 7M nodes (OPTIMIZATION_r22.md)
     val result =
-      if (q.topology) {
-        // The walk and the attribute projection both read the filtered
-        // ways — two scans of the same source. Sharing them through a
-        // lazy localCheckpoint (spark.graft.osm.topoShare=true) was
-        // MEASURED AND REJECTED as the default (r22 addendum): a
-        // topology query's tag filter keeps most ways, so the
-        // checkpoint materializes selection≈corpus way rows (refs
-        // arrays + tags maps) through the block manager — at the
-        // 7M-node probe that cost 2× the phase (topology_s 4.3 vs 2.2,
-        // same host epoch) while the attrs re-scan it replaces decodes
-        // only tags from compressed blobs and prunes refs. The share
-        // stays as an A/B arm for extracts whose filter IS selective;
-        // passing the checkpoint as `attrs` is exact (the inner join
-        // on segment way ids re-implies the dropped superset rows).
-        val share = spark.conf
-          .get("spark.graft.osm.topoShare", "false").toBoolean
-        if (share) {
-          val waysC = el.filter(col("type") === TypeWay)
-            .localCheckpoint(eager = false)
-          Topology.build(spark, waysC, waysC, nodes)
-        } else Topology.build(spark, el,
-          elSource.filter(col("type") === TypeWay), nodes)
-      }
+      if (q.topology) Topology.build(spark, el, elSource.filter(col("type") === TypeWay), nodes)
       else if (q.geometry) GeometryBuilder.build(spark, all, el, q, nodes)
       else el
 

@@ -1,7 +1,7 @@
 package graft.pbf
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import scala.collection.mutable.ArrayBuffer
 
 /** One OSMData blob = one Spark input partition (the unit of parallel
@@ -9,13 +9,13 @@ import scala.collection.mutable.ArrayBuffer
   * reference osmdata.py:213-227 processes these sequentially). */
 final case class BlobInfo(path: String, dataOffset: Long, dataLen: Int)
 
-/** A decoded OSM element in columnar-friendly primitive form. */
+/** One decoded OSM element: the row view [[BlockDecoder.decode]] gives
+  * of an [[ElementBatch]] slot. */
 final case class Decoded(
     id: Long,
     etype: Byte, // 0 node, 1 way, 2 relation (reference block.py:29-33)
     lat: Double,
     lon: Double,
-    hasCoord: Boolean,
     tagKeys: Array[String],
     tagVals: Array[String],
     refs: Array[Long],
@@ -108,6 +108,17 @@ object OsmPbfFile {
       _ => indexUncached(pathStr, conf, st.getLen))
   }
 
+  /** PBF spec limits (wiki.openstreetmap.org/wiki/PBF_Format): a
+    * BlobHeader is at most 64 KiB, a Blob and its inflated payload at
+    * most 32 MiB. Framing lengths are checked against them before
+    * anything is allocated, so a corrupt length field is a typed error
+    * naming the file and offset, never a multi-GB executor allocation. */
+  private val MaxHeaderSize = 64 * 1024
+  private val MaxBlobSize = 32 * 1024 * 1024
+
+  private def frameError(where: String, what: String): Nothing =
+    throw new java.io.IOException(s"malformed pbf frame in $where: $what")
+
   private def indexUncached(pathStr: String, conf: Configuration,
       fileLen: Long): Seq[BlobInfo] = {
     val path = new Path(pathStr)
@@ -119,32 +130,42 @@ object OsmPbfFile {
       var sawHeader = false
       val lenBuf = new Array[Byte](4)
       while (off < fileLen) {
+        val where = s"$pathStr at byte offset $off"
+        if (off + 4 > fileLen) frameError(where, "truncated BlobHeader length")
         in.readFully(off, lenBuf, 0, 4)
         val headerLen = ((lenBuf(0) & 0xff) << 24) | ((lenBuf(1) & 0xff) << 16) |
           ((lenBuf(2) & 0xff) << 8) | (lenBuf(3) & 0xff)
+        if (headerLen < 0 || headerLen > MaxHeaderSize)
+          frameError(where, s"BlobHeader length $headerLen outside [0, $MaxHeaderSize]")
+        if (off + 4 + headerLen > fileLen)
+          frameError(where, s"BlobHeader of $headerLen bytes runs past the end of the file")
         val headerBytes = new Array[Byte](headerLen)
         in.readFully(off + 4, headerBytes, 0, headerLen)
         // BlobHeader: type=1 string, indexdata=2, datasize=3 int32
         var blobType = ""
-        var dataSize = 0
+        var dataSize = 0L
         val r = new PbfReader(headerBytes)
         while (r.hasMore) {
           val tag = r.readTag()
           (tag >> 3) match {
             case 1 => blobType = r.readString()
-            case 3 => dataSize = r.readVarint().toInt
+            case 3 => dataSize = r.readVarint()
             case _ => r.skip(tag & 7)
           }
         }
+        if (dataSize < 0 || dataSize > MaxBlobSize)
+          frameError(where, s"Blob datasize $dataSize outside [0, $MaxBlobSize]")
         val dataOff = off + 4 + headerLen
+        if (dataOff + dataSize > fileLen)
+          frameError(where, s"Blob of $dataSize bytes runs past the end of the file ($fileLen bytes)")
         blobType match {
           case "OSMHeader" =>
-            val hb = new Array[Byte](dataSize)
-            in.readFully(dataOff, hb, 0, dataSize)
-            validateHeader(decodeBlob(hb))
+            val hb = new Array[Byte](dataSize.toInt)
+            in.readFully(dataOff, hb, 0, dataSize.toInt)
+            validateHeader(decodeBlobAt(hb, where))
             sawHeader = true
           case "OSMData" =>
-            blobs += BlobInfo(pathStr, dataOff, dataSize)
+            blobs += BlobInfo(pathStr, dataOff, dataSize.toInt)
           case other =>
             throw new IllegalArgumentException(s"unknown blob type '$other'")
         }
@@ -159,11 +180,15 @@ object OsmPbfFile {
     * lz4_data(6) / zstd_data(7). The reference detects but only
     * implements zlib (headers.py:33-78, block.py:20-23, quirk Q5); we
     * additionally support lz4 + zstd via the JVM codecs Spark already
-    * ships (lz4-java, zstd-jni). lzma(4) / obsolete bzip2(5) rejected. */
-  def decodeBlob(blob: Array[Byte]): Array[Byte] = {
+    * ships (lz4-java, zstd-jni). lzma(4) / obsolete bzip2(5) rejected.
+    * A `raw_size` outside [0, 32 MiB] raises before anything is
+    * allocated; [[decodeBlobAt]] names the file and offset in it. */
+  def decodeBlob(blob: Array[Byte]): Array[Byte] = decodeBlobAt(blob, "blob")
+
+  private[pbf] def decodeBlobAt(blob: Array[Byte], where: String): Array[Byte] = {
     val r = new PbfReader(blob)
     var raw: Array[Byte] = null
-    var rawSize = -1
+    var rawSize = -1L
     var zlib: Array[Byte] = null
     var lz4: Array[Byte] = null
     var zstd: Array[Byte] = null
@@ -171,7 +196,7 @@ object OsmPbfFile {
       val tag = r.readTag()
       (tag >> 3) match {
         case 1 => raw = r.readBytes()
-        case 2 => rawSize = r.readVarint().toInt
+        case 2 => rawSize = r.readVarint()
         case 3 => zlib = r.readBytes()
         case 6 => lz4 = r.readBytes()
         case 7 => zstd = r.readBytes()
@@ -181,15 +206,18 @@ object OsmPbfFile {
         case _ => r.skip(tag & 7)
       }
     }
-    if (raw != null) raw
-    else if (rawSize < 0)
+    if (raw != null) return raw
+    if (rawSize == -1L)
       throw new IllegalArgumentException(
         "compressed blob is missing its raw_size field")
-    else if (zlib != null) Zlib.inflate(zlib, rawSize)
-    else if (zstd != null) com.github.luben.zstd.Zstd.decompress(zstd, rawSize)
+    if (rawSize < 0 || rawSize > MaxBlobSize)
+      frameError(where, s"Blob raw_size $rawSize outside [0, $MaxBlobSize]")
+    val size = rawSize.toInt
+    if (zlib != null) Zlib.inflate(zlib, size)
+    else if (zstd != null) com.github.luben.zstd.Zstd.decompress(zstd, size)
     else if (lz4 != null)
       net.jpountz.lz4.LZ4Factory.fastestInstance()
-        .fastDecompressor().decompress(lz4, rawSize)
+        .fastDecompressor().decompress(lz4, size)
     else throw new IllegalArgumentException("empty blob")
   }
 
@@ -336,14 +364,8 @@ object OsmPbfFile {
   }
 
   def readBlob(info: BlobInfo, conf: Configuration): Array[Byte] = {
-    val path = new Path(info.path)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    try {
-      val buf = new Array[Byte](info.dataLen)
-      in.readFully(info.dataOffset, buf, 0, info.dataLen)
-      decodeBlob(buf)
-    } finally in.close()
+    val reader = new BlobReader(conf)
+    try reader.read(info) finally reader.close()
   }
 }
 
@@ -366,7 +388,7 @@ final class BlobReader(conf: Configuration) extends AutoCloseable {
     })
     val buf = new Array[Byte](info.dataLen)
     in.readFully(info.dataOffset, buf, 0, info.dataLen)
-    OsmPbfFile.decodeBlob(buf)
+    OsmPbfFile.decodeBlobAt(buf, s"${info.path} at byte offset ${info.dataOffset}")
   }
 
   override def close(): Unit = {
@@ -376,34 +398,49 @@ final class BlobReader(conf: Configuration) extends AutoCloseable {
 }
 
 /** PrimitiveBlock → elements decoder (reference block.py:8-130,
-  * primitives.py:9-147, dense.py:8-80 — but emitting real strings and
-  * maps immediately; the reference's global string dictionary is
-  * deliberately dropped, SURVEY §4.3). */
+  * primitives.py:9-147, dense.py:8-80 — but emitting real strings
+  * immediately; the reference's global string dictionary is
+  * deliberately dropped, SURVEY §4.3). One walker, [[decodeBatch]],
+  * feeds both osmpbf read paths: the columnar reader copies the
+  * batch's scalar columns into vectors, the row reader emits rows
+  * straight from it. */
 object BlockDecoder {
 
   private val emptyS = Array.empty[String]
   private val emptyL = Array.empty[Long]
   private val emptyB = Array.empty[Byte]
 
-  /** @param wantTypes which of node(0)/way(1)/relation(2) to emit —
+  /** Block-wide decode state shared by the per-element walkers. */
+  private final class Block(val strs: Array[String], val isMust: Array[Boolean],
+      val needs: DecodeNeeds, val idFilter: Set[Long], val gran: Long,
+      val latOff: Long, val lonOff: Long, val dateGran: Long, val out: ElementBatch)
+
+  /** Decodes one PrimitiveBlock into an [[ElementBatch]].
+    *
+    * @param wantTypes which of node(0)/way(1)/relation(2) to emit —
     *   type pushdown skips decoding whole primitive groups
     *   (reference osmquery.py:242-247).
+    * @param needs which fields to decode; the batch allocates its
+    *   tags/refs/members columns only when asked for them.
     * @param mustTagKeys when non-null, emit only elements whose tag-key
     *   set intersects these keys (F3 ∃ semantics). The check runs on
-    *   block-local string IDS before any string materialization — the
-    *   reference's abort-parse-on-tag-mismatch pushdown
-    *   (primitives.py:23-27) plus its unsatisfiable-filter block skip
-    *   (osmquery.py:311-323) when no key occurs in the string table. */
-  def decode(block: Array[Byte], wantTypes: Array[Boolean],
-             needs: DecodeNeeds, mustTagKeys: Array[String] = null): Iterator[Decoded] = {
+    *   block-local string IDS before any string materialization, and
+    *   whether or not tags are materialized — the reference's
+    *   abort-parse-on-tag-mismatch pushdown (primitives.py:23-27) plus
+    *   its unsatisfiable-filter block skip (osmquery.py:311-323) when no
+    *   key occurs in the string table.
+    * @param idFilter when non-null, only elements with these ids are
+    *   emitted (reference osmquery.py:262-276). */
+  def decodeBatch(block: Array[Byte], wantTypes: Array[Boolean], needs: DecodeNeeds,
+      mustTagKeys: Array[String], idFilter: Set[Long]): ElementBatch = {
+    val out = new ElementBatch(needs)
     val root = new PbfReader(block)
-    var strings: Array[String] = null
+    var strs = emptyS
     val groupSpans = ArrayBuffer.empty[(Int, Int)]
     var granularity = 100L
     var latOffset = 0L
     var lonOffset = 0L
     var dateGranularity = 1000L
-
     while (root.hasMore) {
       val tag = root.readTag()
       (tag >> 3) match {
@@ -414,7 +451,7 @@ object BlockDecoder {
             val t2 = st.readTag()
             if ((t2 >> 3) == 1) buf += st.readString() else st.skip(t2 & 7)
           }
-          strings = buf.toArray
+          strs = buf.toArray
         case 2 =>
           val m = root.readMessage()
           groupSpans += ((m.pos, m.end))
@@ -425,110 +462,26 @@ object BlockDecoder {
         case _ => root.skip(tag & 7)
       }
     }
-    val strs = if (strings == null) emptyS else strings
     // must-tag keys → block-local string-id membership (the reference's
-    // strmap, osmquery.py:249-251); an empty map means no element in
+    // strmap, osmquery.py:249-251); no flagged id means no element in
     // this block can match — skip the whole block
     var isMust: Array[Boolean] = null
     if (mustTagKeys != null) {
       val keySet = mustTagKeys.toSet
-      isMust = new Array[Boolean](strs.length)
-      var any = false
-      var i = 0
-      while (i < strs.length) {
-        if (keySet.contains(strs(i))) { isMust(i) = true; any = true }
-        i += 1
-      }
-      if (!any) return Iterator.empty
+      isMust = strs.map(keySet.contains)
+      if (!isMust.contains(true)) return out
     }
-    val out = ArrayBuffer.empty[Decoded]
-    groupSpans.foreach { case (s, e) =>
-      decodeGroup(new PbfReader(root.buf, s, e), strs, wantTypes, needs, isMust,
-        granularity, latOffset, lonOffset, dateGranularity, out)
-    }
-    out.iterator
-  }
-
-  /** Columnar block decode for the vectorized scan path: same semantics
-    * as [[decode]] restricted to the scalar columns
-    * (`id, type, lat, lon, version, timestamp, changeset`), with the
-    * DenseNodes fast path converting whole packed arrays into the
-    * [[ScalarBatch]] columns with no per-element allocation — the JVM
-    * analogue of the reference's vectorized dense parser (reference
-    * dense.py:83-180). Tags/refs/members are row-path-only (a CSR
-    * refs/tags batch tier existed in round 7, retired in round 8 on
-    * warm-JVM parity — README "Columnar refs/tags tier"); tag keys are
-    * still READ here when a must-key check is pushed, as block-local
-    * string ids with no materialization.
-    *
-    * @param idFilter when non-null, only elements with these ids are
-    *   emitted (the same post-decode filter the row reader applies). */
-  def decodeScalars(block: Array[Byte], wantTypes: Array[Boolean],
-      needs: DecodeNeeds, mustTagKeys: Array[String],
-      idFilter: Set[Long]): ScalarBatch = {
-    val root = new PbfReader(block)
-    var strings: Array[String] = null
-    val groupSpans = ArrayBuffer.empty[(Int, Int)]
-    var granularity = 100L
-    var latOffset = 0L
-    var lonOffset = 0L
-    var dateGranularity = 1000L
-    while (root.hasMore) {
-      val tag = root.readTag()
-      (tag >> 3) match {
-        case 1 =>
-          val st = root.readMessage()
-          val buf = ArrayBuffer.empty[String]
-          while (st.hasMore) {
-            val t2 = st.readTag()
-            if ((t2 >> 3) == 1) buf += st.readString() else st.skip(t2 & 7)
-          }
-          strings = buf.toArray
-        case 2 =>
-          val m = root.readMessage()
-          groupSpans += ((m.pos, m.end))
-        case 17 => granularity = root.readVarint()
-        case 18 => dateGranularity = root.readVarint()
-        case 19 => latOffset = root.readVarint()
-        case 20 => lonOffset = root.readVarint()
-        case _ => root.skip(tag & 7)
-      }
-    }
-    val strs = if (strings == null) emptyS else strings
-    val out = new ScalarBatch()
-    var isMust: Array[Boolean] = null
-    if (mustTagKeys != null) {
-      val keySet = mustTagKeys.toSet
-      isMust = new Array[Boolean](strs.length)
-      var any = false
-      var i = 0
-      while (i < strs.length) {
-        if (keySet.contains(strs(i))) { isMust(i) = true; any = true }
-        i += 1
-      }
-      if (!any) return out
-    }
+    val b = new Block(strs, isMust, needs, idFilter, granularity, latOffset, lonOffset,
+      dateGranularity, out)
     groupSpans.foreach { case (s, e) =>
       val g = new PbfReader(root.buf, s, e)
       while (g.hasMore) {
         val tag = g.readTag()
         (tag >> 3) match {
-          case 1 => // Node (plain) — direct scalar decode, no row spill
-            if (wantTypes(0)) decodeNodeScalar(g.readMessage(), isMust, needs,
-              granularity, latOffset, lonOffset, dateGranularity, idFilter, out)
-            else g.skip(2)
-          case 2 => // DenseNodes — the vectorized fast path
-            if (wantTypes(0)) decodeDenseScalars(g.readMessage(), needs, isMust,
-              idFilter, granularity, latOffset, lonOffset, dateGranularity, out)
-            else g.skip(2)
-          case 3 => // Way — direct scalar decode
-            if (wantTypes(1)) decodeWayRelScalar(g.readMessage(), etype = 1,
-              isMust, needs, dateGranularity, idFilter, out)
-            else g.skip(2)
-          case 4 => // Relation — direct scalar decode
-            if (wantTypes(2)) decodeWayRelScalar(g.readMessage(), etype = 2,
-              isMust, needs, dateGranularity, idFilter, out)
-            else g.skip(2)
+          case 1 if wantTypes(0) => decodeElement(g.readMessage(), 0, b)
+          case 2 if wantTypes(0) => decodeDense(g.readMessage(), b)
+          case 3 if wantTypes(1) => decodeElement(g.readMessage(), 1, b)
+          case 4 if wantTypes(2) => decodeElement(g.readMessage(), 2, b)
           case _ => g.skip(tag & 7)
         }
       }
@@ -536,19 +489,48 @@ object BlockDecoder {
     out
   }
 
-  /** Plain-Node scalar decode straight into the batch: tag keys are read
-    * only when a must-key test is active (the scalar columns never need
-    * string materialization), and the element skips the batch entirely
-    * when the must/id filters reject it — the round-4/5 `Decoded`
-    * allocation round-trip is gone. */
-  private def decodeNodeScalar(r: PbfReader, isMust: Array[Boolean],
-      needs: DecodeNeeds, gran: Long, latOff: Long, lonOff: Long,
-      dateGran: Long, idFilter: Set[Long],
-      out: ScalarBatch): Unit = {
+  /** Row view of [[decodeBatch]] with no id filter: one [[Decoded]]
+    * per element. */
+  def decode(block: Array[Byte], wantTypes: Array[Boolean],
+             needs: DecodeNeeds, mustTagKeys: Array[String] = null): Iterator[Decoded] = {
+    val b = decodeBatch(block, wantTypes, needs, mustTagKeys, null)
+    def at[A](col: Array[Array[A]], i: Int, empty: Array[A]): Array[A] =
+      if (col == null || col(i) == null) empty else col(i)
+    Iterator.range(0, b.n).map { i =>
+      Decoded(b.ids(i), b.types(i), b.lats(i), b.lons(i),
+        at(b.tagKeys, i, emptyS), at(b.tagVals, i, emptyS), at(b.refs, i, emptyL),
+        at(b.memberRoles, i, emptyS), at(b.memberRefs, i, emptyL),
+        at(b.memberTypes, i, emptyB),
+        b.versions(i), b.tsMicros(i) / 1000L, b.changesets(i), b.hasInfo(i))
+    }
+  }
+
+  /** Scalar-column view of [[decodeBatch]]: `needs` is restricted to
+    * the scalar columns (`id, type, lat, lon, version, timestamp,
+    * changeset`), so no tags/refs/members column is decoded. */
+  def decodeScalars(block: Array[Byte], wantTypes: Array[Boolean],
+      needs: DecodeNeeds, mustTagKeys: Array[String],
+      idFilter: Set[Long]): ElementBatch =
+    decodeBatch(block, wantTypes, needs.copy(tags = false, refs = false, members = false),
+      mustTagKeys, idFilter)
+
+  /** Plain Node / Way / Relation. The three share id(1), keys(2),
+    * vals(3) and info(4) — a Node's id is zigzag, the others' plain —
+    * and differ after that: a Node carries zigzag lat(8)/lon(9), a Way
+    * delta refs(8), a Relation roles(8)/memids(9)/types(10). Tag keys
+    * are read for the must-key test even when tags are not
+    * materialized. */
+  private def decodeElement(r: PbfReader, etype: Byte, b: Block): Unit = {
+    val needs = b.needs
     var id = 0L
     var lat = 0L
     var lon = 0L
     var keys = emptyL
+    var vals = emptyL
+    var refs = emptyL
+    var roles = emptyL
+    var memids = emptyL
+    var mtypes = emptyL
     var version = -1
     var ts = 0L
     var cs = 0L
@@ -556,113 +538,106 @@ object BlockDecoder {
     while (r.hasMore) {
       val tag = r.readTag()
       (tag >> 3) match {
-        case 1 => id = r.readZigzag()
-        case 2 => if (isMust != null) keys = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 4 =>
-          if (needs.info) {
-            val (v, t, c) = decodeInfo(r.readMessage(), dateGran)
-            version = v; ts = t; cs = c; hasInfo = true
-          } else r.skip(2)
-        case 8 => lat = r.readZigzag()
-        case 9 => lon = r.readZigzag()
+        case 1 => id = if (etype == 0) r.readZigzag() else r.readVarint()
+        case 2 if needs.tags || b.isMust != null =>
+          keys = r.readPackedLongs(zigzag = false, delta = false)
+        case 3 if needs.tags => vals = r.readPackedLongs(zigzag = false, delta = false)
+        case 4 if needs.info =>
+          val info = r.readMessage()
+          hasInfo = true
+          while (info.hasMore) {
+            val t2 = info.readTag()
+            (t2 >> 3) match {
+              case 1 => version = info.readVarint().toInt
+              case 2 => ts = info.readVarint()
+              case 3 => cs = info.readVarint()
+              case _ => info.skip(t2 & 7)
+            }
+          }
+        case 8 if etype == 0 => lat = r.readZigzag()
+        case 9 if etype == 0 => lon = r.readZigzag()
+        case 8 if etype == 1 && needs.refs => refs = r.readPackedLongs(zigzag = true, delta = true)
+        case 8 if etype == 2 && needs.members => roles = r.readPackedLongs(zigzag = false, delta = false)
+        case 9 if etype == 2 && needs.members => memids = r.readPackedLongs(zigzag = true, delta = true)
+        case 10 if etype == 2 && needs.members => mtypes = r.readPackedLongs(zigzag = false, delta = false)
         case _ => r.skip(tag & 7)
       }
     }
-    if (!keysMatch(keys, isMust)) return
-    if (idFilter == null || idFilter.contains(id)) {
-      out.add(id, 0, 1e-9 * (latOff + gran * lat), 1e-9 * (lonOff + gran * lon),
-        version, ts * 1000L, cs, hasInfo)
+    if (!anyMust(b.isMust, keys, 0, keys.length, 1) ||
+      (b.idFilter != null && !b.idFilter.contains(id))) return
+    val out = b.out
+    val i = out.add(id, etype,
+      if (etype == 0) 1e-9 * (b.latOff + b.gran * lat) else 0.0,
+      if (etype == 0) 1e-9 * (b.lonOff + b.gran * lon) else 0.0,
+      version, ts * b.dateGran * 1000L, cs, hasInfo)
+    if (out.tagKeys != null && keys.nonEmpty) {
+      if (vals.length < keys.length) badKvSpan("Node/Way/Relation vals shorter than keys")
+      putTags(b, i, keys, 0, vals, 0, 1, keys.length)
+    }
+    if (out.refs != null) out.refs(i) = refs
+    if (out.memberRefs != null && memids.nonEmpty) {
+      if (roles.length != memids.length || mtypes.length != memids.length)
+        throw new java.io.IOException(
+          "malformed PrimitiveBlock: Relation roles/memids/types lengths differ")
+      out.memberRoles(i) = roles.map(s => str(b.strs, s))
+      out.memberRefs(i) = memids
+      out.memberTypes(i) = mtypes.map(_.toByte)
     }
   }
 
-  /** Way/Relation scalar decode straight into the batch (the two share
-    * a wire layout for every scalar-relevant field: id(1), keys(2),
-    * info(4)). Tags/refs/members stay row-path-only — the tag keys are
-    * read here only for the must-key CHECK (string-id test, nothing
-    * materializes). */
-  private def decodeWayRelScalar(r: PbfReader, etype: Byte,
-      isMust: Array[Boolean], needs: DecodeNeeds, dateGran: Long,
-      idFilter: Set[Long], out: ScalarBatch): Unit = {
-    var id = 0L
-    var keys = emptyL
-    var version = -1
-    var ts = 0L
-    var cs = 0L
-    var hasInfo = false
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => if (isMust != null) keys = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 4 =>
-          if (needs.info) {
-            val (v, t, c) = decodeInfo(r.readMessage(), dateGran)
-            version = v; ts = t; cs = c; hasInfo = true
-          } else r.skip(2)
-        case _ => r.skip(tag & 7)
-      }
-    }
-    if (!keysMatch(keys, isMust)) return
-    if (idFilter == null || idFilter.contains(id)) {
-      out.add(id, etype, 0.0, 0.0, version, ts * 1000L, cs, hasInfo)
-    }
-  }
-
-  /** DenseNodes → ScalarBatch. With no must-tag / id filter the packed
-    * arrays convert to columns in four tight loops (ids copy, two
-    * coordinate de-quantizations, info widening); with filters it falls
-    * back to the same per-node walk as [[decodeDense]] minus string
-    * materialization. */
-  private def decodeDenseScalars(r: PbfReader, needs: DecodeNeeds,
-      isMust: Array[Boolean], idFilter: Set[Long],
-      gran: Long, latOff: Long, lonOff: Long, dateGran: Long,
-      out: ScalarBatch): Unit = {
+  /** Vectorized DenseNodes incl. the 0-delimited keys_vals splitter
+    * (reference dense.py:8-50, protobuf.pyx:74-106). With no tags,
+    * must-key or id filter the packed arrays convert to columns in
+    * tight loops with no per-element allocation (reference
+    * dense.py:83-180); otherwise each node's kv span is walked. */
+  private def decodeDense(r: PbfReader, b: Block): Unit = {
+    val needs = b.needs
     var ids = emptyL
     var lats = emptyL
     var lons = emptyL
-    var kvs: Array[Long] = emptyL
-    var versions: Array[Long] = emptyL
-    var tss: Array[Long] = emptyL
-    var css: Array[Long] = emptyL
+    var kvs = emptyL
+    var versions = emptyL
+    var tss = emptyL
+    var css = emptyL
     var hasInfo = false
     while (r.hasMore) {
       val tag = r.readTag()
       (tag >> 3) match {
         case 1 => ids = r.readPackedLongs(zigzag = true, delta = true)
-        case 5 =>
-          if (needs.info) {
-            val di = r.readMessage()
-            hasInfo = true
-            while (di.hasMore) {
-              val t2 = di.readTag()
-              (t2 >> 3) match {
-                case 1 => versions = di.readPackedLongs(zigzag = false, delta = false)
-                case 2 => tss = di.readPackedLongs(zigzag = true, delta = true)
-                case 3 => css = di.readPackedLongs(zigzag = true, delta = true)
-                case _ => di.skip(t2 & 7)
-              }
+        case 5 if needs.info =>
+          val di = r.readMessage()
+          hasInfo = true
+          while (di.hasMore) {
+            val t2 = di.readTag()
+            (t2 >> 3) match {
+              case 1 => versions = di.readPackedLongs(zigzag = false, delta = false)
+              case 2 => tss = di.readPackedLongs(zigzag = true, delta = true)
+              case 3 => css = di.readPackedLongs(zigzag = true, delta = true)
+              case _ => di.skip(t2 & 7)
             }
-          } else r.skip(2)
-        case 8 => if (needs.coords) lats = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case 9 => if (needs.coords) lons = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case 10 => if (isMust != null) kvs = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
+          }
+        case 8 if needs.coords => lats = r.readPackedLongs(zigzag = true, delta = true)
+        case 9 if needs.coords => lons = r.readPackedLongs(zigzag = true, delta = true)
+        case 10 if needs.tags || b.isMust != null =>
+          kvs = r.readPackedLongs(zigzag = false, delta = false)
         case _ => r.skip(tag & 7)
       }
     }
     val m = ids.length
-    val tsScale = dateGran * 1000L // DenseInfo timestamp units → epoch micros
-    if (isMust == null && idFilter == null) {
+    val tsScale = b.dateGran * 1000L // DenseInfo timestamp units → epoch micros
+    val out = b.out
+    if (b.isMust == null && b.idFilter == null && !needs.tags) {
       out.ensure(m)
       val base = out.n
       System.arraycopy(ids, 0, out.ids, base, m)
-      // types stay 0 (node): fresh ScalarBatch slots are zero-filled
+      // types stay 0 (node): fresh ElementBatch slots are zero-filled
       if (lats.nonEmpty) {
         var i = 0
-        while (i < m) { out.lats(base + i) = 1e-9 * (latOff + gran * lats(i)); i += 1 }
+        while (i < m) { out.lats(base + i) = 1e-9 * (b.latOff + b.gran * lats(i)); i += 1 }
       }
       if (lons.nonEmpty) {
         var i = 0
-        while (i < m) { out.lons(base + i) = 1e-9 * (lonOff + gran * lons(i)); i += 1 }
+        while (i < m) { out.lons(base + i) = 1e-9 * (b.lonOff + b.gran * lons(i)); i += 1 }
       }
       if (versions.nonEmpty) {
         var i = 0
@@ -679,58 +654,75 @@ object BlockDecoder {
       var kvPos = 0
       var i = 0
       while (i < m) {
-        // bound the node's kv span first (the must check reads it; the
-        // delimiter is consumed exactly once per node)
-        var spanStart = 0
-        var spanEnd = 0
-        if (kvs.nonEmpty && kvPos < kvs.length) {
-          spanStart = kvPos
-          var p = kvPos
-          while (p < kvs.length && kvs(p) != 0L) p += 2
-          if (p > kvs.length) badKvSpan("DenseNodes keys_vals key without value")
-          spanEnd = p
-          kvPos = if (p < kvs.length) p + 1 else p
-        }
-        var matched = isMust == null
-        if (isMust != null) {
-          var q = spanStart
-          while (!matched && q < spanEnd) {
-            if (isMust(mustIx(kvs(q), isMust.length))) matched = true
-            q += 2
-          }
-        }
-        if (matched && (idFilter == null || idFilter.contains(ids(i)))) {
-          out.add(ids(i), 0,
-            if (lats.isEmpty) 0.0 else 1e-9 * (latOff + gran * lats(i)),
-            if (lons.isEmpty) 0.0 else 1e-9 * (lonOff + gran * lons(i)),
+        // bound the node's kv span first (the must check and the tag
+        // lookup read it; the delimiter is consumed exactly once per node)
+        val spanStart = kvPos
+        var p = kvPos
+        while (p < kvs.length && kvs(p) != 0L) p += 2
+        if (p > kvs.length) badKvSpan("DenseNodes keys_vals key without value")
+        kvPos = if (p < kvs.length) p + 1 else p
+        if (anyMust(b.isMust, kvs, spanStart, p, 2) &&
+          (b.idFilter == null || b.idFilter.contains(ids(i)))) {
+          val j = out.add(ids(i), 0,
+            if (lats.isEmpty) 0.0 else 1e-9 * (b.latOff + b.gran * lats(i)),
+            if (lons.isEmpty) 0.0 else 1e-9 * (b.lonOff + b.gran * lons(i)),
             if (versions.nonEmpty) versions(i).toInt else -1,
             if (tss.nonEmpty) tss(i) * tsScale else 0L,
             if (css.nonEmpty) css(i) else 0L,
             hasInfo)
+          if (out.tagKeys != null && p > spanStart)
+            putTags(b, j, kvs, spanStart, kvs, spanStart + 1, 2, (p - spanStart) / 2)
         }
         i += 1
       }
     }
   }
 
-  /** any key id flagged in isMust? (integer check, pre-materialization) */
-  private def keysMatch(keys: Array[Long], isMust: Array[Boolean]): Boolean = {
+  /** Any key id in `keys(from until until by step)` flagged in isMust?
+    * (integer check, pre-materialization; true when no must-key test) */
+  private def anyMust(isMust: Array[Boolean], keys: Array[Long],
+      from: Int, until: Int, step: Int): Boolean = {
     if (isMust == null) return true
-    var i = 0
-    while (i < keys.length) {
-      if (isMust(mustIx(keys(i), isMust.length))) return true
-      i += 1
+    var q = from
+    while (q < until) {
+      if (isMust(mustIx(keys(q), isMust.length))) return true
+      q += step
     }
     false
   }
 
+  /** Materializes `n` tags of slot `i`: key/value string ids at
+    * `ks(k0 + step * j)` / `vs(v0 + step * j)`. */
+  private def putTags(b: Block, i: Int, ks: Array[Long], k0: Int,
+      vs: Array[Long], v0: Int, step: Int, n: Int): Unit = {
+    val tk = new Array[String](n)
+    val tv = new Array[String](n)
+    var j = 0
+    while (j < n) {
+      tk(j) = str(b.strs, ks(k0 + step * j))
+      tv(j) = str(b.strs, vs(v0 + step * j))
+      j += 1
+    }
+    b.out.tagKeys(i) = tk
+    b.out.tagVals(i) = tv
+  }
+
   /** Fail-loudly guard for tag key/val wire arrays: a truncated or
     * odd-length span in a corrupt block must raise the same
-    * 'malformed PrimitiveBlock' IOException as [[requireWire]] /
-    * [[mustIx]], never a raw ArrayIndexOutOfBoundsException. */
+    * 'malformed PrimitiveBlock' IOException as
+    * `OsmPbfFile.requireWire` / [[mustIx]], never a raw
+    * ArrayIndexOutOfBoundsException. */
   private def badKvSpan(what: String): Nothing =
     throw new java.io.IOException(
       s"malformed PrimitiveBlock: truncated tag key/val span ($what)")
+
+  /** Bounds-checked string-table lookup for tag and role strings. */
+  private def str(strs: Array[String], id: Long): String = {
+    if (id < 0L || id >= strs.length)
+      throw new java.io.IOException(
+        s"malformed PrimitiveBlock: string id $id outside string table (size=${strs.length})")
+    strs(id.toInt)
+  }
 
   /** bounds-checked string-table id for the must-key test: a corrupt
     * block with a key id outside the string table raises the same
@@ -741,249 +733,5 @@ object BlockDecoder {
       throw new IllegalArgumentException(
         s"malformed pbf: tag key id $id outside string table (size=$n)")
     id.toInt
-  }
-
-  private def decodeGroup(g: PbfReader, strings: Array[String],
-      wantTypes: Array[Boolean], needs: DecodeNeeds, isMust: Array[Boolean],
-      gran: Long, latOff: Long, lonOff: Long, dateGran: Long,
-      out: ArrayBuffer[Decoded]): Unit = {
-    while (g.hasMore) {
-      val tag = g.readTag()
-      (tag >> 3) match {
-        case 1 => // Node
-          if (wantTypes(0)) decodeNode(g.readMessage(), strings, needs, isMust,
-            gran, latOff, lonOff, dateGran, out)
-          else g.skip(2)
-        case 2 => // DenseNodes
-          if (wantTypes(0)) decodeDense(g.readMessage(), strings, needs, isMust,
-            gran, latOff, lonOff, dateGran, out)
-          else g.skip(2)
-        case 3 => // Way
-          if (wantTypes(1)) decodeWay(g.readMessage(), strings, needs, isMust, dateGran, out)
-          else g.skip(2)
-        case 4 => // Relation
-          if (wantTypes(2)) decodeRelation(g.readMessage(), strings, needs, isMust, dateGran, out)
-          else g.skip(2)
-        case _ => g.skip(tag & 7)
-      }
-    }
-  }
-
-  /** Info submessage → (version, timestampMs, changeset). */
-  private def decodeInfo(r: PbfReader, dateGran: Long): (Int, Long, Long) = {
-    var version = -1
-    var ts = 0L
-    var cs = 0L
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => version = r.readVarint().toInt
-        case 2 => ts = r.readVarint() * dateGran
-        case 3 => cs = r.readVarint()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    (version, ts, cs)
-  }
-
-  private def decodeNode(r: PbfReader, strings: Array[String], needs: DecodeNeeds,
-      isMust: Array[Boolean],
-      gran: Long, latOff: Long, lonOff: Long, dateGran: Long,
-      out: ArrayBuffer[Decoded]): Unit = {
-    var id = 0L
-    var lat = 0L
-    var lon = 0L
-    var keys = emptyL
-    var vals = emptyL
-    var version = -1
-    var ts = 0L
-    var cs = 0L
-    var hasInfo = false
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readZigzag()
-        case 2 => if (needs.tags) keys = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 4 =>
-          if (needs.info) {
-            val (v, t, c) = decodeInfo(r.readMessage(), dateGran)
-            version = v; ts = t; cs = c; hasInfo = true
-          } else r.skip(2)
-        case 3 => if (needs.tags) vals = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 8 => lat = r.readZigzag()
-        case 9 => lon = r.readZigzag()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    if (!keysMatch(keys, isMust)) return
-    val (tk, tv) = lookupTags(keys, vals, strings)
-    out += Decoded(id, 0,
-      1e-9 * (latOff + gran * lat), 1e-9 * (lonOff + gran * lon), needs.coords,
-      tk, tv, emptyL, emptyS, emptyL, emptyB, version, ts, cs, hasInfo)
-  }
-
-  /** Vectorized DenseNodes incl. the 0-delimited keys_vals splitter
-    * (reference dense.py:8-50, protobuf.pyx:74-106). */
-  private def decodeDense(r: PbfReader, strings: Array[String], needs: DecodeNeeds,
-      isMust: Array[Boolean],
-      gran: Long, latOff: Long, lonOff: Long, dateGran: Long,
-      out: ArrayBuffer[Decoded]): Unit = {
-    var ids = emptyL
-    var lats = emptyL
-    var lons = emptyL
-    var kvs: Array[Long] = emptyL
-    var versions: Array[Long] = emptyL
-    var tss: Array[Long] = emptyL
-    var css: Array[Long] = emptyL
-    var hasInfo = false
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => ids = r.readPackedLongs(zigzag = true, delta = true)
-        case 5 =>
-          if (needs.info) {
-            val di = r.readMessage()
-            hasInfo = true
-            while (di.hasMore) {
-              val t2 = di.readTag()
-              (t2 >> 3) match {
-                case 1 => versions = di.readPackedLongs(zigzag = false, delta = false)
-                case 2 => tss = di.readPackedLongs(zigzag = true, delta = true)
-                case 3 => css = di.readPackedLongs(zigzag = true, delta = true)
-                case _ => di.skip(t2 & 7)
-              }
-            }
-          } else r.skip(2)
-        case 8 => if (needs.coords) lats = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case 9 => if (needs.coords) lons = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case 10 => if (needs.tags) kvs = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case _ => r.skip(tag & 7)
-      }
-    }
-    var kvPos = 0
-    var i = 0
-    while (i < ids.length) {
-      var tk = emptyS
-      var tv = emptyS
-      var matched = isMust == null
-      if (kvs.nonEmpty && kvPos < kvs.length) {
-        // pass 1 — span + must-key match on raw string ids (no string
-        // materialization for filtered-out nodes)
-        var p = kvPos
-        while (p < kvs.length && kvs(p) != 0L) {
-          if (!matched && isMust(mustIx(kvs(p), isMust.length))) matched = true
-          p += 2
-        }
-        if (p > kvs.length) badKvSpan("DenseNodes keys_vals key without value")
-        if (matched && p > kvPos) {
-          val n = (p - kvPos) / 2
-          tk = new Array[String](n)
-          tv = new Array[String](n)
-          var j = 0
-          while (j < n) {
-            tk(j) = strings(kvs(kvPos + 2 * j).toInt)
-            tv(j) = strings(kvs(kvPos + 2 * j + 1).toInt)
-            j += 1
-          }
-        }
-        kvPos = p + 1 // consume the 0 delimiter
-      }
-      if (matched) {
-        out += Decoded(ids(i), 0,
-          if (lats.isEmpty) 0.0 else 1e-9 * (latOff + gran * lats(i)),
-          if (lons.isEmpty) 0.0 else 1e-9 * (lonOff + gran * lons(i)),
-          needs.coords, tk, tv, emptyL, emptyS, emptyL, emptyB,
-          if (versions.nonEmpty) versions(i).toInt else -1,
-          if (tss.nonEmpty) tss(i) * dateGran else 0L,
-          if (css.nonEmpty) css(i) else 0L,
-          hasInfo)
-      }
-      i += 1
-    }
-  }
-
-  private def decodeWay(r: PbfReader, strings: Array[String], needs: DecodeNeeds,
-      isMust: Array[Boolean], dateGran: Long, out: ArrayBuffer[Decoded]): Unit = {
-    var id = 0L
-    var keys = emptyL
-    var vals = emptyL
-    var refs = emptyL
-    var version = -1
-    var ts = 0L
-    var cs = 0L
-    var hasInfo = false
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => if (needs.tags) keys = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 3 => if (needs.tags) vals = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 4 =>
-          if (needs.info) {
-            val (v, t, c) = decodeInfo(r.readMessage(), dateGran)
-            version = v; ts = t; cs = c; hasInfo = true
-          } else r.skip(2)
-        case 8 => if (needs.refs) refs = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case _ => r.skip(tag & 7)
-      }
-    }
-    if (!keysMatch(keys, isMust)) return
-    val (tk, tv) = lookupTags(keys, vals, strings)
-    out += Decoded(id, 1, 0.0, 0.0, hasCoord = false,
-      tk, tv, refs, emptyS, emptyL, emptyB, version, ts, cs, hasInfo)
-  }
-
-  private def decodeRelation(r: PbfReader, strings: Array[String], needs: DecodeNeeds,
-      isMust: Array[Boolean], dateGran: Long, out: ArrayBuffer[Decoded]): Unit = {
-    var id = 0L
-    var keys = emptyL
-    var vals = emptyL
-    var roleSids = Array.empty[Int]
-    var memids = emptyL
-    var types = Array.empty[Int]
-    var version = -1
-    var ts = 0L
-    var cs = 0L
-    var hasInfo = false
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => if (needs.tags) keys = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 3 => if (needs.tags) vals = r.readPackedLongs(zigzag = false, delta = false) else r.skip(2)
-        case 4 =>
-          if (needs.info) {
-            val (v, t, c) = decodeInfo(r.readMessage(), dateGran)
-            version = v; ts = t; cs = c; hasInfo = true
-          } else r.skip(2)
-        case 8 => if (needs.members) roleSids = r.readPackedInts() else r.skip(2)
-        case 9 => if (needs.members) memids = r.readPackedLongs(zigzag = true, delta = true) else r.skip(2)
-        case 10 => if (needs.members) types = r.readPackedInts() else r.skip(2)
-        case _ => r.skip(tag & 7)
-      }
-    }
-    if (!keysMatch(keys, isMust)) return
-    val (tk, tv) = lookupTags(keys, vals, strings)
-    val roles = if (roleSids.nonEmpty) roleSids.map(strings(_)) else emptyS
-    val mtypes = if (types.nonEmpty) types.map(_.toByte) else emptyB
-    out += Decoded(id, 2, 0.0, 0.0, hasCoord = false,
-      tk, tv, emptyL, roles, memids, mtypes, version, ts, cs, hasInfo)
-  }
-
-  private def lookupTags(keys: Array[Long], vals: Array[Long],
-      strings: Array[String]): (Array[String], Array[String]) = {
-    if (keys.isEmpty) (emptyS, emptyS)
-    else {
-      if (vals.length < keys.length) badKvSpan("Way/Relation vals shorter than keys")
-      val tk = new Array[String](keys.length)
-      val tv = new Array[String](keys.length)
-      var i = 0
-      while (i < keys.length) {
-        tk(i) = strings(keys(i).toInt)
-        tv(i) = strings(vals(i).toInt)
-        i += 1
-      }
-      (tk, tv)
-    }
   }
 }

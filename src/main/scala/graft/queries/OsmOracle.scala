@@ -63,8 +63,7 @@ object OsmOracle {
   private def done(name: String): Boolean =
     new java.io.File(s"$dir/$name.parquet/_SUCCESS").exists()
 
-  private def write(spark: SparkSession, name: String,
-      df: org.apache.spark.sql.DataFrame): Unit =
+  private def write(name: String, df: org.apache.spark.sql.DataFrame): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
   /** Mini-world fixture tables + expected geometry. Idempotent. */
@@ -78,20 +77,20 @@ object OsmOracle {
     val ways = MiniWorld.ways.collect { case w: W => w }
     val rels = MiniWorld.relations.collect { case r: R => r }
 
-    write(spark, "mini_nodes",
+    write("mini_nodes",
       nodes.map(n => (n.id, rt(n.lat), rt(n.lon))).toDF("id", "lat", "lon"))
-    write(spark, "mini_node_tags",
+    write("mini_node_tags",
       nodes.flatMap(n => n.tags.map(t => (n.id, t._1, t._2))).toDF("id", "key", "value"))
-    write(spark, "mini_ways", ways.map(w => Tuple1(w.id)).toDF("id"))
-    write(spark, "mini_way_tags",
+    write("mini_ways", ways.map(w => Tuple1(w.id)).toDF("id"))
+    write("mini_way_tags",
       ways.flatMap(w => w.tags.map(t => (w.id, t._1, t._2))).toDF("id", "key", "value"))
-    write(spark, "mini_way_refs",
+    write("mini_way_refs",
       ways.flatMap(w => w.refs.zipWithIndex.map { case (r, p) => (w.id, p, r) })
         .toDF("way_id", "pos", "ref"))
-    write(spark, "mini_rels", rels.map(r => Tuple1(r.id)).toDF("id"))
-    write(spark, "mini_rel_tags",
+    write("mini_rels", rels.map(r => Tuple1(r.id)).toDF("id"))
+    write("mini_rel_tags",
       rels.flatMap(r => r.tags.map(t => (r.id, t._1, t._2))).toDF("id", "key", "value"))
-    write(spark, "mini_rel_members",
+    write("mini_rel_members",
       rels.flatMap(r => r.members.zipWithIndex.map { case ((role, ref, mt), p) =>
         (r.id, p, role, ref, mt.toInt) }).toDF("rel_id", "pos", "role", "ref", "mtype"))
 
@@ -121,7 +120,7 @@ object OsmOracle {
         polyHex(Seq(
           Seq(c(30L), c(31L), c(32L), c(33L), c(30L)),
           Seq(c(34L), c(35L), c(36L), c(37L), c(34L)))), "Polygon"))
-    write(spark, "mini_expected_geom",
+    write("mini_expected_geom",
       expected.toDF("q", "osmid", "wkb_hex", "geom_type"))
   }
 
@@ -135,19 +134,19 @@ object OsmOracle {
     import graft.pbf.OsmPbfWriter.{N, R, W}
 
     val (nodes, ways, rels) = BigWorld.model(2000000, 100000)
-    write(spark, "big_node_tags",
+    write("big_node_tags",
       nodes.collect { case n: N if n.tags.nonEmpty =>
         n.tags.map(t => (n.id, t._1, t._2)) }.flatten.toDF("id", "key", "value"))
     val ws = ways.collect { case w: W => w }
-    write(spark, "big_way_tags",
+    write("big_way_tags",
       ws.flatMap(w => w.tags.map(t => (w.id, t._1, t._2))).toDF("id", "key", "value"))
-    write(spark, "big_way_refs",
+    write("big_way_refs",
       ws.flatMap(w => w.refs.zipWithIndex.map { case (r, p) => (w.id, p, r) })
         .toDF("way_id", "pos", "ref"))
     val rs = rels.collect { case r: R => r }
-    write(spark, "big_rel_tags",
+    write("big_rel_tags",
       rs.flatMap(r => r.tags.map(t => (r.id, t._1, t._2))).toDF("id", "key", "value"))
-    write(spark, "big_rel_members",
+    write("big_rel_members",
       rs.flatMap(r => r.members.zipWithIndex.map { case ((role, ref, mt), p) =>
         (r.id, p, role, ref, mt.toInt) }).toDF("rel_id", "pos", "role", "ref", "mtype"))
   }

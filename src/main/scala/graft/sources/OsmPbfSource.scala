@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -43,19 +42,16 @@ object OsmPbfSource {
   val TypeWay: Byte = 1
   val TypeRelation: Byte = 2
 
-  /** Columns the vectorized (ColumnarBatch) read path emits. Array
-    * columns (`refs`/`tags`/`members`) are row-path-only: the row
-    * reader wraps each decoded long[] zero-copy in a GenericArrayData,
-    * while a batch pays flat-buffer → vector → unsafe-row copies per
-    * element when downstream operators (explode, map access) pull the
-    * arrays back out. A conf-gated CSR refs/tags batch tier existed in
-    * round 7 (default off on a measured ~40 % CPU regression for the
-    * refs-exploding topology walk); round-8 warm-JVM A/Bs (TimeQuery,
-    * both orders, topology/POIs/buildings) showed parity at best, so
-    * the tier was retired — README "Columnar refs/tags tier" has the
-    * numbers. Scalar-only scans (the 7M-row coordinate table, type
-    * counts) keep the batch path, where it eliminates per-element
-    * allocation outright. */
+  /** Columns the vectorized (ColumnarBatch) read path emits; a scan
+    * whose projection is a subset of these reads columnar, any other
+    * reads rows. Both readers emit from the same decoded
+    * [[graft.pbf.ElementBatch]]. Array columns (`refs`/`tags`/`members`)
+    * are row-path-only: the row reader wraps each decoded array
+    * zero-copy in a GenericArrayData, while a batch would pay
+    * flat-buffer → vector → unsafe-row copies per element when
+    * downstream operators (explode, map access) pull the arrays back
+    * out — a columnar refs/tags tier was measured at parity at best and
+    * retired (README "Columnar refs/tags tier"). */
   val scalarCols: Set[String] =
     Set("id", "type", "lat", "lon", "version", "timestamp", "changeset")
 
@@ -323,19 +319,10 @@ class OsmPbfScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     OsmPbfScan.planPartitions(path, wantTypes, idRanges)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // session kill-switch (`spark.graft.pbf.columnar=false`) for the
-    // vectorized path: lets a deployment A/B the two decode paths on
-    // its own workload, and is the gate the scalar path falls back
-    // through if columnar ever loses at a given block shape.
-    def confOn(key: String, default: String): Boolean =
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(key, default).trim.equalsIgnoreCase("true")
-    val eligible = required.fieldNames.forall(OsmPbfSource.scalarCols.contains)
+  override def createReaderFactory(): PartitionReaderFactory =
     new OsmPbfReaderFactory(required, wantTypes,
       idFilter.map(_.toArray).orNull, mustTagKeys,
-      columnar = eligible && confOn("spark.graft.pbf.columnar", "true"))
-  }
+      columnar = required.fieldNames.forall(OsmPbfSource.scalarCols.contains))
 }
 
 object OsmPbfScan {
@@ -458,67 +445,77 @@ class OsmPbfReaderFactory(schema: StructType, wantTypes: Array[Boolean],
   // requirement (Scan.ColumnarSupportMode.PARTITION_DEFINED) holds.
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OsmPbfPartition]
-    new OsmPbfPartitionReader(p, schema.fieldNames, wantTypes,
+  private def batches(partition: InputPartition): OsmPbfBatches =
+    new OsmPbfBatches(partition.asInstanceOf[OsmPbfPartition], schema.fieldNames, wantTypes,
       if (idFilterArr == null) null else idFilterArr.toSet, mustTagKeys)
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new OsmPbfPartitionReader(batches(partition), schema.fieldNames)
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new OsmPbfColumnarReader(batches(partition), schema)
+}
+
+/** A partition's blobs, read and decoded one PrimitiveBlock at a time
+  * into [[graft.pbf.ElementBatch]]es — the one decode both readers
+  * emit from. Only the columns the scan requires are decoded; blocks
+  * the type, id or must-key filters empty out are skipped. */
+final class OsmPbfBatches(p: OsmPbfPartition, fieldNames: Array[String],
+    wantTypes: Array[Boolean], idFilter: Set[Long], mustTagKeys: Array[String])
+    extends AutoCloseable {
+
+  private val needs = DecodeNeeds(
+    tags = fieldNames.contains("tags"),
+    refs = fieldNames.contains("refs"),
+    members = fieldNames.contains("members"),
+    info = fieldNames.exists(f => f == "version" || f == "timestamp" || f == "changeset"),
+    coords = fieldNames.exists(f => f == "lat" || f == "lon"))
+
+  private val blobReader = new BlobReader(OsmPbfFile.sharedConf)
+  private val blobIter = p.blobs.iterator
+
+  /** The next non-empty batch, or null once the partition is done. */
+  def next(): ElementBatch = {
+    while (blobIter.hasNext) {
+      val b = BlockDecoder.decodeBatch(blobReader.read(blobIter.next()), wantTypes, needs,
+        mustTagKeys, idFilter)
+      if (b.n > 0) return b
+    }
+    null
   }
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val p = partition.asInstanceOf[OsmPbfPartition]
-    new OsmPbfColumnarReader(p, schema, wantTypes,
-      if (idFilterArr == null) null else idFilterArr.toSet, mustTagKeys)
-  }
+  override def close(): Unit = blobReader.close()
 }
 
 /** Vectorized read path: one `ColumnarBatch` per PrimitiveBlock, columns
-  * bulk-filled from the decoder's [[graft.pbf.ScalarBatch]] primitive
-  * arrays (scalar columns only — see [[OsmPbfSource.scalarCols]] for
-  * why array columns stay on the row path). Eliminates the two
-  * per-element costs of the row path — `Decoded` allocation and
-  * `InternalRow` construction — on the scalar scans that dominate OSM
-  * work (the 7M-row node coordinate table, type counts), and
+  * bulk-copied from the [[graft.pbf.ElementBatch]] scalar arrays
+  * (scalar columns only — see [[OsmPbfSource.scalarCols]] for why
+  * array columns stay on the row path). Saves the row path's
+  * per-element `InternalRow` construction on the scalar scans that
+  * dominate OSM work (the 7M-row node coordinate table, type counts);
   * downstream operators read the vectors through Spark's codegen'd
   * ColumnarToRow. The reference's equivalent is its vectorized
   * dense-node parser (reference dense.py:83-180). */
-class OsmPbfColumnarReader(p: OsmPbfPartition, schema: StructType,
-    wantTypes: Array[Boolean], idFilter: Set[Long],
-    mustTagKeys: Array[String])
+class OsmPbfColumnarReader(batches: OsmPbfBatches, schema: StructType)
     extends PartitionReader[ColumnarBatch] {
 
-  // needs.tags covers the must-key CHECK only (string-id test, no
-  // materialization) — the tags column itself is row-path-only
-  private val needs = DecodeNeeds(
-    tags = mustTagKeys != null,
-    refs = false, members = false,
-    info = schema.fieldNames.exists(f => f == "version" || f == "timestamp" || f == "changeset"),
-    coords = schema.fieldNames.exists(f => f == "lat" || f == "lon"))
-
-  private val blobReader = new graft.pbf.BlobReader(graft.pbf.OsmPbfFile.sharedConf)
-  private val blobIter = p.blobs.iterator
   private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
-    while (blobIter.hasNext) {
-      val block = blobReader.read(blobIter.next())
-      val sb = BlockDecoder.decodeScalars(block, wantTypes, needs, mustTagKeys, idFilter)
-      if (sb.n > 0) {
-        batch = toBatch(sb)
-        return true
-      }
-    }
-    false
+    val eb = batches.next()
+    if (eb != null) batch = toBatch(eb)
+    batch != null
   }
 
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = {
     if (batch != null) { batch.close(); batch = null }
-    blobReader.close()
+    batches.close()
   }
 
-  private def toBatch(sb: ScalarBatch): ColumnarBatch = {
+  private def toBatch(sb: ElementBatch): ColumnarBatch = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     val n = sb.n
     var nodesOnly = true
@@ -577,32 +574,18 @@ class OsmPbfColumnarReader(p: OsmPbfPartition, schema: StructType,
   }
 }
 
-class OsmPbfPartitionReader(p: OsmPbfPartition, fieldNames: Array[String],
-    wantTypes: Array[Boolean], idFilter: Set[Long],
-    mustTagKeys: Array[String] = null)
+/** Row read path: one `InternalRow` per [[graft.pbf.ElementBatch]]
+  * slot. Decoded arrays wrap zero-copy into GenericArrayData. */
+class OsmPbfPartitionReader(batches: OsmPbfBatches, fieldNames: Array[String])
     extends PartitionReader[InternalRow] {
 
-  private val needs = DecodeNeeds(
-    // the must-tag check reads key ids, so tags must decode even when
-    // the tags column itself is pruned (e.g. .select("id") or count())
-    tags = fieldNames.contains("tags") || mustTagKeys != null,
-    refs = fieldNames.contains("refs"),
-    members = fieldNames.contains("members"),
-    info = fieldNames.exists(f => f == "version" || f == "timestamp" || f == "changeset"),
-    coords = fieldNames.exists(f => f == "lat" || f == "lon"))
-
-  private val blobReader = new graft.pbf.BlobReader(graft.pbf.OsmPbfFile.sharedConf)
-  private val iter: Iterator[Decoded] =
-    p.blobs.iterator.flatMap { b =>
-      val block = blobReader.read(b)
-      val base = BlockDecoder.decode(block, wantTypes, needs, mustTagKeys)
-      if (idFilter == null) base else base.filter(d => idFilter.contains(d.id))
-    }
-
-  private var current: Decoded = _
+  private var b: ElementBatch = _
+  private var i = 0
 
   override def next(): Boolean = {
-    if (iter.hasNext) { current = iter.next(); true } else false
+    i += 1
+    if (b == null || i >= b.n) { b = batches.next(); i = 0 }
+    b != null
   }
 
   // column → small int code once per reader, not a string match per row
@@ -620,34 +603,35 @@ class OsmPbfPartitionReader(p: OsmPbfPartition, fieldNames: Array[String],
     case other => throw new IllegalArgumentException(s"unknown column $other")
   }
 
+  private def utf8(ss: Array[String]): GenericArrayData =
+    new GenericArrayData(if (ss == null) Array.empty[Any] else ss.map(s => UTF8String.fromString(s): Any))
+
   override def get(): InternalRow = {
-    val d = current
+    val node = b.types(i) == OsmPbfSource.TypeNode
+    val info = b.hasInfo(i)
     val row = new Array[Any](colCodes.length)
-    var i = 0
-    while (i < colCodes.length) {
-      row(i) = colCodes(i) match {
-        case 0 => d.id
-        case 1 => d.etype
-        case 2 => if (d.etype == 0) d.lat else null
-        case 3 => if (d.etype == 0) d.lon else null
-        case 4 =>
-          new ArrayBasedMapData(
-            new GenericArrayData(d.tagKeys.map(k => UTF8String.fromString(k): Any)),
-            new GenericArrayData(d.tagVals.map(v => UTF8String.fromString(v): Any)))
-        case 5 => new GenericArrayData(d.refs)
+    var c = 0
+    while (c < colCodes.length) {
+      row(c) = colCodes(c) match {
+        case 0 => b.ids(i)
+        case 1 => b.types(i)
+        case 2 => if (node) b.lats(i) else null
+        case 3 => if (node) b.lons(i) else null
+        case 4 => new ArrayBasedMapData(utf8(b.tagKeys(i)), utf8(b.tagVals(i)))
+        case 5 => new GenericArrayData(if (b.refs(i) == null) Array.empty[Long] else b.refs(i))
         case 6 =>
-          new GenericArrayData(d.memberRefs.indices.map { j =>
-            InternalRow(UTF8String.fromString(d.memberRoles(j)),
-              d.memberRefs(j), d.memberTypes(j))
+          val refs = b.memberRefs(i)
+          new GenericArrayData(if (refs == null) Array.empty[Any] else refs.indices.map { j =>
+            InternalRow(UTF8String.fromString(b.memberRoles(i)(j)), refs(j), b.memberTypes(i)(j))
           }.toArray[Any])
-        case 7 => if (d.hasInfo) d.version else null
-        case 8 => if (d.hasInfo) d.timestampMs * 1000L else null // micros
-        case 9 => if (d.hasInfo) d.changeset else null
+        case 7 => if (info) b.versions(i) else null
+        case 8 => if (info) b.tsMicros(i) else null
+        case 9 => if (info) b.changesets(i) else null
       }
-      i += 1
+      c += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(row)
   }
 
-  override def close(): Unit = blobReader.close()
+  override def close(): Unit = batches.close()
 }

@@ -226,7 +226,7 @@ object EventsStream {
       .as[(Long, Long, Long, String)]
       .groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[(Long, Long, Long, String)],
+        (_: Long, it: Iterator[(Long, Long, Long, String)],
             state: GroupState[AsofState]) =>
           // micro-batch arrival order is nondeterministic: sort by the
           // batch twin's (ts, event_id) order — a view at the same ts

@@ -55,7 +55,6 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("z-ordered ranges are compact in BOTH dimensions (the layout point)") {
-    import spark.implicits._
     // a 64x64 grid in z-order, cut into 64 equal files: each file's
     // min/max box must be a 8x8 cell in BOTH dims — a lexicographic
     // sort gives 64x1 stripes (max spread in y for a given x range)

@@ -97,7 +97,6 @@ class SessionizeStreamSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("flatMapGroupsWithState sessionization matches the batch window form") {
-    import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val batch = spark.read.parquet(s"$dir/events.parquet")
     val expected = EventsStream.sessionize(batch)

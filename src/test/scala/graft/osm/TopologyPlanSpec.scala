@@ -25,8 +25,8 @@ class TopologyPlanSpec extends AnyFunSuite {
   }
 
   test("refs are decoded on exactly one scan branch (walk), not the attribute join") {
-    // the DEFAULT shape: two pruned scans — measured at the 7M probe
-    // to beat a shared near-corpus checkpoint (r22 addendum)
+    // two pruned scans — measured at the 7M probe to beat a shared
+    // near-corpus checkpoint (OPTIMIZATION_r22.md)
     val df = OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world)
     val scanCols = df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan.readSchema().fieldNames.toSet
@@ -37,31 +37,6 @@ class TopologyPlanSpec extends AnyFunSuite {
     // the attribute branch carries tags for the projection but no refs
     assert(scanCols.exists(c => c.contains("tags") && !c.contains("refs")),
       s"expected a refs-free attribute scan; got:\n  ${scanCols.mkString("\n  ")}")
-  }
-
-  test("topoShare=true shares ONE checkpoint between walk and attrs; the only pbf scan is node coords") {
-    spark.conf.set("spark.graft.osm.topoShare", "true")
-    try {
-      val df = OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world)
-      val plan = df.queryExecution.optimizedPlan
-      val scanCols = plan.collect {
-        case r: DataSourceV2ScanRelation => r.scan.readSchema().fieldNames.toSet
-      }
-      assert(scanCols.size === 1 && !scanCols.head.contains("refs") &&
-        !scanCols.head.contains("tags"),
-        s"expected the node-coords scan as the ONLY pbf scan; got:\n  ${scanCols.mkString("\n  ")}")
-      // the walk and attrs branches read the SAME checkpointed RDD —
-      // two LogicalRDD leaves, one rdd id = one decode of the way source
-      val rddLeaves = plan.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      assert(rddLeaves.size === 2 && rddLeaves.distinct.size === 1,
-        s"expected walk+attrs to share ONE checkpoint RDD; got rdd ids $rddLeaves")
-      // the A/B arm must stay result-identical to the default shape
-      val rows = df.select("osmid", "source", "target")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(rows === Set((10L, 1L, 2L), (10L, 2L, 3L), (11L, 2L, 4L)))
-    } finally spark.conf.unset("spark.graft.osm.topoShare")
   }
 
   test("the coordinate join input aggregates exploded pairs per node (no join at exploded volume)") {

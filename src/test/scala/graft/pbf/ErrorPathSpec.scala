@@ -113,4 +113,68 @@ class ErrorPathSpec extends AnyFunSuite {
     val e = intercept[java.io.IOException] { OsmPbfFile.countTypes(block) }
     assert(e.getMessage.contains("wire type") && e.getMessage.contains("DenseNodes.id"))
   }
+
+  // Framing lengths are bounded by the PBF spec limits (BlobHeader
+  // <= 64 KiB, Blob datasize and raw_size <= 32 MiB, no frame past the
+  // end of the file): a corrupt length field raises an IOException
+  // naming the file and the frame's byte offset before anything is
+  // allocated, not an OutOfMemoryError, a NegativeArraySizeException, a
+  // nameless EOFException or a silently truncated index.
+  private def be32(n: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(n).array()
+
+  private def blobHeader(blobType: String, dataSize: Long): Array[Byte] = {
+    val h = new PbfWriter
+    h.writeString(1, blobType)
+    h.writeVarintField(3, dataSize)
+    val hb = h.toBytes
+    be32(hb.length) ++ hb
+  }
+
+  /** A valid header-only file followed by `tail`; returns the path and
+    * the byte offset at which `tail` starts. */
+  private def headerThen(tail: Array[Byte]): (String, Long) = {
+    val f = java.io.File.createTempFile("framing", ".osm.pbf")
+    f.deleteOnExit()
+    OsmPbfWriter.write(f.getAbsolutePath, Nil)
+    val off = f.length()
+    val out = new java.io.FileOutputStream(f, true)
+    try out.write(tail) finally out.close()
+    (f.getAbsolutePath, off)
+  }
+
+  private def assertFrameError(path: String, off: Long)(f: => Any): Unit = {
+    val e = intercept[java.io.IOException](f)
+    assert(e.getMessage.contains(path) && e.getMessage.contains(s"byte offset $off"),
+      e.getMessage)
+  }
+
+  test("a BlobHeader length outside [0, 64 KiB] or past the end of the file is rejected") {
+    val pad = new Array[Byte](16)
+    Seq(be32(1 << 20) ++ pad, be32(-1) ++ pad, be32(1000) ++ pad, Array[Byte](0, 0)).foreach {
+      tail =>
+        val (path, off) = headerThen(tail)
+        assertFrameError(path, off)(OsmPbfFile.index(path))
+    }
+  }
+
+  test("a Blob datasize outside [0, 32 MiB] is rejected") {
+    val (path, off) = headerThen(blobHeader("OSMData", 64L << 20) ++ new Array[Byte](16))
+    assertFrameError(path, off)(OsmPbfFile.index(path))
+  }
+
+  test("a Blob running past the end of the file is rejected at index time") {
+    val (path, off) = headerThen(blobHeader("OSMData", 100) ++ new Array[Byte](10))
+    assertFrameError(path, off)(OsmPbfFile.index(path))
+  }
+
+  test("a raw_size outside [0, 32 MiB] is rejected before inflating") {
+    val blob = new PbfWriter
+    blob.writeVarintField(2, 48L << 20)
+    blob.writeBytes(3, Zlib.deflate(new Array[Byte](64)))
+    val bytes = blob.toBytes
+    val (path, _) = headerThen(blobHeader("OSMData", bytes.length) ++ bytes)
+    val info = OsmPbfFile.index(path).head
+    assertFrameError(path, info.dataOffset)(
+      OsmPbfFile.readBlob(info, OsmPbfFile.sharedConf))
+  }
 }

@@ -83,4 +83,38 @@ class MalformedKvSpec extends AnyFunSuite {
       mustTagKeys = null).toArray
     assert(rows.length === 1 && rows.head.tagKeys.toSeq === Seq("k"))
   }
+
+  test("a tag string id outside the string table is rejected on both node encodings") {
+    val dn = new PbfWriter
+    dn.writePackedLongs(1, Seq(7L), zigzag = true, delta = true)
+    dn.writePackedLongs(10, Seq(1L, 9L, 0L), zigzag = false, delta = false) // val id 9
+    val dense = new PbfWriter
+    dense.writeMessage(2, dn)
+    val n = new PbfWriter
+    n.writeTag(1, 0); n.writeZigzag(7L)
+    n.writePackedLongs(2, Seq(9L), zigzag = false, delta = false) // key id 9
+    n.writePackedLongs(3, Seq(2L), zigzag = false, delta = false)
+    val plain = new PbfWriter
+    plain.writeMessage(1, n)
+    Seq(dense, plain).foreach { g =>
+      val e = intercept[java.io.IOException] {
+        BlockDecoder.decode(block(g), allTypes, DecodeNeeds.all).toArray
+      }
+      assert(e.getMessage.contains("malformed PrimitiveBlock"))
+    }
+  }
+
+  test("relation member arrays of different lengths are rejected") {
+    val r = new PbfWriter
+    r.writeVarintField(1, 5L)
+    r.writePackedLongs(8, Seq(1L), zigzag = false, delta = false) // one role
+    r.writePackedLongs(9, Seq(10L, 11L), zigzag = true, delta = true) // two memids
+    r.writePackedLongs(10, Seq(1L, 1L), zigzag = false, delta = false)
+    val g = new PbfWriter
+    g.writeMessage(4, r)
+    val e = intercept[java.io.IOException] {
+      BlockDecoder.decode(block(g), allTypes, DecodeNeeds.all).toArray
+    }
+    assert(e.getMessage.contains("malformed PrimitiveBlock"))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.pbf
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 class VarintSpec extends AnyFunSuite {
@@ -55,8 +57,23 @@ class VarintSpec extends AnyFunSuite {
   }
 }
 
+object OsmPbfRoundTripSpec {
+  /** What a decoded element must show for the fields it was asked to
+    * decode: `coords` only for nodes under `needs.coords`, `info` as
+    * (version, timestamp micros, changeset) when present. */
+  final case class Row(id: Long, etype: Byte, coords: Option[(Double, Double)],
+      tags: Seq[(String, String)], refs: Seq[Long], members: Seq[(String, Long, Byte)],
+      info: Option[(Int, Long, Long)])
+
+  /** One decoder property trial: the blocks written and the settings. */
+  final case class Case(blocks: Seq[Seq[OsmPbfWriter.Elem]], dense: Boolean, gran: Long,
+      off: Long, want: Seq[Boolean], needs: DecodeNeeds, must: Option[Seq[String]],
+      ids: Option[Set[Long]])
+}
+
 class OsmPbfRoundTripSpec extends AnyFunSuite {
   import OsmPbfWriter._
+  import OsmPbfRoundTripSpec.{Case, Row}
 
   private def roundTrip(blocks: Seq[Seq[Elem]], dense: Boolean = true): Seq[Decoded] = {
     val f = java.io.File.createTempFile("rtpbf", ".osm.pbf")
@@ -213,5 +230,123 @@ class OsmPbfRoundTripSpec extends AnyFunSuite {
           s"trial $trial dense=$dense blocks=${blocks.map(_.size)}")
       }
     }
+  }
+
+  // ---- decoder property: both views equal the writer's input model ----
+
+  private val tagKeys = Seq("amenity", "highway", "building", "name")
+  private val genId = Gen.choose(-1000L, 100000000L)
+  private val genTags: Gen[Seq[(String, String)]] = for {
+    ks <- Gen.someOf(tagKeys)
+    vs <- Gen.listOfN(ks.size, Gen.oneOf("yes", "residential", "cafe", ""))
+  } yield ks.toSeq.zip(vs)
+  private val genInfo: Gen[Option[Info]] = Gen.option(for {
+    v <- Gen.choose(1, 50)
+    ts <- Gen.choose(0L, 2000000000L)
+    cs <- Gen.choose(0L, 1L << 40)
+  } yield Info(v, ts, cs))
+  private val genElem: Gen[Elem] = Gen.frequency(
+    3 -> (for {
+      id <- genId; lat <- Gen.choose(-90.0, 90.0); lon <- Gen.choose(-180.0, 180.0)
+      t <- genTags; i <- genInfo
+    } yield N(id, lat, lon, t, i)),
+    2 -> (for {
+      id <- genId; n <- Gen.choose(0, 6); refs <- Gen.listOfN(n, genId)
+      t <- genTags; i <- genInfo
+    } yield W(id, refs, t, i)),
+    1 -> (for {
+      id <- genId; n <- Gen.choose(0, 4)
+      ms <- Gen.listOfN(n, for {
+        role <- Gen.oneOf("outer", "inner", ""); ref <- genId; mt <- Gen.choose(0, 2)
+      } yield (role, ref, mt.toByte))
+      t <- genTags; i <- genInfo
+    } yield R(id, ms, t, i)))
+  private val genCase: Gen[Case] = for {
+    blocks <- Gen.choose(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0, 12).flatMap(m => Gen.listOfN(m, genElem))))
+    dense <- Gen.oneOf(true, false)
+    gran <- Gen.oneOf(100L, 1000L)
+    off <- Gen.oneOf(0L, 123456L)
+    want <- Gen.listOfN(3, Gen.frequency(3 -> true, 1 -> false))
+    nb <- Gen.listOfN(5, Gen.oneOf(true, false))
+    must <- Gen.option(Gen.nonEmptyListOf(Gen.oneOf(tagKeys :+ "nope")).map(_.distinct))
+    ids <- Gen.option(Gen.someOf(blocks.flatten.map(_.id)).map(_.toSet + 42L))
+  } yield Case(blocks, dense, gran, off, want,
+    DecodeNeeds(tags = nb(0), refs = nb(1), members = nb(2), info = nb(3), coords = nb(4)),
+    must, ids)
+
+  private def etypeOf(e: Elem): Byte = e match {
+    case _: N => 0
+    case _: W => 1
+    case _: R => 2
+  }
+
+  /** The input model filtered and projected by the decode settings; the
+    * writer emits a block's nodes, then ways, then relations, and a
+    * DenseNodes group carries info for every node once any node has it
+    * (0 for the missing values). */
+  private def model(es: Seq[Elem], c: Case, scalarOnly: Boolean, idFilter: Boolean): Seq[Row] = {
+    val nodes = es.collect { case n: N => n }
+    val denseInfo = c.dense && nodes.exists(_.info.isDefined)
+    def q(x: Double): Double = 1e-9 * (c.off + c.gran * ((x / 1e-9 - c.off) / c.gran).round)
+    val n = c.needs
+    (nodes ++ es.collect { case w: W => w } ++ es.collect { case r: R => r })
+      .filter(e => c.want(etypeOf(e)) &&
+        c.must.forall(ks => e.tags.exists(t => ks.contains(t._1))) &&
+        (!idFilter || c.ids.forall(_.contains(e.id))))
+      .map { e =>
+        val info =
+          if (!n.info) None
+          else if (c.dense && etypeOf(e) == 0) {
+            if (denseInfo) Some(e.info.fold((0, 0L, 0L))(i =>
+              (i.version, i.timestampSec * 1000000L, i.changeset)))
+            else None
+          } else e.info.map(i => (i.version, i.timestampSec * 1000000L, i.changeset))
+        Row(e.id, etypeOf(e),
+          e match { case nd: N if n.coords => Some((q(nd.lat), q(nd.lon))); case _ => None },
+          if (n.tags && !scalarOnly) e.tags else Nil,
+          e match { case w: W if n.refs && !scalarOnly => w.refs; case _ => Nil },
+          e match { case r: R if n.members && !scalarOnly => r.members; case _ => Nil },
+          info)
+      }
+  }
+
+  test("property: decode and decodeScalars equal the writer's input under random settings") {
+    val prop = Prop.forAll(genCase) { c =>
+      val f = java.io.File.createTempFile("decprop", ".osm.pbf")
+      try {
+        write(f.getAbsolutePath, c.blocks, denseNodes = c.dense, granularity = c.gran,
+          latOffset = c.off, lonOffset = c.off)
+        val want = c.want.toArray
+        val must = c.must.map(_.toArray).orNull
+        val blobs = OsmPbfFile.index(f.getAbsolutePath)
+        // every block is decoded here, inside the try: Prop's && is lazy
+        val perBlock = blobs.zip(c.blocks).map { case (b, es) =>
+          val block = OsmPbfFile.readBlob(b, OsmPbfFile.sharedConf)
+          val rows = BlockDecoder.decode(block, want, c.needs, must).map { d =>
+            Row(d.id, d.etype, if (c.needs.coords && d.etype == 0) Some((d.lat, d.lon)) else None,
+              d.tagKeys.toSeq.zip(d.tagVals), d.refs.toSeq,
+              d.memberRoles.indices.map(j => (d.memberRoles(j), d.memberRefs(j), d.memberTypes(j))),
+              if (d.hasInfo) Some((d.version, d.timestampMs * 1000L, d.changeset)) else None)
+          }.toSeq
+          val sb = BlockDecoder.decodeScalars(block, want, c.needs, must, c.ids.orNull)
+          val scalars = (0 until sb.n).map { i =>
+            Row(sb.ids(i), sb.types(i),
+              if (c.needs.coords && sb.types(i) == 0) Some((sb.lats(i), sb.lons(i))) else None,
+              Nil, Nil, Nil,
+              if (sb.hasInfo(i)) Some((sb.versions(i), sb.tsMicros(i), sb.changesets(i))) else None)
+          }
+          val wantRows = model(es, c, scalarOnly = false, idFilter = false)
+          val wantScalars = model(es, c, scalarOnly = true, idFilter = true)
+          ((rows == wantRows) :| s"decode: $rows != $wantRows") &&
+            ((scalars == wantScalars) :| s"decodeScalars: $scalars != $wantScalars") &&
+            ((sb.tagKeys == null && sb.refs == null && sb.memberRefs == null) :|
+              "decodeScalars allocated an array column")
+        }
+        ((blobs.size == c.blocks.size) :| "one blob per block") && Prop.all(perBlock: _*)
+      } finally f.delete()
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.status.toString)
   }
 }

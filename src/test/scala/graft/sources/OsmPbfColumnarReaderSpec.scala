@@ -8,11 +8,13 @@ import graft.pbf.OsmPbfWriter._
   * previously pinned only indirectly through osm_* oracle rows.
   *
   * Ground truth for every comparison is the ROW reader over the same
-  * file: selecting the full schema (tags included) forces the row path,
-  * and the scalar columns are projected from the collected rows in the
-  * test, so the two decode paths are compared end-to-end for mixed
+  * file: selecting a projection with `tags` forces the row path, and
+  * the scalar columns are projected from the collected rows in the
+  * test, so the two emitters are compared end-to-end for mixed
   * node/way/relation blocks, plain (non-dense) nodes, every scalar
-  * schema permutation shape, and the id-filter / must-tag decode gates.
+  * schema permutation shape, and the id-filter / must-tag decode
+  * gates. The decoder itself is checked against the writer's input in
+  * `OsmPbfRoundTripSpec`.
   */
 class OsmPbfColumnarReaderSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -40,17 +42,9 @@ class OsmPbfColumnarReaderSpec extends AnyFunSuite {
   private val scalarCols =
     Seq("id", "type", "lat", "lon", "version", "timestamp", "changeset")
 
-  /** Run `f` with the vectorized path disabled (the session
-    * kill-switch), so reads inside take the ROW path regardless of
-    * schema. */
-  private def rowPath[A](f: => A): A = {
-    spark.conf.set("spark.graft.pbf.columnar", "false")
-    try f finally spark.conf.unset("spark.graft.pbf.columnar")
-  }
-
-  /** Row-path ground truth: full-schema read under the kill-switch,
-    * scalar columns extracted per row. */
-  private def rowTruth(path: String, opts: Map[String, String] = Map.empty) = rowPath {
+  /** Row-path ground truth: `tags` in the projection forces the row
+    * reader; scalar columns extracted per row. */
+  private def rowTruth(path: String, opts: Map[String, String] = Map.empty) = {
     val df = opts.foldLeft(spark.read.format("osmpbf"))((r, kv) => r.option(kv._1, kv._2))
       .load(path)
     val full = df.select(col("tags") +: scalarCols.map(col): _*)
@@ -149,8 +143,8 @@ class OsmPbfColumnarReaderSpec extends AnyFunSuite {
     }
 
     test(s"array-bearing projections take the row path ($label)") {
-      // refs/tags/members are row-path-only (the r7 conf-gated batch
-      // tier was retired in r8 on warm-JVM parity) — the row reader
+      // refs/tags/members are row-path-only (a columnar refs/tags
+      // tier was retired on warm-JVM parity) — the row reader
       // wraps decoded arrays zero-copy; a silent change that routes an
       // array column through the batch must fail here
       val path = fixture(dense)

@@ -12,7 +12,6 @@ class DocsStreamSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("stream decontamination == batch pipe_decontaminate") {
-    import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val benchFps = DocsStream.benchmarkFingerprints(
       docs.filter(col("doc_id") % 97 === 0))

@@ -120,7 +120,6 @@ class MicroBatchSplitSpec extends AnyFunSuite {
   }
 
   test("a straggler older than committed state is dropped, everything else invariant") {
-    import scala.jdk.CollectionConverters._
     val (rows, schema) = ordered
     val batchDf = spark.read.parquet(s"$fixtureDir/events.parquet")
     val sessExpected = sessRows(EventsStream.sessionize(batchDf))
