@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * / 100k-way BigWorld AND at a 10× world (20M nodes / 1M ways),
   * recording wall, per-phase shuffle read/write bytes, and WHICH join
   * strategy planned — the 2M world's exploded refs (~0.6M rows) sit
-  * under the `spark.graft.geom.refsBroadcastRows` threshold (4M) and
+  * under the `GeometryBuilder.RefsBroadcastRows` threshold (4M) and
   * must take the zero-exchange BROADCAST tier, while the 10× world
   * (~6M exploded rows) must cross it and hold the scale-safe
   * SHUFFLE_HASH plan (AQE is left on; a silent conversion back to
@@ -142,7 +142,7 @@ object CoordJoinProbe {
     // deliberate discontinuity (review r20); cross-round comparisons
     // must not read the r19→r20 wall delta as a regression
     val json =
-      s"""{"probe":"coordjoin_10x","round":$round,"measured_action":"materialize_rows","gen_s":${f"$genS%.1f"},"load_start":$loadStart,"tainted":$tainted,"threshold_rows":${spark.conf.get(graft.osm.GeometryBuilder.RefsBroadcastRowsKey, "4000000")},"phases":[${pj(p1)},${pj(p10)}],"wall_ratio":${f"${p10.wall / p1.wall}%.2f"},"violations":${viol.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      s"""{"probe":"coordjoin_10x","round":$round,"measured_action":"materialize_rows","gen_s":${f"$genS%.1f"},"load_start":$loadStart,"tainted":$tainted,"threshold_rows":${graft.osm.GeometryBuilder.RefsBroadcastRows},"phases":[${pj(p1)},${pj(p10)}],"wall_ratio":${f"${p10.wall / p1.wall}%.2f"},"violations":${viol.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     println(json)
     ProbeRig.writeArtifact(s"coordjoin_probe_r$round.json", json, "coordjoin")
     spark.stop()

@@ -96,7 +96,7 @@ private[graft] object ProbeRig {
 
   /** Apply `SPARK_GRAFT_CONF="k=v;k=v"` to the session — the shared
     * dev-only conf hook of the standalone mains (TimeQuery,
-    * PlanMetrics, ScaleProbe, JitProbe, Explain): one parser, so the
+    * PlanMetrics, ScaleProbe, Explain): one parser, so the
     * split/trim rules cannot drift across copies (review r22). */
   def applyEnvConf(spark: org.apache.spark.sql.SparkSession): Unit =
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))

@@ -117,8 +117,7 @@ object ScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF="k=v;k=v" applies session confs before the
-    // phases (same contract as TimeQuery) — e.g. A/B the coordinate
-    // join strategy at 7M via spark.graft.geom.refsBroadcastRows
+    // phases (same contract as TimeQuery)
     ProbeRig.applyEnvConf(spark)
 
     // _v3: building-tagged inner rings + forest multipolygons — same

@@ -39,11 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object DistributedRank {
 
-  /** Opt-in legacy external-Row pass — kept ONLY as the A/B baseline
-    * for the specialization probe and the both-paths-equal spec; no
-    * production call site sets it. */
-  private[graft] val RowPassConf = "spark.graft.distrank.rowPass"
-
   /** Deep-copy a catalyst value read out of a reused row buffer so it
     * survives the iterator advancing (UnsafeRow-backed UTF8String /
     * array / map / struct views alias the buffer; primitives and
@@ -79,7 +74,7 @@ object DistributedRank {
   private val ZeroD = java.lang.Double.valueOf(0.0)
   private val ZeroF = java.lang.Float.valueOf(0.0f)
   /** Shared canonical NaN stand-in: inside Scala collections (the
-    * nested-key Vector trees, the legacy pass's Seq) equality is
+    * nested-key Vector trees) equality is
     * COOPERATIVE NUMERIC (NaN != NaN even boxed — review r18 pass 3,
     * verified on 2.13.17), so a NaN leaf must become this singleton
     * to group the way NormalizeFloatingNumbers does. Top-level boxed
@@ -151,38 +146,6 @@ object DistributedRank {
     }
   }
 
-  /** The pre-r18 per-row pass (external Row + generic RowEncoder),
-    * behind [[RowPassConf]] — see the call site's scaladoc. Top-level
-    * float keys get the same grouping normalization as the default
-    * path (review r18 pass 2: Scala's numeric `==` split NaN keys
-    * per-row — NaN != NaN — so every NaN row reset the run counter;
-    * ±0.0 needs NOTHING here: numeric equality already treats them
-    * equal, unlike the default path's `equals` probe) and value
-    * equality for binary keys. Nested keys are supported only by the
-    * DEFAULT path — this one is the measurement baseline. */
-  private def legacyNormKey(v: Any): Any = v match {
-    case d: java.lang.Double if d.isNaN => NaNMarker
-    case f: java.lang.Float if f.isNaN => NaNMarker
-    case b: Array[Byte] => wrapBinary(b)
-    case x => x
-  }
-  private def legacyRowPass(sorted: org.apache.spark.sql.DataFrame,
-      keyIdx: Array[Int], valIdx: Int,
-      outSchema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cur: Seq[Any] = null
-      var acc = 0L
-      it.map { row =>
-        val key = keyIdx.toSeq.map(i => legacyNormKey(row.get(i)))
-        if (cur == null || key != cur) { cur = key; acc = 0L }
-        acc += (if (valIdx < 0) 1L
-          else if (row.isNullAt(valIdx)) 0L
-          else row.getLong(valIdx))
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ pid :+ acc)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
   /** Adds `grank` (1-based rank of the row within its key under the
     * complete ascending `order`) and `gcount` (total rows of the key)
     * to `df`. `order` must be a COMPLETE order (no ties) within each
@@ -252,77 +215,65 @@ object DistributedRank {
     // Checkpoints.truncate preserves laziness in both its modes, so
     // the single-exchange invariant holds under the reliable path too.
     //
-    // The per-row pass is specialized to the InternalRow level
-    // (VERDICT r17 task 2): the legacy external-Row form —
-    // `Row.fromSeq(row.toSeq :+ pid :+ acc)` under a generic
-    // RowEncoder — allocated a boxed Seq plus two array copies per
-    // row and round-tripped every field through the encoder, the
-    // engine's one interpreter-hostile hot loop (the amplifier under
-    // the r17 driver-host JIT churn on q22/ev_rfm/w4-shaped rows).
-    // Here each row pays one codegen'd UnsafeProjection write + one
-    // buffer copy; key-change detection compares raw catalyst values
-    // against a copied previous-key array with zero per-row Seq
-    // allocation. The legacy pass stays available under
-    // `spark.graft.distrank.rowPass=true` PURELY as the A/B baseline
-    // (the committed probe artifact measures both in one JVM);
-    // DistributedRankSpec pins both paths equal.
-    val agged = Checkpoints.truncate(
-      if (spark.conf.get(RowPassConf, "false").toBoolean)
-        legacyRowPass(sorted, keyIdx, valIdx, outSchema)
-      else {
-        val keyTypes = keyIdx.map(i => sorted.schema(i).dataType)
-        val keyConvs = keyTypes.map(keyConverter)
-        val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
-          import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val proj = UnsafeProjection.create(outSchema)
-          val extra = new GenericInternalRow(2)
-          extra.update(0, pid)
-          val joined = new JoinedRow
-          val nKeys = keyIdx.length
-          val prevKey = new Array[Any](nKeys)
-          var started = false
-          var acc = 0L
-          it.map { row =>
-            // same-key probe against the COPIED previous key values
-            // (the sort iterator reuses its row buffer, so live
-            // UTF8String/array views from the prior row are invalid)
-            var same = started
-            var i = 0
-            while (same && i < nKeys) {
-              val cur =
-                if (row.isNullAt(keyIdx(i))) null
-                else keyConvs(i)._1(row.get(keyIdx(i), keyTypes(i)))
-              val p = prevKey(i)
-              // Java equals, not Scala's numeric `==`: a boxed NaN key
-              // must equal itself (normTop leaves NaN as is)
-              same = if (p == null) cur == null else p.asInstanceOf[AnyRef].equals(cur)
-              i += 1
-            }
-            if (!same) {
-              var j = 0
-              while (j < nKeys) {
-                prevKey(j) =
-                  if (row.isNullAt(keyIdx(j))) null
-                  else keyConvs(j)._2(row.get(keyIdx(j), keyTypes(j)))
-                j += 1
-              }
-              acc = 0L
-              started = true
-            }
-            acc += (if (valIdx < 0) 1L
-              else if (row.isNullAt(valIdx)) 0L
-              else row.getLong(valIdx))
-            extra.update(1, acc)
-            // copy: the projection reuses its buffer, and the
-            // checkpoint persists these rows
-            proj(joined(row, extra))
-              .copy(): org.apache.spark.sql.catalyst.InternalRow
-          }
+    // The per-row pass works at the InternalRow level: each row pays
+    // one codegen'd UnsafeProjection write + one buffer copy, and
+    // key-change detection compares raw catalyst values against a
+    // copied previous-key array with no per-row allocation. An
+    // external-Row pass under a generic RowEncoder allocated a boxed
+    // Seq plus two array copies per row and was this engine's one
+    // interpreter-hostile hot loop (A/B in bench/distrank_ab_r18.json).
+    val keyTypes = keyIdx.map(i => sorted.schema(i).dataType)
+    val keyConvs = keyTypes.map(keyConverter)
+    val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
+      import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      val proj = UnsafeProjection.create(outSchema)
+      val extra = new GenericInternalRow(2)
+      extra.update(0, pid)
+      val joined = new JoinedRow
+      val nKeys = keyIdx.length
+      val prevKey = new Array[Any](nKeys)
+      var started = false
+      var acc = 0L
+      it.map { row =>
+        // same-key probe against the COPIED previous key values
+        // (the sort iterator reuses its row buffer, so live
+        // UTF8String/array views from the prior row are invalid)
+        var same = started
+        var i = 0
+        while (same && i < nKeys) {
+          val cur =
+            if (row.isNullAt(keyIdx(i))) null
+            else keyConvs(i)._1(row.get(keyIdx(i), keyTypes(i)))
+          val p = prevKey(i)
+          // Java equals, not Scala's numeric `==`: a boxed NaN key
+          // must equal itself (normTop leaves NaN as is)
+          same = if (p == null) cur == null else p.asInstanceOf[AnyRef].equals(cur)
+          i += 1
         }
-        org.apache.spark.sql.GraftDataFrameBridge
-          .internalCreateDataFrame(spark, rdd, outSchema)
-      })
+        if (!same) {
+          var j = 0
+          while (j < nKeys) {
+            prevKey(j) =
+              if (row.isNullAt(keyIdx(j))) null
+              else keyConvs(j)._2(row.get(keyIdx(j), keyTypes(j)))
+            j += 1
+          }
+          acc = 0L
+          started = true
+        }
+        acc += (if (valIdx < 0) 1L
+          else if (row.isNullAt(valIdx)) 0L
+          else row.getLong(valIdx))
+        extra.update(1, acc)
+        // copy: the projection reuses its buffer, and the
+        // checkpoint persists these rows
+        proj(joined(row, extra))
+          .copy(): org.apache.spark.sql.catalyst.InternalRow
+      }
+    }
+    val agged = Checkpoints.truncate(org.apache.spark.sql.GraftDataFrameBridge
+      .internalCreateDataFrame(spark, rdd, outSchema))
     // tiny per-(partition, key) totals from the SAME materialized pass
     val perPart = agged.groupBy((col("__pid") +: keys.map(col)): _*)
       .agg((if (valIdx >= 0) coalesce(sum(col("__val")), lit(0L))

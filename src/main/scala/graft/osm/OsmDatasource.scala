@@ -170,13 +170,7 @@ class OsmFile(spark: org.apache.spark.sql.SparkSession, path: String,
     OsmQueryExec.run(spark, elements, q)
 
   /** query with the dynamic tag pivot (keys resolved at action time;
-    * reference _frame.py:59-68) over the cached element table.
-    * Honors `q.pivot = false` exactly like `OsmQuery.runPivotTags`
-    * (review r19: the escape hatch must exist on BOTH pivot entry
-    * points): the `tags` MapType column is served as-is, with no key
-    * discovery and no driver collect. */
-  def queryPivoted(q: OsmQuery): org.apache.spark.sql.DataFrame = {
-    val base = query(q.copy(tags = None))
-    if (q.pivot) OsmQueryExec.pivotTags(base) else base
-  }
+    * reference _frame.py:59-68) over the cached element table. */
+  def queryPivoted(q: OsmQuery): org.apache.spark.sql.DataFrame =
+    OsmQueryExec.pivotTags(query(q.copy(tags = None)))
 }

@@ -33,8 +33,7 @@ final case class OsmQuery(
     geometry: Boolean = false,
     topology: Boolean = false,
     expandSuperRelations: Boolean = false,
-    superRelationDepth: Int = 3,
-    pivot: Boolean = true) {
+    superRelationDepth: Int = 3) {
 
   // validation mirroring reference osmquery.py:148-160
   require(!topology || (geometry && ways),
@@ -84,17 +83,10 @@ final case class OsmQuery(
     * filtered selection only (bounded by the tag vocabulary, not the
     * corpus — OSM has ~10⁴ keys in active use), mirroring how the
     * reference materializes whatever keys the block decode produced.
-    *
-    * `pivot = false` is the SCALE escape hatch (VERDICT r18 task 5):
-    * the `tags` MapType column is kept AS IS — no key discovery, no
-    * driver collect, no per-key columns — for extracts whose tag
-    * vocabulary exceeds `spark.graft.pivot.maxKeys` (planet-scale
-    * tiger/gnis key-namespace explosions). Downstream reads use
-    * `element_at(tags, 'key')`; the query is otherwise identical. */
-  def runPivotTags(spark: org.apache.spark.sql.SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val base = copy(tags = None).run(spark, path)
-    if (pivot) OsmQueryExec.pivotTags(base) else base
-  }
+    * Past `spark.graft.pivot.maxKeys` distinct keys, run with
+    * `tags = None` instead and read `element_at(tags, 'key')`. */
+  def runPivotTags(spark: org.apache.spark.sql.SparkSession, path: String): org.apache.spark.sql.DataFrame =
+    OsmQueryExec.pivotTags(copy(tags = None).run(spark, path))
 }
 
 object OsmQuery {

@@ -75,8 +75,16 @@ object OsmQueryExec {
 
   // ------------------------------------------------------------------
 
-  private[osm] def scan(spark: SparkSession, path: String): DataFrame =
-    dedupMultiFile(spark.read.format("osmpbf").load(path), path)
+  /** Above this fraction of a multi-file corpus' blobs inside the
+    * cross-file border intervals, [[dedupMultiFile]] falls back to the
+    * plain full-row dedup. */
+  private[osm] val MaxBorderBlobFrac = 0.5
+
+  /** @param maxBorderFrac the split/fallback switch of [[dedupMultiFile]];
+    *   tests pass 0 or 1 to force either side. */
+  private[osm] def scan(spark: SparkSession, path: String,
+      maxBorderFrac: Double = MaxBorderBlobFrac): DataFrame =
+    dedupMultiFile(spark.read.format("osmpbf").load(path), path, maxBorderFrac)
 
   /** Adjacent region extracts duplicate border elements; a multi-file
     * corpus therefore dedups on the stable (type, id) key (copies are
@@ -95,36 +103,25 @@ object OsmQueryExec {
     * the border blobs at the source) and deduped. The full-row dedup
     * exchange therefore carries only border rows — on adjacent
     * real-world extracts a few percent of the corpus — instead of
-    * every element. Degenerate id layouts (border intervals covering
-    * most blobs, e.g. fully interleaved ids) fall back to the plain
-    * full dedup via `spark.graft.osm.borderBlobFrac` (default 0.5);
-    * disjoint id spaces skip the dedup outright. */
+    * every element. Degenerate id layouts (border intervals touching
+    * more than `maxBorderFrac` of the blobs, e.g. fully interleaved
+    * ids) fall back to the plain full dedup; disjoint id spaces skip
+    * the dedup outright. A query filter cannot cross the dedup, so the
+    * border strip is decoded without must-tag pushdown. */
   private def dedupMultiFile(df: DataFrame, path: String,
-      opts: Map[String, String] = Map.empty): DataFrame = {
+      maxBorderFrac: Double): DataFrame = {
     val spark = df.sparkSession
     val files = graft.pbf.OsmPbfFile.expand(path,
       spark.sparkContext.hadoopConfiguration)
     if (files.size <= 1) return df
-    val ranges = borderRanges(path)
+    val (ranges, borderFrac) = borderRanges(path)
     if (ranges.isEmpty) return df
-    // cached driver metadata (per-file planning cache) — these are map
-    // lookups, not re-walks; the intersection test is THE shared blob
-    // predicate, so this fraction decision and the border scan's actual
-    // blob pruning can never diverge (review r22)
-    val blobs = graft.pbf.OsmPbfFile.indexAll(path)
-    val rngs = graft.sources.OsmPbfStats.ranges(path, blobs)
-    val allTypes = Array(true, true, true)
-    val nBorder = rngs.count(
-      graft.sources.OsmPbfScan.blobIntersects(_, allTypes, ranges))
-    val maxFrac =
-      spark.conf.get("spark.graft.osm.borderBlobFrac", "0.5").toDouble
-    if (nBorder > maxFrac * blobs.size) return df.dropDuplicates("type", "id")
+    if (borderFrac > maxBorderFrac) return df.dropDuplicates("type", "id")
     val inBorder = ranges.map { case (t, lo, hi) =>
       col("type") === lit(t) && col("id") >= lo && col("id") <= hi
     }.reduce(_ || _)
     val borderScan = spark.read.format("osmpbf")
-      .options(opts + ("idRanges" ->
-        graft.sources.OsmPbfSource.serializeIdRanges(ranges)))
+      .option("idRanges", graft.sources.OsmPbfSource.serializeIdRanges(ranges))
       .load(path)
     df.filter(!inBorder).unionByName(
       borderScan.filter(inBorder).dropDuplicates("type", "id"))
@@ -134,8 +131,10 @@ object OsmQueryExec {
     * intersections of the files' per-type id spans (derived from the
     * cached per-blob stats walk — driver metadata, no element decode).
     * Empty ⇔ the files' id spaces are disjoint for every type ⇔ no
-    * key can be duplicated. */
-  private[osm] def borderRanges(path: String): Seq[(Int, Long, Long)] = {
+    * key can be duplicated. Also returns the fraction of blobs the
+    * intervals touch, by the shared blob intersection predicate the
+    * border scan prunes with, so the two can never diverge. */
+  private[osm] def borderRanges(path: String): (Seq[(Int, Long, Long)], Double) = {
     val blobs = graft.pbf.OsmPbfFile.indexAll(path)
     val rngs = graft.sources.OsmPbfStats.ranges(path, blobs)
     val perFile = blobs.zip(rngs).groupBy(_._1.path).values.map { xs =>
@@ -159,7 +158,7 @@ object OsmQueryExec {
       hi = math.min(perFile(i)(2 * t + 1), perFile(j)(2 * t + 1))
       if lo <= hi
     } yield (t, lo, hi)
-    raw.groupBy(_._1).toSeq.flatMap { case (t, ivs) =>
+    val ranges = raw.groupBy(_._1).toSeq.flatMap { case (t, ivs) =>
       ivs.map(x => (x._2, x._3)).sortBy(_._1)
         .foldLeft(List.empty[(Long, Long)]) {
           case ((plo, phi) :: rest, (lo, hi)) if lo <= phi =>
@@ -167,6 +166,27 @@ object OsmQueryExec {
           case (acc, iv) => iv :: acc
         }.reverse.map { case (lo, hi) => (t, lo, hi) }
     }.sorted
+    val allTypes = Array(true, true, true)
+    val nBorder = rngs.count(
+      graft.sources.OsmPbfScan.blobIntersects(_, allTypes, ranges))
+    (ranges, if (blobs.isEmpty) 0.0 else nBorder.toDouble / blobs.size)
+  }
+
+  /** Splits a key-sorted iterator into runs of equal key, each run
+    * buffered in input order — the per-way / per-relation walks below
+    * hold one run at a time (OSM bounds a way at 2000 nodes and a
+    * relation's member list is small). */
+  private[osm] def keyRuns[T](it: Iterator[T])(key: T => Long): Iterator[ArrayBuffer[T]] = {
+    val in = it.buffered
+    new Iterator[ArrayBuffer[T]] {
+      override def hasNext: Boolean = in.hasNext
+      override def next(): ArrayBuffer[T] = {
+        val k = key(in.head)
+        val run = ArrayBuffer.empty[T]
+        while (in.hasNext && key(in.head) == k) run += in.next()
+        run
+      }
+    }
   }
 
   /** keep/exclude pair+key match over the tags map — one side of the
@@ -186,9 +206,6 @@ object OsmQueryExec {
     * matching information resolves to `!keepFirst`
     * (reference primitives.py:186-215). */
   def tagPredicate(q: OsmQuery, tags: Column): Column = {
-    val must =
-      if (q.mustTags.isEmpty) lit(true)
-      else arrays_overlap(map_keys(tags), array(q.mustTags.map(lit): _*))
     val kps = q.keep.map(tagSpecMatch(tags, _)).getOrElse(lit(false))
     val exs = q.exclude.map(tagSpecMatch(tags, _)).getOrElse(lit(false))
     val noTagval = q.mustTags.isEmpty && q.keep.isEmpty && q.exclude.isEmpty
@@ -196,8 +213,15 @@ object OsmQueryExec {
       if (noTagval) lit(!q.keepFirst)
       else if (q.keepFirst) kps && !exs
       else !exs || kps
-    must && body
+    mustPredicate(q, tags) && body
   }
+
+  /** The must-tag conjunct (F3): the element carries at least one of
+    * the query's must keys. Over an osmpbf scan, the `MustTagPushdown`
+    * optimizer rule turns it into the decoder's `mustTagKeys` option. */
+  private def mustPredicate(q: OsmQuery, tags: Column): Column =
+    if (q.mustTags.isEmpty) lit(true)
+    else arrays_overlap(map_keys(tags), array(q.mustTags.map(lit): _*))
 
   /** Way line/area heuristic as a pure Column cascade (reference
     * primitives.py:260-285 `_way_geotype` intended semantics — the
@@ -310,37 +334,20 @@ object OsmQueryExec {
 
   // ------------------------------------------------------------------
 
-  def run(spark: SparkSession, path: String, q: OsmQuery): DataFrame = {
-    val all = scan(spark, path)
-    // must-tag pushdown (F3): the filtered-element branch decodes only
-    // elements whose keys intersect the query's must set — the check
-    // runs on string ids inside the blob decoder, and blobs whose
-    // string table lacks every key are skipped outright. The node
-    // coordinate / member-way branches keep the unfiltered scan. The
-    // Column-level must predicate still re-checks (free, and keeps the
-    // cached-DataFrame path semantics identical).
-    val elSource =
-      if (q.mustTags.nonEmpty) {
-        val opts = Map("mustTagKeys" -> q.mustTags.mkString("\u0001"))
-        dedupMultiFile(spark.read.format("osmpbf")
-          .options(opts).load(path), path, opts)
-      } else all
-    runImpl(spark, elSource, all, q)
-  }
+  def run(spark: SparkSession, path: String, q: OsmQuery): DataFrame =
+    run(spark, scan(spark, path), q)
 
-  /** Run against a pre-built element DataFrame — pass a `.persist()`ed
-    * scan to get the reference's cache semantics (one decode, many
-    * queries; reference osmdata.py caches, SURVEY §4.3 delta 2): every
-    * branch (filtered elements, node coords, member ways) derives from
-    * the same source, so a persisted source is decoded exactly once. */
-  def run(spark: SparkSession, all: DataFrame, q: OsmQuery): DataFrame =
-    runImpl(spark, all, all, q)
-
-  /** @param elSource the scan feeding the filtered-element branch (may
-    *   carry must-tag pushdown); `all` feeds the coordinate and
-    *   member-way branches. */
-  private def runImpl(spark: SparkSession, elSource: DataFrame, all: DataFrame,
-      q: OsmQuery): DataFrame = {
+  /** The one OSM plan builder: every branch (filtered elements, node
+    * coordinates, member ways, topology attributes) derives from
+    * `all`. Pass a `.persist()`ed scan to get the reference's cache
+    * semantics (one decode, many queries; reference osmdata.py caches,
+    * SURVEY §4.3 delta 2). Must-tag pushdown is not wired here: the
+    * query's must set is a Filter conjunct on the element and
+    * attribute branches, and the `MustTagPushdown` rule registered by
+    * `GraftExtensions` pushes it into the decoder wherever that Filter
+    * sits on an osmpbf scan. A session without the extension gets the
+    * same rows, decoded without the pruning. */
+  def run(spark: SparkSession, all: DataFrame, q: OsmQuery): DataFrame = {
 
     val typeCond = {
       val wanted = Seq(TypeNode -> q.nodes, TypeWay -> q.ways, TypeRelation -> q.relations)
@@ -369,7 +376,7 @@ object OsmQueryExec {
       case None => lit(true)
     }
 
-    var el = elSource.filter(typeCond && idCond && relTypeCond && tagPredicate(q, col("tags")))
+    var el = all.filter(typeCond && idCond && relTypeCond && tagPredicate(q, col("tags")))
     if (idSets.nonEmpty && !smallIdSets) {
       // F2 large-set path: broadcast left-semi join on (type, id) for
       // the restricted types; unrestricted types pass through
@@ -395,7 +402,8 @@ object OsmQueryExec {
     // pruned scans: sharing one checkpoint of the filtered ways was
     // measured 2x slower at 7M nodes (OPTIMIZATION_r22.md)
     val result =
-      if (q.topology) Topology.build(spark, el, elSource.filter(col("type") === TypeWay), nodes)
+      if (q.topology) Topology.build(spark, el,
+        all.filter(col("type") === TypeWay && mustPredicate(q, col("tags"))), nodes)
       else if (q.geometry) GeometryBuilder.build(spark, all, el, q, nodes)
       else el
 
@@ -455,14 +463,6 @@ object OsmQueryExec {
     base.select(cols: _*)
   }
 
-  /** The "geometry cache" equivalent: the node coordinate table
-    * (reference osmdata.py:127-133) — a pruned parallel scan instead of
-    * a driver-RAM array; persist() it for repeated queries. */
-  def nodeCoords(spark: SparkSession, path: String): DataFrame =
-    scan(spark, path)
-      .filter(col("type") === TypeNode)
-      .select(col("id").as("nid"), col("lon"), col("lat"))
-
   /** Result-shape projection (reference _frame.py:8-57 to_dataframe):
     * osmid, osmtype, tag columns per the projection mode, optional
     * metadata, optional geometry/topology columns. */
@@ -493,10 +493,9 @@ object GeometryBuilder {
 
   private[osm] case class GeomRow(id: Long, geometry: Array[Byte], geom_type: String)
 
-  /** Conf: broadcast the exploded way-ref rows into the coordinate
-    * join when their MEASURED count is at or below this (rows);
-    * 0 disables the broadcast tier. See [[coordJoin]]. */
-  val RefsBroadcastRowsKey = "spark.graft.geom.refsBroadcastRows"
+  /** [[coordJoin]] broadcasts the exploded way-ref rows when their
+    * MEASURED count is at or below this (≈ 200 MB hashed). */
+  private[graft] val RefsBroadcastRows = 4000000L
 
   /** Attach node coordinates to exploded (…, ref) way-ref rows —
     * the geometry path's one big join — choosing the strategy from the
@@ -504,9 +503,9 @@ object GeometryBuilder {
     * lazily localCheckpoint'ed (the count() here is the materializing
     * action, and the join consumes the same blocks — nothing runs
     * twice), then:
-    *  - small side (≤ [[RefsBroadcastRowsKey]] rows, default 4M ≈
-    *    ~200 MB hashed): BROADCAST the refs. This removes BOTH
-    *    exchanges — the multi-million-row node table streams straight
+    *  - small side (≤ `broadcastRows`, default [[RefsBroadcastRows]]):
+    *    BROADCAST the refs. This removes BOTH exchanges — the
+    *    multi-million-row node table streams straight
     *    out of the pruned scan with no shuffle at all (measured at the
     *    2M-node world: 12.8 → 2.7 CPU-s steady state for the join
     *    stage). The reference's workload is exactly this shape: a city
@@ -530,19 +529,13 @@ object GeometryBuilder {
     * (AQE does not convert it back at runtime), ~6.7 s wall, ~413 MB
     * shuffle — 10× the data at ~3× the wall, the sublinear scaling
     * the threshold design predicts. The probe exits 1 if either side
-    * of the crossover ever plans the other strategy. */
-  private[osm] def coordJoin(spark: SparkSession, exploded: DataFrame,
-      nodes: DataFrame): DataFrame = {
+    * of the crossover ever plans the other strategy.
+    *
+    * @param broadcastRows tests pass 0 to force the shuffle_hash side */
+  private[osm] def coordJoin(exploded: DataFrame, nodes: DataFrame,
+      broadcastRows: Long = RefsBroadcastRows): DataFrame = {
     val expC = exploded.localCheckpoint(eager = false)
-    val n = expC.count()
-    val raw = spark.conf.get(RefsBroadcastRowsKey, "4000000")
-    val threshold =
-      try raw.trim.toLong
-      catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"$RefsBroadcastRowsKey must be a row count, got '$raw'", e)
-      }
-    if (n <= threshold) broadcast(expC).join(nodes, col("ref") === col("nid"))
+    if (expC.count() <= broadcastRows) broadcast(expC).join(nodes, col("ref") === col("nid"))
     else expC.hint("shuffle_hash").join(nodes, col("ref") === col("nid"))
   }
 
@@ -556,7 +549,7 @@ object GeometryBuilder {
 
     // Only plan the branches the query selects — each branch triggers
     // its own (pruned) scans, so an unused branch is pure waste.
-    val branches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val branches = ArrayBuffer.empty[DataFrame]
 
     // G1 — node points: pure expression, no shuffle at all
     if (q.nodes) branches += el.filter(col("type") === TypeNode)
@@ -581,9 +574,9 @@ object GeometryBuilder {
       // second pruned scan (refs pruned off it), deliberately NOT a
       // shared checkpoint: the topoShare A/B at the 7M probe showed
       // materializing near-corpus way rows costs more than the pruned
-      // re-decode (see runImpl's topology note).
+      // re-decode (see the topology note in OsmQueryExec.run).
       val wayGeoms: DataFrame = {
-        val exploded = coordJoin(spark,
+        val exploded = coordJoin(
           ways.withColumn("is_area", wayIsArea(col("tags"), col("refs")))
             .select(col("id"), col("is_area"), posexplode(col("refs")).as(Seq("pos", "ref"))),
           nodes)
@@ -591,23 +584,14 @@ object GeometryBuilder {
         exploded.as[(Long, Boolean, Int, Double, Double)]
           .repartition(col("id"))
           .sortWithinPartitions("id", "pos")
-          .mapPartitions { it =>
-            val in = it.buffered
-            new Iterator[GeomRow] {
-              override def hasNext: Boolean = in.hasNext
-              override def next(): GeomRow = {
-                val wid = in.head._1
-                val rows = ArrayBuffer.empty[(Long, Boolean, Int, Double, Double)]
-                while (in.hasNext && in.head._1 == wid) rows += in.next()
-                val coords = rows.map(r => Coord(r._4, r._5)).toSeq
-                val isArea = rows.head._2
-                if (isArea) {
-                  val ring = if (coords.head == coords.last) coords else coords :+ coords.head
-                  GeomRow(wid, Wkb.polygon(Seq(ring)), "Polygon")
-                } else GeomRow(wid, Wkb.lineString(coords), "LineString")
-              }
-            }
-          }
+          .mapPartitions(it => keyRuns(it)(_._1).map { rows =>
+            val wid = rows.head._1
+            val coords = rows.map(r => Coord(r._4, r._5)).toSeq
+            if (rows.head._2) {
+              val ring = if (coords.head == coords.last) coords else coords :+ coords.head
+              GeomRow(wid, Wkb.polygon(Seq(ring)), "Polygon")
+            } else GeomRow(wid, Wkb.lineString(coords), "LineString")
+          })
           .toDF("id", "geometry", "geom_type")
       }
       branches += ways.drop("geometry", "geom_type")
@@ -666,7 +650,7 @@ object GeometryBuilder {
       .union(elWays.select(col("id").as("wwid")))
       .distinct()
 
-    val waySeqs = coordJoin(spark,
+    val waySeqs = coordJoin(
       allWays
         .join(wantedWayIds, col("wid") === col("wwid"), "left_semi")
         .select(col("wid"), posexplode(col("refs")).as(Seq("pos", "ref"))),
@@ -675,18 +659,9 @@ object GeometryBuilder {
       .as[(Long, Int, Long, Double, Double)]
       .repartition(col("wid"))
       .sortWithinPartitions("wid", "pos")
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[(Long, Array[Long], Array[Double], Array[Double])] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): (Long, Array[Long], Array[Double], Array[Double]) = {
-            val wid = in.head._1
-            val rows = ArrayBuffer.empty[(Long, Int, Long, Double, Double)]
-            while (in.hasNext && in.head._1 == wid) rows += in.next()
-            (wid, rows.map(_._3).toArray, rows.map(_._4).toArray, rows.map(_._5).toArray)
-          }
-        }
-      }
+      .mapPartitions(it => keyRuns(it)(_._1).map { rows =>
+        (rows.head._1, rows.map(_._3).toArray, rows.map(_._4).toArray, rows.map(_._5).toArray)
+      })
       .toDF("wid", "node_ids", "xs", "ys")
       .localCheckpoint(eager = false)
 
@@ -719,19 +694,10 @@ object GeometryBuilder {
       .as[(Long, Int, Int, String, Array[Long], Array[Double], Array[Double])]
       .repartition(col("rel_id"))
       .sortWithinPartitions("rel_id", "mpos")
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[GeomRow] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): GeomRow = {
-            val relId = in.head._1
-            val ms = ArrayBuffer.empty[(Long, Int, Int, String, Array[Long], Array[Double], Array[Double])]
-            while (in.hasNext && in.head._1 == relId) ms += in.next()
-            assembleRelation(relId, ms.head._2,
-              ms.map(m => Member(m._4, m._5, m._6, m._7)).toArray)
-          }
-        }
-      }
+      .mapPartitions(it => keyRuns(it)(_._1).map { ms =>
+        assembleRelation(ms.head._1, ms.head._2,
+          ms.map(m => Member(m._4, m._5, m._6, m._7)).toArray)
+      })
       .toDF("id", "geometry", "geom_type")
 
     val relRows = geomRels.drop("gclass")
@@ -834,12 +800,12 @@ object GeometryBuilder {
       while (!ts.isEmpty && used(ts.first())) ts.pollFirst()
       if (ts.isEmpty) { m.remove(k); -1 } else ts.first()
     }
-    val rings = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Double, Double)]]
+    val rings = ArrayBuffer.empty[Seq[(Long, Double, Double)]]
     var start = 0
     while (start < seqs.length) {
       if (!used(start)) {
         used(start) = true
-        val ring = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
+        val ring = ArrayBuffer.empty[(Long, Double, Double)]
         ring ++= seqs(start)
         var extended = true
         while (extended && ring.nonEmpty && ring.head._1 != ring.last._1) {
@@ -870,10 +836,11 @@ object Topology {
 
   /** @param el filtered elements — the ways whose chains are walked
     * @param attrs attribute rows for the final per-segment projection:
-    *   a SUPERSET of el's ways from the same scan, minus the tag/size/id
+    *   a SUPERSET of el's ways from the same scan — the ways passing the
+    *   query's must-tag conjunct, without the keep/exclude/size/id
     *   predicates (the inner join on segment way ids re-implies them
-    *   exactly). Passing the unfiltered rows lets Catalyst prune `refs`
-    *   off that second pbf scan — only the walk branch decodes refs.
+    *   exactly). Leaving `refs` unused there lets Catalyst prune it off
+    *   that second pbf scan — only the walk branch decodes refs.
     * @param nodes full node coordinate table (nid, lon, lat) */
   def build(spark: SparkSession, el: DataFrame, attrs: DataFrame,
       nodes: DataFrame): DataFrame = {
@@ -921,41 +888,33 @@ object Topology {
       .repartition(col("way"))
       .sortWithinPartitions("way", "pos")
       .as[(Long, Int, Long, Double, Double, Boolean)]
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[Seq[(Long, Long, Long, Long, Array[Byte], String)]] {
-          override def hasNext: Boolean = in.hasNext
-          override def next(): Seq[(Long, Long, Long, Long, Array[Byte], String)] = {
-            val way = in.head._1
-            val ns = ArrayBuffer.empty[(Long, Int, Long, Double, Double, Boolean)]
-            while (in.hasNext && in.head._1 == way) ns += in.next()
-            val out = Seq.newBuilder[(Long, Long, Long, Long, Array[Byte], String)]
-            var segIx = 0L
-            var start = 0
-            var i = 1
-            while (i < ns.length) {
-              val boundary = i == ns.length - 1 || ns(i)._6 // last node or interior junction
-              if (boundary) {
-                if (i > start) {
-                  // nodes missing from the extract (NaN coords) are
-                  // dropped from the geometry; a segment needs >= 2
-                  // present nodes to exist
-                  val present = (start to i).filter(j => !ns(j)._4.isNaN)
-                  if (present.length >= 2) {
-                    val coords = present.map(j => Coord(ns(j)._4, ns(j)._5))
-                    out += ((way, segIx, ns(present.head)._3, ns(present.last)._3,
-                      Wkb.lineString(coords), "LineString"))
-                    segIx += 1
-                  }
-                }
-                start = i
+      .mapPartitions(it => OsmQueryExec.keyRuns(it)(_._1).flatMap { ns =>
+        val way = ns.head._1
+        val out = Seq.newBuilder[(Long, Long, Long, Long, Array[Byte], String)]
+        var segIx = 0L
+        var start = 0
+        var i = 1
+        while (i < ns.length) {
+          val boundary = i == ns.length - 1 || ns(i)._6 // last node or interior junction
+          if (boundary) {
+            if (i > start) {
+              // nodes missing from the extract (NaN coords) are
+              // dropped from the geometry; a segment needs >= 2
+              // present nodes to exist
+              val present = (start to i).filter(j => !ns(j)._4.isNaN)
+              if (present.length >= 2) {
+                val coords = present.map(j => Coord(ns(j)._4, ns(j)._5))
+                out += ((way, segIx, ns(present.head)._3, ns(present.last)._3,
+                  Wkb.lineString(coords), "LineString"))
+                segIx += 1
               }
-              i += 1
             }
-            out.result()
+            start = i
           }
-        }.flatten
-      }
+          i += 1
+        }
+        out.result()
+      })
       .toDF("way", "seg_ix", "source", "target", "geometry", "geom_type")
 
     // dropDuplicates guards the malformed-input edge where one FILE

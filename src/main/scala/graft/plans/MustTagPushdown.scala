@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `tags['k'] = v`, `element_at(tags,'k') …` — inject the
   * `mustTagKeys` scan option so the blob decoder drops non-matching
   * elements before string materialization and skips blobs whose string
-  * table lacks every key (the same pushdown `OsmQueryExec` wires
-  * explicitly; this rule gives it to plain DataFrame/SQL users).
+  * table lacks every key. This rule is the only place the pushdown is
+  * decided: `OsmQueryExec` states a query's must set as such a conjunct,
+  * and plain DataFrame/SQL filters get it the same way.
   * The Filter itself is kept — the scan-side check is a superset
   * condition, never a replacement.
   *

@@ -137,31 +137,32 @@ class DistributedRankSpec extends AnyFunSuite {
       (2L, 5L, 7L), (3L, 5L, 7L), (4L, 7L, 7L)))
   }
 
-  test("specialized InternalRow pass == legacy Row pass (A/B conf)") {
-    // VERDICT r17 task 2: the hot loop moved to the InternalRow level;
-    // the legacy external-Row pass stays behind
-    // spark.graft.distrank.rowPass as the A/B baseline. Both paths
-    // must be value-identical — string + NULL keys exercise the
-    // copied-previous-key probe (the sort iterator reuses its buffer,
-    // so a stale UTF8String view would corrupt group boundaries).
+  test("withRank == window rank()/count (string+NULL, NaN, -0.0 keys)") {
+    // the reference is Spark's own window form over the same complete
+    // order. String + NULL keys exercise the copied-previous-key probe
+    // (the sort iterator reuses its buffer, so a stale UTF8String view
+    // would corrupt group boundaries); NaN / ±0.0 keys must group the
+    // way PARTITION BY normalizes them.
     import spark.implicits._
+    def check(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
+      val w = Window.partitionBy("key").orderBy(col("v"), col("id"))
+      val expected = df
+        .withColumn("grank", rank().over(w).cast("long"))
+        .withColumn("gcount", count(lit(1)).over(Window.partitionBy("key")))
+        .select("id", "grank", "gcount").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val got = DistributedRank.withRank(df, Seq("key"), Seq(col("v"), col("id")))
+        .select("id", "grank", "gcount").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got.size === n)
+      assert(got === expected)
+    }
     val rnd = new scala.util.Random(0x0518)
-    val df = (0 until 900).map { i =>
+    check((0 until 900).map { i =>
       val key = rnd.nextInt(4) match { case 0 => null; case n => s"k$n" }
       (i.toLong, key, rnd.nextInt(25).toDouble)
-    }.toDF("id", "key", "v").repartition(7)
-    def run() = DistributedRank.withRank(df, Seq("key"), Seq(col("v"), col("id")))
-      .select("id", "grank", "gcount").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val fast = run()
-    assert(fast.size === 900)
-    spark.conf.set("spark.graft.distrank.rowPass", "true")
-    try assert(run() === fast)
-    finally spark.conf.unset("spark.graft.distrank.rowPass")
-
-    // and on DOUBLE keys incl. NaN / ±0.0 (review r18 pass 2: the
-    // legacy pass's Scala numeric == split NaN keys per-row)
-    val fdf = (0 until 300).map { i =>
+    }.toDF("id", "key", "v").repartition(7), 900)
+    check((0 until 300).map { i =>
       val key = i % 4 match {
         case 0 => 0.0
         case 1 => -0.0
@@ -169,14 +170,7 @@ class DistributedRankSpec extends AnyFunSuite {
         case _ => 3.25
       }
       (i.toLong, key, (i * 7 % 31).toDouble)
-    }.toDF("id", "key", "v").repartition(5)
-    def runF() = DistributedRank.withRank(fdf, Seq("key"), Seq(col("v"), col("id")))
-      .select("id", "grank", "gcount").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val fastF = runF()
-    spark.conf.set("spark.graft.distrank.rowPass", "true")
-    try assert(runF() === fastF)
-    finally spark.conf.unset("spark.graft.distrank.rowPass")
+    }.toDF("id", "key", "v").repartition(5), 300)
   }
 
   test("signed-zero and NaN double keys group like PARTITION BY (one group each)") {
@@ -245,14 +239,10 @@ class DistributedRankSpec extends AnyFunSuite {
     val expected = df.withColumn("grank", row_number().over(w).cast("long"))
       .select("id", "grank")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def run() = DistributedRank.withRank(df, Seq("key"), Seq(col("v"), col("id")))
+    val got = DistributedRank.withRank(df, Seq("key"), Seq(col("v"), col("id")))
       .select("id", "grank")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run() === expected)
-    // the legacy baseline groups binary by value too (review r18 pass 3)
-    spark.conf.set("spark.graft.distrank.rowPass", "true")
-    try assert(run() === expected)
-    finally spark.conf.unset("spark.graft.distrank.rowPass")
+    assert(got === expected)
   }
 
   test("ranks are invariant across shuffle-partition counts (P sensitivity)") {

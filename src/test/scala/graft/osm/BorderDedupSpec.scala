@@ -57,7 +57,7 @@ class BorderDedupSpec extends AnyFunSuite {
   test("every cross-file duplicated key lies inside a border interval") {
     val (_, dir) = mkWorld()
     assert(!spark.sparkContext.isStopped) // stats walk needs the active session
-    val ranges = OsmQueryExec.borderRanges(dir)
+    val (ranges, _) = OsmQueryExec.borderRanges(dir)
     assert(ranges.nonEmpty, "3-way overlap-1 split must have border intervals")
     // raw per-file keys
     val files = graft.pbf.OsmPbfFile.expand(dir, graft.pbf.OsmPbfFile.sharedConf)
@@ -77,7 +77,7 @@ class BorderDedupSpec extends AnyFunSuite {
   test("idRanges option prunes blobs; split path equals full-dedup fallback") {
     val (_, dir) = mkWorld()
     assert(!spark.sparkContext.isStopped) // stats walk needs the active session
-    val ranges = OsmQueryExec.borderRanges(dir)
+    val (ranges, _) = OsmQueryExec.borderRanges(dir)
     val ser = graft.sources.OsmPbfSource.serializeIdRanges(ranges)
     assert(graft.sources.OsmPbfSource.parseIdRanges(ser) === ranges)
     val all = spark.read.format("osmpbf").load(dir)
@@ -93,12 +93,9 @@ class BorderDedupSpec extends AnyFunSuite {
       "blob pruning must not drop in-range rows")
 
     // end-to-end: split dedup == full-dedup fallback, row for row
-    def rows(frac: String) = {
-      spark.conf.set("spark.graft.osm.borderBlobFrac", frac)
-      try OsmQueryExec.scan(spark, dir).select("type", "id")
+    def rows(maxBorderFrac: Double) =
+      OsmQueryExec.scan(spark, dir, maxBorderFrac).select("type", "id")
         .collect().map(r => (r.getByte(0), r.getLong(1))).sorted.toSeq
-      finally spark.conf.unset("spark.graft.osm.borderBlobFrac")
-    }
-    assert(rows("1.0") === rows("0"))
+    assert(rows(1.0) === rows(0.0))
   }
 }

@@ -1,5 +1,6 @@
 package graft.osm
 
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SparkTestSession
 import graft.pbf.OsmPbfWriter._
@@ -24,27 +25,16 @@ class CoordJoinPlanSpec extends AnyFunSuite {
     f.getAbsolutePath
   }
 
-  private def withThreshold[A](threshold: String)(f: => A): A = {
-    val prev = spark.conf.getOption(GeometryBuilder.RefsBroadcastRowsKey)
-    spark.conf.set(GeometryBuilder.RefsBroadcastRowsKey, threshold)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(GeometryBuilder.RefsBroadcastRowsKey, v)
-      case None => spark.conf.unset(GeometryBuilder.RefsBroadcastRowsKey)
-    }
-  }
-
   // the full buildings query hides the coordinate join behind the
   // waySeqs localCheckpoint (the final plan reads an ExistingRDD), so
-  // the strategy pin tests coordJoin directly; the full-query test
-  // below pins result identity across both strategies
-  private def coordPlan(threshold: String): (String, Long) = withThreshold(threshold) {
+  // both pins test coordJoin directly
+  private def coordPlan(broadcastRows: Long): (String, Long) = {
     import spark.implicits._
     val exploded = Seq((10L, 0, 1L), (10L, 1, 2L), (11L, 0, 2L), (11L, 1, 3L))
       .toDF("wid", "pos", "ref")
     val nodes = Seq((1L, 0.0, 0.0), (2L, 0.0, 1.0), (3L, 1.0, 1.0))
       .toDF("nid", "lon", "lat")
-    val joined = GeometryBuilder.coordJoin(spark, exploded, nodes)
+    val joined = GeometryBuilder.coordJoin(exploded, nodes, broadcastRows)
     // INITIAL physical plan (the strategy coordJoin chose): at fixture
     // scale AQE's runtime re-planning converts any shuffled join to
     // broadcast, which would mask the choice under test
@@ -52,40 +42,31 @@ class CoordJoinPlanSpec extends AnyFunSuite {
   }
 
   test("small refs side broadcasts; threshold 0 keeps shuffle_hash") {
-    val (bPlan, bN) = coordPlan(threshold = "4000000")
+    val (bPlan, bN) = coordPlan(GeometryBuilder.RefsBroadcastRows)
     assert(bN === 4)
     assert(bPlan.contains("BroadcastHashJoin"),
       s"expected the broadcast tier:\n$bPlan")
     assert(!bPlan.contains("ShuffledHashJoin"))
-    val (sPlan, sN) = coordPlan(threshold = "0")
+    val (sPlan, sN) = coordPlan(0L)
     assert(sN === 4)
     assert(sPlan.contains("ShuffledHashJoin"),
       s"expected the scale-safe shuffle_hash with threshold 0:\n$sPlan")
   }
 
-  test("join strategy does not change buildings results") {
-    def rows(threshold: String): Set[(Long, String)] = withThreshold(threshold) {
-      OsmQuery.buildings.copy(geometry = true).run(spark, world)
-        .select("osmid", "geom_type").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-    }
-    val b = rows("4000000")
-    val s = rows("0")
-    assert(b === s)
-    assert(b.nonEmpty)
-  }
-
-  test("a malformed threshold conf names the key") {
-    val prev = spark.conf.getOption(GeometryBuilder.RefsBroadcastRowsKey)
-    spark.conf.set(GeometryBuilder.RefsBroadcastRowsKey, "many")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        OsmQuery.buildings.copy(geometry = true).run(spark, world).count()
-      }
-      assert(e.getMessage.contains(GeometryBuilder.RefsBroadcastRowsKey))
-    } finally prev match {
-      case Some(v) => spark.conf.set(GeometryBuilder.RefsBroadcastRowsKey, v)
-      case None => spark.conf.unset(GeometryBuilder.RefsBroadcastRowsKey)
-    }
+  test("join strategy does not change the coordinate-join rows") {
+    // the buildings query's input: every way's exploded refs against
+    // the node table of the written world
+    val all = spark.read.format("osmpbf").load(world)
+    val exploded = all.filter(col("type") === 1)
+      .select(col("id").as("wid"), posexplode(col("refs")).as(Seq("pos", "ref")))
+    val nodes = all.filter(col("type") === 0)
+      .select(col("id").as("nid"), col("lon"), col("lat"))
+    def rows(broadcastRows: Long): Set[(Long, Int, Double, Double)] =
+      GeometryBuilder.coordJoin(exploded, nodes, broadcastRows)
+        .select("wid", "pos", "lon", "lat").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3))).toSet
+    val b = rows(GeometryBuilder.RefsBroadcastRows)
+    assert(b === rows(0L))
+    assert(b.size === 8)
   }
 }

@@ -198,19 +198,18 @@ class OsmQuerySpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.pivot.maxKeys")
   }
 
-  test("pivot = false keeps the tags MapType column — the planet-scale escape hatch") {
-    // VERDICT r18 task 5: past spark.graft.pivot.maxKeys the only
-    // behavior used to be the loud failure; OsmQuery(pivot = false)
-    // is the documented fallback — same query, no key discovery, no
-    // driver collect, the MapType column served as-is.
+  test("tags = None keeps the tags MapType column — the planet-scale escape hatch") {
+    // past spark.graft.pivot.maxKeys the pivot fails loudly; the plain
+    // run/query with tags = None is the fallback — same rows, no key
+    // discovery, no driver collect, the MapType column served as-is.
     // keepFirst = false: with only mustTags set, the reference truth
     // table (F4) resolves keepFirst=true to drop-all
     val q = OsmQuery(nodes = true, mustTags = Seq("amenity"), keepFirst = false)
     val pivoted = q.runPivotTags(spark, world)
     assert(pivoted.columns.contains("amenity") && !pivoted.columns.contains("tags"))
-    val unpivoted = q.copy(pivot = false).runPivotTags(spark, world)
+    val unpivoted = q.copy(tags = None).run(spark, world)
     assert(unpivoted.columns.contains("tags"),
-      s"pivot=false must keep the map column: ${unpivoted.columns.toSeq}")
+      s"tags = None must keep the map column: ${unpivoted.columns.toSeq}")
     assert(!unpivoted.columns.contains("amenity"))
     // same rows, and element_at over the map equals the pivoted column
     val viaMap = unpivoted
@@ -220,16 +219,15 @@ class OsmQuerySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(viaMap === viaPivot && viaMap.nonEmpty)
     // and it is the escape hatch for real: a cap the pivoted form
-    // trips does not touch the unpivoted one (no key discovery runs)
+    // trips does not touch the unpivoted one (no key discovery runs),
+    // on both entry points
     spark.conf.set("spark.graft.pivot.maxKeys", "1")
     try {
       intercept[IllegalStateException] { q.runPivotTags(spark, world) }
-      assert(q.copy(pivot = false).runPivotTags(spark, world).count() > 0)
-      // BOTH pivot entry points honor the flag (review r19: the
-      // cached-datasource path initially didn't)
+      assert(q.copy(tags = None).run(spark, world).count() > 0)
       val ds = new OsmFile(spark, world)
       intercept[IllegalStateException] { ds.queryPivoted(q) }
-      val viaDs = ds.queryPivoted(q.copy(pivot = false))
+      val viaDs = ds.query(q.copy(tags = None))
       assert(viaDs.columns.contains("tags") && viaDs.count() > 0)
     } finally spark.conf.unset("spark.graft.pivot.maxKeys")
   }
