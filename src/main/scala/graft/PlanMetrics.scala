@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * end-to-end wall/CPU can't attribute cost inside a multi-job plan
   * (lazy localCheckpoint materializations each run as their own job,
   * invisible to final-plan metrics); a stage listener sees every stage
-  * with its callsite, executor CPU and shuffle volume.
+  * with its callsite, executor CPU and shuffle volume. It also prints
+  * the classes Spark compiled and the compile seconds of each rep.
   * sbt "runMain graft.PlanMetrics osm_big_buildings" */
 object PlanMetrics {
 
@@ -55,11 +56,15 @@ object PlanMetrics {
     args.toSeq.foreach { name =>
       println(s"\n========== $name ==========")
       // warmup rep: JIT + codegen, excluded from the recorded breakdown
+      val c0 = ProbeRig.codegen()
       SparkEntry.queries(name)(spark, sfDir).count()
+      val coldCodegen = ProbeRig.codegen() - c0
       graft.operators.Checkpoints.unpersistUnpinned(spark, blocking = true)
       rows.clear()
       record = true
+      val c1 = ProbeRig.codegen()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val warmCodegen = ProbeRig.codegen() - c1
       record = false
       Thread.sleep(500) // let the listener bus drain the last stage events
       println(s"rows=$n")
@@ -70,6 +75,10 @@ object PlanMetrics {
       val totCpu = rows.map(_.cpuMs).sum / 1000.0
       val totRun = rows.map(_.runMs).sum / 1000.0
       println(f"TOTAL executor run=$totRun%.2f s cpu=$totCpu%.2f s over ${rows.size} stages")
+      // classes compiled: a warm rep that still compiles has overflowed
+      // Spark's 100-class codegen cache
+      println(f"codegen_compiles=${warmCodegen.compiles} codegen_s=${warmCodegen.seconds}%.2f " +
+        f"(warmup rep: codegen_compiles=${coldCodegen.compiles} codegen_s=${coldCodegen.seconds}%.2f)")
       graft.operators.Checkpoints.unpersistUnpinned(spark, blocking = true)
     }
     spark.stop()

@@ -105,6 +105,20 @@ private[graft] object ProbeRig {
         spark.conf.set(k.trim, v.trim)
       })
 
+  /** Classes Spark's code generator has compiled in this JVM so far and
+    * the seconds spent compiling them; the difference of two readings
+    * is a phase's codegen churn. Spark's cache holds 100 classes, so a
+    * phase that recompiles on every repetition shows up here. */
+  final case class Codegen(compiles: Long, seconds: Double) {
+    def -(o: Codegen): Codegen = Codegen(compiles - o.compiles, seconds - o.seconds)
+    def json(prefix: String): String =
+      f""""${prefix}codegen_compiles":$compiles,"${prefix}codegen_s":$seconds%.2f"""
+  }
+
+  def codegen(): Codegen = Codegen(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
+
   /** Write `json` to /root/repo/bench/<fileName>; warn on stderr, never
     * fail the probe, on IO errors (`tag` prefixes the log lines). */
   def writeArtifact(fileName: String, json: String, tag: String): Unit =

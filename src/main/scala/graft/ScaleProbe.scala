@@ -135,6 +135,15 @@ object ScaleProbe {
     // converging to ~3.3 s; a min-of-2 run whose generation step was
     // skipped (warm file cache) reported 7.5 s for a plan whose steady
     // state is 3.5 s. A long-lived cluster never re-pays this warmup.
+    // per-phase codegen churn over all of a phase's repetitions, in
+    // phase order, for the record
+    val churn = scala.collection.mutable.LinkedHashMap.empty[String, ProbeRig.Codegen]
+    def phase[A](name: String)(f: => (A, Double)): (A, Double) = {
+      val c0 = ProbeRig.codegen()
+      val r = f
+      churn(name) = ProbeRig.codegen() - c0
+      r
+    }
     def timed[A](f: => A): (A, Double) = {
       var best = Double.MaxValue
       var r1: Option[A] = None
@@ -159,19 +168,19 @@ object ScaleProbe {
     val cpu0 = cpuNanos()
 
     val f = new graft.osm.OsmFile(spark, path)
-    val (info, tInfo) = timed(f.info())
-    val (nGeo, tGeo) = timed(f.geometry().count())
-    val (nPois, tPois) = timed(
-      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, path).count())
-    val (nTopo, tTopo) = timed(
+    val (info, tInfo) = phase("info_")(timed(f.info()))
+    val (nGeo, tGeo) = phase("geometry_cache_")(timed(f.geometry().count()))
+    val (nPois, tPois) = phase("pois_")(timed(
+      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, path).count()))
+    val (nTopo, tTopo) = phase("topology_")(timed(
       graft.osm.OsmQuery.highways.copy(geometry = true, topology = true)
-        .run(spark, path).count())
+        .run(spark, path).count()))
     // buildings incl. multipolygon assembly: the per-relation
     // sequential ring-chaining path (G3-G8) — 35k relations + 70k
     // closed ways at this scale, the one per-group-sequential operator
     // family that previously had no scale datapoint
-    val (nBldg, tBldg) = timed(
-      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, path).count())
+    val (nBldg, tBldg) = phase("buildings_")(timed(
+      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, path).count()))
 
     // multi-file phase: same world as 3 border-overlapping region files.
     // single-run timing: a raw file copy has no plan/codegen warmup for
@@ -185,19 +194,19 @@ object ScaleProbe {
     val mfDir = "/tmp/graft_marseille_multifile_v3"
     val (dupBlobs, tSplit) = timedOnce(splitPbf(path, mfDir, 3, 2))
     val fm = new graft.osm.OsmFile(spark, mfDir)
-    val (infoM, tInfoM) = timed(fm.info())
-    val (nPoisM, tPoisM) = timed(
-      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, mfDir).count())
-    val (nTopoM, tTopoM) = timed(
+    val (infoM, tInfoM) = phase("mf_info_")(timed(fm.info()))
+    val (nPoisM, tPoisM) = phase("mf_pois_")(timed(
+      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, mfDir).count()))
+    val (nTopoM, tTopoM) = phase("mf_topology_")(timed(
       graft.osm.OsmQuery.highways.copy(geometry = true, topology = true)
-        .run(spark, mfDir).count())
+        .run(spark, mfDir).count()))
     // relation assembly across a border-overlapping split: the border
     // dedup must keep exactly one copy of every member way / relation
     // blob or the per-relation chainer sees duplicate or missing
     // members — ScaleProbeSplitSpec pins this at mini scale only; this
     // is the at-volume gate (VERDICT r7 task 3)
-    val (nBldgM, tBldgM) = timed(
-      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, mfDir).count())
+    val (nBldgM, tBldgM) = phase("mf_buildings_")(timed(
+      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, mfDir).count()))
     val mfMatch = infoM("nodes") == info("nodes") && infoM("ways") == info("ways") &&
       nPoisM == nPois && nTopoM == nTopo && nBldgM == nBldg
     // parity_total_s: the reference's Marseille demo workload (info +
@@ -211,7 +220,7 @@ object ScaleProbe {
     // end-of-probe load includes this JVM's own 32 threads, so taint is
     // judged on the gated START load only; "load" stays in the record
     // as raw context
-    val line = f"""{"round":${Bench.roundNumber},"tainted":$loadTainted,"load_start":$loadStart%.2f,"max_load":$maxLoad%.1f,"gen_s":$tGen%.1f,"blobs":${info("blobs")},"nodes":${info("nodes")},"ways":${info("ways")},"info_s":$tInfo%.1f,"geometry_cache_rows":$nGeo,"geometry_cache_s":$tGeo%.1f,"pois_rows":$nPois,"pois_s":$tPois%.1f,"topology_rows":$nTopo,"topology_s":$tTopo%.1f,"buildings_rows":$nBldg,"buildings_s":$tBldg%.1f,"parity_total_s":$parityTotal%.1f,"cpu_total_s":$cpuTotal%.1f,"load":$load%.2f,"mf_files":3,"mf_dup_blobs":$dupBlobs,"mf_split_s":$tSplit%.1f,"mf_info_s":$tInfoM%.1f,"mf_pois_s":$tPoisM%.1f,"mf_topology_s":$tTopoM%.1f,"mf_buildings_s":$tBldgM%.1f,"mf_results_match":$mfMatch}"""
+    val line = f"""{"round":${Bench.roundNumber},"tainted":$loadTainted,"load_start":$loadStart%.2f,"max_load":$maxLoad%.1f,"gen_s":$tGen%.1f,"blobs":${info("blobs")},"nodes":${info("nodes")},"ways":${info("ways")},"info_s":$tInfo%.1f,"geometry_cache_rows":$nGeo,"geometry_cache_s":$tGeo%.1f,"pois_rows":$nPois,"pois_s":$tPois%.1f,"topology_rows":$nTopo,"topology_s":$tTopo%.1f,"buildings_rows":$nBldg,"buildings_s":$tBldg%.1f,"parity_total_s":$parityTotal%.1f,"cpu_total_s":$cpuTotal%.1f,"load":$load%.2f,"mf_files":3,"mf_dup_blobs":$dupBlobs,"mf_split_s":$tSplit%.1f,"mf_info_s":$tInfoM%.1f,"mf_pois_s":$tPoisM%.1f,"mf_topology_s":$tTopoM%.1f,"mf_buildings_s":$tBldgM%.1f,"mf_results_match":$mfMatch,${churn.map { case (k, c) => c.json(k) }.mkString(",")}}"""
     println(line)
     // committed per-round artifact (VERDICT r9 task 3): scale tracking
     // must not depend on README prose diffs or the stdout window —

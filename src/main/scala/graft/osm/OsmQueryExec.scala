@@ -15,11 +15,13 @@ import graft.geom.Wkb.Coord
   * skipping.
   *
   * Scale notes (the node-coordinate join is THE critical join, SURVEY
-  * §7.3 risk 1): way assembly shuffles `posexplode(refs)` against the
-  * node table on node id — a plain equi-join that AQE can re-plan;
-  * per-way/per-relation assembly then uses `groupByKey.mapGroups`,
-  * whose groups are bounded by OSM data (ways ≤ 2000 nodes, relation
-  * member lists are small), so no group can blow an executor.
+  * §7.3 risk 1): every geometry query assembles its ways through one
+  * shared plan ([[GeometryBuilder.waySequences]]) that joins the
+  * exploded refs to the node table with a measured broadcast vs
+  * shuffle_hash choice; per-way and per-relation walks then run over
+  * key-sorted partitions, whose groups are bounded by OSM data (ways
+  * ≤ 2000 nodes, relation member lists are small), so no group can
+  * blow an executor.
   */
 object OsmQueryExec {
 
@@ -246,9 +248,13 @@ object OsmQueryExec {
     * before assembly. */
   def relGeomClass(tags: Column, members: Column,
       expandSuperRelations: Boolean = false): Column = {
+    // min/max and array_contains over the member types instead of a
+    // higher-order `exists`: that lambda is interpreted (CodegenFallback)
+    // and would take the whole relation Filter out of whole-stage codegen
+    val mtypes = members.getField("mtype")
     val disqualified =
-      if (expandSuperRelations) exists(members, m => m.getField("mtype") === TypeNode)
-      else exists(members, m => m.getField("mtype") =!= TypeWay)
+      if (expandSuperRelations) array_contains(mtypes, lit(TypeNode))
+      else array_min(mtypes) =!= TypeWay || array_max(mtypes) =!= TypeWay
     val t = try_element_at(tags, lit("type"))
     when(size(members) === 0 || disqualified, 0)
       .when(t.isin(RelationLine.map(v => v: Any): _*), 2)
@@ -398,12 +404,13 @@ object OsmQueryExec {
 
     val nodes = all.filter(col("type") === TypeNode)
       .select(col("id").as("nid"), col("lon"), col("lat"))
-    // the walk and the attribute projection read the ways through two
-    // pruned scans: sharing one checkpoint of the filtered ways was
-    // measured 2x slower at 7M nodes (OPTIMIZATION_r22.md)
+    // topology's attribute rows come from a second, refs-free scan of
+    // the ways passing the tag predicate: sharing one checkpoint of the
+    // filtered ways was measured 2x slower at 7M nodes
+    // (OPTIMIZATION_r22.md)
     val result =
       if (q.topology) Topology.build(spark, el,
-        all.filter(col("type") === TypeWay && mustPredicate(q, col("tags"))), nodes)
+        all.filter(col("type") === TypeWay && tagPredicate(q, col("tags"))), nodes)
       else if (q.geometry) GeometryBuilder.build(spark, all, el, q, nodes)
       else el
 
@@ -500,9 +507,9 @@ object GeometryBuilder {
   /** Attach node coordinates to exploded (…, ref) way-ref rows —
     * the geometry path's one big join — choosing the strategy from the
     * MEASURED exploded size, not an estimate. The exploded rows are
-    * lazily localCheckpoint'ed (the count() here is the materializing
-    * action, and the join consumes the same blocks — nothing runs
-    * twice), then:
+    * lazily localCheckpoint'ed (counting the checkpointed RDD is the
+    * materializing action, and the join consumes the same blocks —
+    * nothing runs twice), then:
     *  - small side (≤ `broadcastRows`, default [[RefsBroadcastRows]]):
     *    BROADCAST the refs. This removes BOTH exchanges — the
     *    multi-million-row node table streams straight
@@ -533,187 +540,212 @@ object GeometryBuilder {
     *
     * @param broadcastRows tests pass 0 to force the shuffle_hash side */
   private[osm] def coordJoin(exploded: DataFrame, nodes: DataFrame,
-      broadcastRows: Long = RefsBroadcastRows): DataFrame = {
+      broadcastRows: Long = RefsBroadcastRows): DataFrame =
+    measuredCoordJoin(exploded, nodes, broadcastRows)._1
+
+  /** [[coordJoin]], plus the checkpointed exploded rows it joined and
+    * whether it took the broadcast side. */
+  private def measuredCoordJoin(exploded: DataFrame, nodes: DataFrame,
+      broadcastRows: Long): (DataFrame, DataFrame, Boolean) = {
     val expC = exploded.localCheckpoint(eager = false)
-    if (expC.count() <= broadcastRows) broadcast(expC).join(nodes, col("ref") === col("nid"))
-    else expC.hint("shuffle_hash").join(nodes, col("ref") === col("nid"))
+    // count the checkpointed RDD itself: a `count()` query would plan
+    // (and compile) two aggregation stages just to size the join
+    val rows = expC.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.count()
+      case _ => expC.count()
+    }
+    val small = rows <= broadcastRows
+    val joined =
+      if (small) broadcast(expC).join(nodes, col("ref") === col("nid"))
+      else expC.hint("shuffle_hash").join(nodes, col("ref") === col("nid"))
+    (joined, expC, small)
   }
 
-  /** @param el filtered elements (nodes/ways/relations per query)
+  /** The way-sequence assembly every geometry consumer shares (pois,
+    * highways, buildings and topology): `(id, refs)` in, one
+    * `(wid, refs, xs, ys)` row per input way with refs out, where
+    * `xs(i)`/`ys(i)`
+    * are the coordinates of node `refs(i)`, NaN where that node is
+    * missing from the extract.
+    *
+    * Its input is cut off by [[coordJoin]]'s narrow `localCheckpoint` of
+    * the exploded `(wid, pos, ref)` rows, so every plan above it (the
+    * coordinate join and the per-way walk) reads the same three-column
+    * RDD whatever query feeds it: their generated classes are
+    * byte-identical across queries and Spark's codegen cache compiles
+    * them once per session. The walk takes the refs from the exploded
+    * rows and the coordinates from the joined ones, so a ref whose node
+    * the inner coordinate join dropped still keeps its position. The
+    * result is a lazy `localCheckpoint` too: buildings reads it twice.
+    *
+    * @return the sequences and whether they are small enough (by the
+    *   measured exploded-ref count) to broadcast into a consumer join */
+  private[osm] def waySequences(ways: DataFrame, nodes: DataFrame,
+      broadcastRows: Long = RefsBroadcastRows): (DataFrame, Boolean) = {
+    val spark = ways.sparkSession
+    import spark.implicits._
+    val (joined, expC, small) = measuredCoordJoin(
+      ways.select(col("id").as("wid"), posexplode(col("refs")).as(Seq("pos", "ref"))),
+      nodes, broadcastRows)
+    val refRows = expC.select(col("wid"), col("pos"), col("ref"),
+      lit(Double.NaN).as("lon"), lit(Double.NaN).as("lat"))
+    val seqs = refRows.union(joined.select(col("wid"), col("pos"), col("ref"), col("lon"), col("lat")))
+      .repartition(col("wid"))
+      .sortWithinPartitions("wid", "pos")
+      .as[(Long, Int, Long, Double, Double)]
+      .mapPartitions(it => keyRuns(it)(_._1).map { rows =>
+        // every position has its ref row; a present node adds one
+        // coordinate row at the same position
+        val n = rows.last._2 + 1
+        val refs = new Array[Long](n)
+        val xs = Array.fill(n)(Double.NaN)
+        val ys = Array.fill(n)(Double.NaN)
+        rows.foreach { r =>
+          refs(r._2) = r._3
+          if (!r._4.isNaN) { xs(r._2) = r._4; ys(r._2) = r._5 }
+        }
+        (rows.head._1, refs, xs, ys)
+      })
+      .toDF("wid", "refs", "xs", "ys")
+      .localCheckpoint(eager = false)
+    (seqs, small)
+  }
+
+  /** Points (G1), way linestrings/polygons (G2/G3) and relation
+    * geometry (G5-G8) in ONE final plan: the filtered elements
+    * left-join the way sequences and the assembled relations on
+    * (type, id), and one codegen'd expression per type builds the WKB.
+    * One scan branch and one join, instead of a union of per-type
+    * branches, keeps the query-specific plan to a few compiled stages.
+    *
+    * @param el filtered elements (nodes/ways/relations per query)
     * @param nodes full node coordinate table (nid, lon, lat) */
   def build(spark: SparkSession, all: DataFrame, el: DataFrame, q: OsmQuery,
       nodes: DataFrame): DataFrame = {
     import spark.implicits._
 
-    val carry = Seq("id", "type", "tags", "version", "timestamp", "changeset")
+    val out = Seq("id", "type", "tags", "version", "timestamp", "changeset").map(col) :+
+      col("geometry") :+ col("geom_type")
+    val isNode = col("type") === TypeNode
+    val isWay = col("type") === TypeWay
 
-    // Only plan the branches the query selects — each branch triggers
-    // its own (pruned) scans, so an unused branch is pure waste.
-    val branches = ArrayBuffer.empty[DataFrame]
-
-    // G1 — node points: pure expression, no shuffle at all
-    if (q.nodes) branches += el.filter(col("type") === TypeNode)
+    // G1 alone: a pure expression, no join at all
+    if (!q.ways && !q.relations) return el
       .withColumn("geometry", pointWkb(col("lon"), col("lat")))
       .withColumn("geom_type", lit("Point"))
-      .select(carry.map(col) :+ col("geometry") :+ col("geom_type"): _*)
+      .select(out: _*)
 
-    // G2/G3 — way geometry: explode refs, join coords, assemble per way.
-    // repartition + sortWithinPartitions + a streaming per-way walk
-    // does the same grouping as groupByKey with one sort and no
-    // per-group iterator machinery (same pattern as Topology.build —
-    // way size is bounded by the 2000-node OSM cap, so a run always
-    // fits in memory). The coordinate join's strategy (broadcast the
-    // refs vs shuffle_hash) is chosen from the measured exploded size
-    // in [[coordJoin]].
-    if (q.ways || q.relations) {
-    val ways = el.filter(col("type") === TypeWay)
+    // the relation path consumes the filtered elements several times;
+    // they are small by construction (elements passing the query's
+    // must filter), so a lazy local checkpoint decodes them once
+    val elG = if (q.relations) el.localCheckpoint(eager = false) else el
+    val elWays = elG.filter(isWay)
 
-    if (!q.relations) {
-      // ways-only query: explode the filtered ways' own refs directly.
-      // The filtered ways also feed the final attribute join — a
-      // second pruned scan (refs pruned off it), deliberately NOT a
-      // shared checkpoint: the topoShare A/B at the 7M probe showed
-      // materializing near-corpus way rows costs more than the pruned
-      // re-decode (see the topology note in OsmQueryExec.run).
-      val wayGeoms: DataFrame = {
-        val exploded = coordJoin(
-          ways.withColumn("is_area", wayIsArea(col("tags"), col("refs")))
-            .select(col("id"), col("is_area"), posexplode(col("refs")).as(Seq("pos", "ref"))),
-          nodes)
-          .select(col("id"), col("is_area"), col("pos"), col("lon"), col("lat"))
-        exploded.as[(Long, Boolean, Int, Double, Double)]
-          .repartition(col("id"))
-          .sortWithinPartitions("id", "pos")
-          .mapPartitions(it => keyRuns(it)(_._1).map { rows =>
-            val wid = rows.head._1
-            val coords = rows.map(r => Coord(r._4, r._5)).toSeq
-            if (rows.head._2) {
-              val ring = if (coords.head == coords.last) coords else coords :+ coords.head
-              GeomRow(wid, Wkb.polygon(Seq(ring)), "Polygon")
-            } else GeomRow(wid, Wkb.lineString(coords), "LineString")
-          })
-          .toDF("id", "geometry", "geom_type")
-      }
-      branches += ways.drop("geometry", "geom_type")
-        .join(wayGeoms.withColumnRenamed("id", "gid"), col("id") === col("gid"))
-        .select(carry.map(col) :+ col("geometry") :+ col("geom_type"): _*)
-    } else {
-    // G5-G8 — relation geometry via member-way expansion (J3: a second
-    // pruned scan of ways replaces the reference's second query pass,
-    // reference osmdata.py:194-206).
-    // The filtered-element table is consumed ~5× on this path (way
-    // areas, way rows, wanted ids, members, relation rows) and each
-    // consumer re-executes the must-tag scan; it is small by
-    // construction (elements passing the query's must filter), so a
-    // lazy local checkpoint decodes it once.
-    val elC = el.localCheckpoint(eager = false)
-    val elWays = elC.filter(col("type") === TypeWay)
-    val rels = elC.filter(col("type") === TypeRelation)
-      .withColumn("gclass",
-        relGeomClass(col("tags"), col("members"), q.expandSuperRelations))
-    val geomRels = rels.filter(col("gclass").isin(2, 3))
-
-    val exploded = geomRels
-      .select(col("id").as("rel_id"), col("gclass"),
-        posexplode(col("members")).as(Seq("mpos", "m")))
-    val members =
+    // G5-G8 member ways of the geometry relations (J3: a second pruned
+    // scan of all ways replaces the reference's second query pass,
+    // reference osmdata.py:194-206)
+    val members: Option[DataFrame] = if (!q.relations) None else Some {
+      val exploded = elG.filter(col("type") === TypeRelation)
+        .withColumn("gclass",
+          relGeomClass(col("tags"), col("members"), q.expandSuperRelations))
+        .filter(col("gclass").isin(2, 3))
+        .select(col("id").as("rel_id"), col("gclass"),
+          posexplode(col("members")).as(Seq("mpos", "m")))
       if (!q.expandSuperRelations)
         exploded.filter(col("m.mtype") === TypeWay)
           .select(col("rel_id"), col("gclass"), col("mpos"),
             col("m.role").as("role"), col("m.ref").as("wref"))
       else expandMembers(exploded, all, q.superRelationDepth)
-
-    // member ways may be outside the filtered set → unfiltered way pass
-    // over the same source (a pruned re-scan, or free if persisted)
-    val allWays = all
-      .filter(col("type") === TypeWay)
-      .select(col("id").as("wid"), col("refs"))
-
-    // distinct member-way ids, shared by the semi-join below and the
-    // J6 anti-join (one plan, not two copies of the explode+distinct)
-    val memberWayIds = members.select(col("wref")).distinct()
-
-    // ONE ordered-node-sequence build serves BOTH the standalone-way
-    // WKB and the relation member assembly: the former plan ran the
-    // explode ⋈ nodes ⋈ walk pipeline twice (el ways and member ways
-    // separately), which cost a second full node-table scan + shuffle
-    // — the single most expensive stage of the buildings query at the
-    // 7M-node probe. Ids are the union of the filtered ways and the
-    // members; refs come from the shared unfiltered way pass. The
-    // result is lazily localCheckpoint'ed below: two consumers of one
-    // DataFrame otherwise re-execute its whole subtree (Catalyst does
-    // not reliably reuse the exchange across the branches — measured
-    // 55 CPU-s vs 35 without the checkpoint at the 2M world), and the
-    // checkpointed table is tiny (one row per wanted way, arrays
-    // bounded by the 2000-node OSM way cap).
-    val wantedWayIds = memberWayIds.select(col("wref").as("wwid"))
-      .union(elWays.select(col("id").as("wwid")))
-      .distinct()
-
-    val waySeqs = coordJoin(
-      allWays
-        .join(wantedWayIds, col("wid") === col("wwid"), "left_semi")
-        .select(col("wid"), posexplode(col("refs")).as(Seq("pos", "ref"))),
-      nodes)
-      .select(col("wid"), col("pos"), col("ref"), col("lon"), col("lat"))
-      .as[(Long, Int, Long, Double, Double)]
-      .repartition(col("wid"))
-      .sortWithinPartitions("wid", "pos")
-      .mapPartitions(it => keyRuns(it)(_._1).map { rows =>
-        (rows.head._1, rows.map(_._3).toArray, rows.map(_._4).toArray, rows.map(_._5).toArray)
-      })
-      .toDF("wid", "node_ids", "xs", "ys")
-      .localCheckpoint(eager = false)
-
-    // standalone way WKB from the shared sequences (R7 is_area joined
-    // from the filtered ways; a narrow map — same bytes as the direct
-    // path's walk, pinned by the mini-world WKB oracle)
-    val wayGeoms = elWays
-      .select(col("id").as("aid"), wayIsArea(col("tags"), col("refs")).as("is_area"))
-      .join(waySeqs, col("aid") === col("wid"))
-      .select(col("aid"), col("is_area"), col("xs"), col("ys"))
-      .as[(Long, Boolean, Array[Double], Array[Double])]
-      .map { case (wid, isArea, xs, ys) =>
-        val coords = xs.indices.map(i => Coord(xs(i), ys(i)))
-        if (isArea) {
-          val ring = if (coords.head == coords.last) coords else coords :+ coords.head
-          GeomRow(wid, Wkb.polygon(Seq(ring)), "Polygon")
-        } else GeomRow(wid, Wkb.lineString(coords), "LineString")
-      }
-      .toDF("id", "geometry", "geom_type")
-    val wayRows = elWays.drop("geometry", "geom_type")
-      .join(wayGeoms.withColumnRenamed("id", "gid"), col("id") === col("gid"))
-      .select(carry.map(col) :+ col("geometry") :+ col("geom_type"): _*)
-
-    val memberWays = members
-      .join(waySeqs, col("wref") === col("wid"))
-      .select(col("rel_id"), col("gclass"), col("mpos"), col("role"),
-        col("node_ids"), col("xs"), col("ys"))
-
-    val relGeoms = memberWays
-      .as[(Long, Int, Int, String, Array[Long], Array[Double], Array[Double])]
-      .repartition(col("rel_id"))
-      .sortWithinPartitions("rel_id", "mpos")
-      .mapPartitions(it => keyRuns(it)(_._1).map { ms =>
-        assembleRelation(ms.head._1, ms.head._2,
-          ms.map(m => Member(m._4, m._5, m._6, m._7)).toArray)
-      })
-      .toDF("id", "geometry", "geom_type")
-
-    val relRows = geomRels.drop("gclass")
-      .join(relGeoms.withColumnRenamed("id", "gid"), col("id") === col("gid"))
-      .select(carry.map(col) :+ col("geometry") :+ col("geom_type"): _*)
-
-    // J6 — drop standalone result ways that are members of result
-    // geometry relations (reference _frame.py:27-28 anti-join)
-    if (q.ways)
-      branches += wayRows.join(memberWayIds,
-        wayRows("id") === memberWayIds("wref"), "left_anti")
-    branches += relRows
-    }
     }
 
-    branches.reduce(_.unionByName(_))
+    // ONE sequence build serves the standalone ways and the relation
+    // members; member ways may be outside the filtered set, so their
+    // refs come from an unfiltered way pass over the same source
+    val wayRefs = members match {
+      case None => elWays.select(col("id"), col("refs"))
+      case Some(ms) =>
+        // the wanted way ids in one pass over the elements when the
+        // members are the direct ones: each way itself, each geometry
+        // relation's way members
+        val wanted =
+          if (q.expandSuperRelations) ms.select(col("wref").as("wanted"))
+            .union(elWays.select(col("id").as("wanted")))
+          else elG.select(col("type"), col("id"), explode_outer(col("members")).as("m"),
+              relGeomClass(col("tags"), col("members")).as("gclass"))
+            .filter(isWay || (col("gclass").isin(2, 3) && col("m.mtype") === TypeWay))
+            .select(when(isWay, col("id")).otherwise(col("m.ref")).as("wanted"))
+        all.filter(isWay).select(col("id"), col("refs"))
+          .join(wanted, col("id") === col("wanted"), "left_semi")
+    }
+    val (seqsRaw, small) = waySequences(wayRefs, nodes)
+    // renamed once so the way and member joins broadcast the very same
+    // plan (one reused exchange) without clashing with the elements' refs
+    val seqs = seqsRaw.withColumnRenamed("refs", "seq_refs")
+    def maybeBroadcast(df: DataFrame) = if (small) broadcast(df) else df
+
+    // G5-G8 per-relation assembly over the member ways' sequences. Per
+    // relation the walk emits its geometry row (gtype relation) and one
+    // J6 row per member way (gtype way, no geometry): a way that is a
+    // member of a result geometry relation is not a standalone result
+    // (reference _frame.py:27-28 anti-join), so a way row matching one
+    // is dropped below — the member set is never built twice
+    val relRows = members.map { ms =>
+      ms.join(maybeBroadcast(seqs), col("wref") === col("wid"))
+        .select(col("rel_id"), col("gclass"), col("mpos"), col("role"),
+          col("wref"), col("seq_refs"), col("xs"), col("ys"))
+        .as[(Long, Int, Int, String, Long, Array[Long], Array[Double], Array[Double])]
+        .repartition(col("rel_id"))
+        .sortWithinPartitions("rel_id", "mpos")
+        .mapPartitions(it => keyRuns(it)(_._1).flatMap { ms =>
+          // members whose nodes are all missing from the extract
+          // contribute nothing; a relation left without members has no
+          // geometry
+          val present = ms.iterator.map(m => presentMember(m._4, m._6, m._7, m._8))
+            .filter(_.nodeIds.nonEmpty).toArray
+          val rel = if (present.isEmpty) None else {
+            val g = assembleRelation(ms.head._1, ms.head._2, present)
+            Some((TypeRelation, g.id, g.geometry, g.geom_type))
+          }
+          rel.iterator ++ ms.iterator.map(m => (TypeWay, m._5, null: Array[Byte], null: String))
+        })
+        .toDF("gtype", "gid", "rgeom", "rtype")
+    }
+
+    val withWays = elG.join(maybeBroadcast(seqs), isWay && col("id") === col("wid"), "left")
+    val joined = relRows.fold(withWays)(rr => withWays.join(maybeBroadcast(rr),
+      col("type") === col("gtype") && col("id") === col("gid"), "left"))
+    val (rgeom, rtype, standalone) =
+      if (q.relations) (col("rgeom"), col("rtype"), col("gid").isNull)
+      else (lit(null).cast("binary"), lit(null).cast("string"), lit(true))
+    // a way none of whose nodes is in the extract has no geometry
+    // (array_min is NaN only when every coordinate is)
+    val firstX = array_min(col("xs"))
+    // the sequence's refs are the way's own: reading them here (not the
+    // elements' refs) keeps both broadcasts of `seqs` one plan
+    val isArea = wayIsArea(col("tags"), col("seq_refs"))
+    joined
+      .filter(isNode || (isWay && standalone && firstX.isNotNull && !isnan(firstX)) ||
+        rgeom.isNotNull)
+      .withColumn("geometry", when(isNode, pointWkb(col("lon"), col("lat")))
+        .when(isWay, wayWkb(col("xs"), col("ys"), isArea))
+        .otherwise(rgeom))
+      .withColumn("geom_type", when(isNode, lit("Point"))
+        .when(isWay, when(isArea, lit("Polygon")).otherwise(lit("LineString")))
+        .otherwise(rtype))
+      .select(out: _*)
+  }
+
+  /** A relation member's vertices with the nodes missing from the
+    * extract dropped. */
+  private def presentMember(role: String, refs: Array[Long], xs: Array[Double],
+      ys: Array[Double]): Member = {
+    val keep = xs.indices.filter(i => !xs(i).isNaN).toArray
+    Member(role, keep.map(refs), keep.map(xs), keep.map(ys))
+  }
+
+  private def wayWkb(xs: Column, ys: Column, area: Column): Column = {
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    column(graft.functions.WayWkb(expression(xs), expression(ys), expression(area)))
   }
 
   /** WKB point via the native codegen'd [[graft.functions.PointWkb]]
@@ -837,43 +869,41 @@ object Topology {
   /** @param el filtered elements — the ways whose chains are walked
     * @param attrs attribute rows for the final per-segment projection:
     *   a SUPERSET of el's ways from the same scan — the ways passing the
-    *   query's must-tag conjunct, without the keep/exclude/size/id
-    *   predicates (the inner join on segment way ids re-implies them
-    *   exactly). Leaving `refs` unused there lets Catalyst prune it off
-    *   that second pbf scan — only the walk branch decodes refs.
+    *   query's tag predicate, without the size/id predicates (the inner
+    *   join on segment way ids re-implies them exactly). Leaving `refs`
+    *   unused there lets Catalyst prune it off that second pbf scan —
+    *   only the walk branch decodes refs. Since the tag predicate is the
+    *   walk's own, a second copy of a way id that fails it (malformed
+    *   input) is not attached either, so no dedup aggregate is needed.
     * @param nodes full node coordinate table (nid, lon, lat) */
   def build(spark: SparkSession, el: DataFrame, attrs: DataFrame,
       nodes: DataFrame): DataFrame = {
     import spark.implicits._
 
-    val ways = el.filter(col("type") === graft.sources.OsmPbfSource.TypeWay)
-    val exploded = ways
-      .select(col("id").as("way"), posexplode(col("refs")).as(Seq("pos", "node")))
+    // coordinates from the sequence assembly every geometry query
+    // shares: missing nodes are NaN at their position, so they keep
+    // their rows — and their junction flag — and the walk splits at
+    // them but drops them from segment geometry: no segment ever spans
+    // a missing junction
+    val (seqs, small) = GeometryBuilder.waySequences(
+      el.filter(col("type") === graft.sources.OsmPbfSource.TypeWay), nodes)
 
-    // junction = node occurring more than once across all exploded rows
-    // (reference _frame.py:272 pandas duplicated(keep=False)). One
-    // aggregation on `node` carries BOTH the degree count and the
-    // (way, pos) occurrence list, so the coordinate lookup (J1) joins
-    // at distinct-node volume (~0.6x the exploded rows on real road
-    // networks) and the exploded table is never joined or re-read —
-    // the former exploded ⋈ nodesPlus join at full exploded volume was
-    // the single most expensive stage of this plan at the 7M-node
-    // probe scale. Occurrence lists are bounded by node degree (a
-    // handful even at junctions), so collect_list cannot skew.
-    // LEFT join so refs to nodes absent from the extract (clipped
-    // extracts) keep their rows — and their junction flag — with NaN
-    // coordinates; the walk splits at them but drops them from segment
-    // geometry, so no segment ever spans a missing junction.
-    val byNode = exploded.groupBy("node").agg(
-      collect_list(struct(col("way"), col("pos"))).as("wps"))
-    val rows = byNode.join(nodes, col("node") === col("nid"), "left")
-      .select(col("node"),
-        coalesce(col("lon"), lit(Double.NaN)).as("lon"),
-        coalesce(col("lat"), lit(Double.NaN)).as("lat"),
-        (size(col("wps")) >= 2).as("junction"),
-        explode(col("wps")).as("wp"))
-      .select(col("wp.way").as("way"), col("wp.pos").as("pos"),
-        col("node"), col("lon"), col("lat"), col("junction"))
+    // junction = node occurring more than once across all the ways'
+    // refs (reference _frame.py:272 pandas duplicated(keep=False)): a
+    // per-node count, joined back onto the exploded sequences (a
+    // broadcast when the measured sequences are: there are at most half
+    // as many junctions as refs)
+    val junctions = seqs.select(explode(col("refs")).as("jnode"))
+      .groupBy("jnode").count()
+      .filter(col("count") >= 2)
+      .select(col("jnode"))
+    val rows = seqs
+      .select(col("wid").as("way"),
+        posexplode(arrays_zip(col("refs"), col("xs"), col("ys"))).as(Seq("pos", "v")))
+      .join(if (small) broadcast(junctions) else junctions,
+        col("v.refs") === col("jnode"), "left")
+      .select(col("way"), col("pos"), col("v.refs").as("node"),
+        col("v.xs").as("lon"), col("v.ys").as("lat"), col("jnode").isNotNull.as("junction"))
 
     // One shuffle on `way` replaces the former window + junction-row
     // explode + per-segment regroup: a way is ≤ 2000 nodes (OSM cap),
@@ -917,14 +947,6 @@ object Topology {
       })
       .toDF("way", "seg_ix", "source", "target", "geometry", "geom_type")
 
-    // dropDuplicates guards the malformed-input edge where one FILE
-    // carries the same way id twice and only one copy passes the tag
-    // filter — without it the unfiltered attrs side would attach both
-    // copies. Arbitrary-wins is exact for the normal identical-copy
-    // case (same doctrine as dedupMultiFile), and the aggregate lands
-    // on the join's own hash(id) exchange, so it costs no extra shuffle.
-    attrs.dropDuplicates("id")
-      .join(segGeoms, attrs("id") === segGeoms("way"))
-      .drop("way")
+    attrs.join(segGeoms, attrs("id") === segGeoms("way")).drop("way")
   }
 }

@@ -6,8 +6,9 @@ import graft.sources.SparkTestSession
 import graft.pbf.OsmPbfWriter._
 
 /** Plan-shape pins for the topology dataflow: the expensive properties
-  * (refs decoded on exactly one scan branch, the exploded table
-  * aggregated before the coordinate join) are cheap to destroy with an
+  * (refs decoded on exactly one scan branch, coordinates joined by
+  * the shared way-sequence assembly instead of a node-table shuffle)
+  * are cheap to destroy with an
   * innocent-looking edit, and only visible at probe scale — so the
   * optimized shape is asserted here at fixture scale. */
 class TopologyPlanSpec extends AnyFunSuite {
@@ -26,11 +27,14 @@ class TopologyPlanSpec extends AnyFunSuite {
 
   test("refs are decoded on exactly one scan branch (walk), not the attribute join") {
     // two pruned scans — measured at the 7M probe to beat a shared
-    // near-corpus checkpoint (OPTIMIZATION_r22.md)
-    val df = OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world)
-    val scanCols = df.queryExecution.optimizedPlan.collect {
+    // near-corpus checkpoint (OPTIMIZATION_r22.md). The walk's scan sits
+    // behind the way-sequence checkpoint, so scans are collected from
+    // every execution the query runs.
+    val scanCols = PlanCapture.executions(spark) {
+      OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world).collect()
+    }.flatMap(_.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan.readSchema().fieldNames.toSet
-    }
+    })
     val withRefs = scanCols.filter(_.contains("refs"))
     assert(withRefs.size === 1,
       s"expected refs on exactly one scan (the chain walk); got:\n  ${scanCols.mkString("\n  ")}")
@@ -39,13 +43,18 @@ class TopologyPlanSpec extends AnyFunSuite {
       s"expected a refs-free attribute scan; got:\n  ${scanCols.mkString("\n  ")}")
   }
 
-  test("the coordinate join input aggregates exploded pairs per node (no join at exploded volume)") {
-    val df = OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world)
-    val plan = df.queryExecution.optimizedPlan.toString
-    // the per-node occurrence list must be built BELOW the node join:
-    // collect_list appears as an aggregate whose result feeds the join
-    assert(plan.contains("collect_list"),
-      s"expected the per-node (way, pos) aggregation in the plan:\n$plan")
+  test("coordinates come from the shared way sequences, not a node-table shuffle") {
+    val plans = PlanCapture.executions(spark) {
+      OsmQuery.highways.copy(geometry = true, topology = true).run(spark, world).collect()
+    }.flatMap(PlanCapture.operators)
+    // no sort-merge join against the node table, and none of the
+    // aggregates that run outside whole-stage codegen
+    val names = plans.map(_.nodeName).toSet
+    Seq("SortMergeJoin", "ObjectHashAggregate", "SortAggregate").foreach { op =>
+      assert(!names.contains(op), s"unexpected $op in the topology plans: $names")
+    }
+    // the coordinate join streams the node table into the broadcast refs
+    assert(names.contains("BroadcastHashJoin"), s"no broadcast coordinate join: $names")
   }
 
   test("the shape change preserves results (segments + junction split)") {
