@@ -119,11 +119,16 @@ private[graft] object ProbeRig {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
 
-  /** Write `json` to /root/repo/bench/<fileName>; warn on stderr, never
-    * fail the probe, on IO errors (`tag` prefixes the log lines). */
+  /** `name` under `java.io.tmpdir`: where probes keep generated worlds. */
+  def tmpPath(name: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"), name).getPath
+
+  /** Write `json` to bench/<fileName> under the working directory (the
+    * checkout sbt runs from); warn on stderr, never fail the probe, on
+    * IO errors (`tag` prefixes the log lines). */
   def writeArtifact(fileName: String, json: String, tag: String): Unit =
     try {
-      val dir = new java.io.File("/root/repo/bench")
+      val dir = new java.io.File(System.getProperty("user.dir"), "bench")
       dir.mkdirs()
       val f = new java.io.File(dir, fileName)
       val w = new java.io.PrintWriter(f, "UTF-8")

@@ -123,7 +123,7 @@ object ScaleProbe {
     // _v3: building-tagged inner rings + forest multipolygons — same
     // versioning rule as OsmQueries.BigPath (ensure() only checks
     // existence)
-    val path = "/tmp/graft_marseille_scale_v3.osm.pbf"
+    val path = ProbeRig.tmpPath("graft_marseille_scale_v3.osm.pbf")
     val t0 = System.nanoTime()
     graft.pbf.BigWorld.ensure(path, 7000000, 700000)
     val tGen = (System.nanoTime() - t0) / 1e9
@@ -191,7 +191,7 @@ object ScaleProbe {
       val r = f
       (r, (System.nanoTime() - s) / 1e9)
     }
-    val mfDir = "/tmp/graft_marseille_multifile_v3"
+    val mfDir = ProbeRig.tmpPath("graft_marseille_multifile_v3")
     val (dupBlobs, tSplit) = timedOnce(splitPbf(path, mfDir, 3, 2))
     val fm = new graft.osm.OsmFile(spark, mfDir)
     val (infoM, tInfoM) = phase("mf_info_")(timed(fm.info()))

@@ -98,7 +98,7 @@ object OsmQueryExec {
     * Border-range split (VERDICT r21 task 4, guide §2.5 hot-key split +
     * §6 pushdown): a (type, id) key present in ≥ 2 files necessarily
     * lies inside the pairwise INTERSECTION of those files' per-type id
-    * spans — plan-time metadata from the cached per-blob stats walk.
+    * spans — plan-time metadata from the cached blob summaries.
     * Rows outside every intersection are globally unique and PASS
     * THROUGH with no exchange; only rows inside the border intervals
     * are re-scanned (a second scan whose `idRanges` option prunes to
@@ -130,34 +130,22 @@ object OsmQueryExec {
   }
 
   /** Cross-file border intervals per type, merged: the pairwise
-    * intersections of the files' per-type id spans (derived from the
-    * cached per-blob stats walk — driver metadata, no element decode).
-    * Empty ⇔ the files' id spaces are disjoint for every type ⇔ no
-    * key can be duplicated. Also returns the fraction of blobs the
-    * intervals touch, by the shared blob intersection predicate the
-    * border scan prunes with, so the two can never diverge. */
+    * intersections of the files' per-type id spans (each file's span
+    * is the sum of its cached blob summaries — driver metadata, no
+    * element decode). Empty ⇔ the files' id spaces are disjoint for
+    * every type ⇔ no key can be duplicated. Also returns the fraction
+    * of blobs the intervals touch, by the shared blob intersection
+    * predicate the border scan prunes with, so the two can never
+    * diverge. */
   private[osm] def borderRanges(path: String): (Seq[(Int, Long, Long)], Double) = {
-    val blobs = graft.pbf.OsmPbfFile.indexAll(path)
-    val rngs = graft.sources.OsmPbfStats.ranges(path, blobs)
-    val perFile = blobs.zip(rngs).groupBy(_._1.path).values.map { xs =>
-      val acc = Array(Long.MaxValue, Long.MinValue, Long.MaxValue,
-        Long.MinValue, Long.MaxValue, Long.MinValue)
-      xs.foreach { case (_, a) =>
-        var t = 0
-        while (t < 3) {
-          if (a(2 * t) < acc(2 * t)) acc(2 * t) = a(2 * t)
-          if (a(2 * t + 1) > acc(2 * t + 1)) acc(2 * t + 1) = a(2 * t + 1)
-          t += 1
-        }
-      }
-      acc
-    }.toSeq
+    val sums = graft.sources.OsmPbfStats.summaries(path)
+    val perFile = sums.groupBy(_._1.path).values.map(_.map(_._2).reduce(_ + _)).toSeq
     val raw = for {
       i <- perFile.indices
       j <- (i + 1) until perFile.size
       t <- 0 to 2
-      lo = math.max(perFile(i)(2 * t), perFile(j)(2 * t))
-      hi = math.min(perFile(i)(2 * t + 1), perFile(j)(2 * t + 1))
+      lo = math.max(perFile(i).minId(t), perFile(j).minId(t))
+      hi = math.min(perFile(i).maxId(t), perFile(j).maxId(t))
       if lo <= hi
     } yield (t, lo, hi)
     val ranges = raw.groupBy(_._1).toSeq.flatMap { case (t, ivs) =>
@@ -169,9 +157,9 @@ object OsmQueryExec {
         }.reverse.map { case (lo, hi) => (t, lo, hi) }
     }.sorted
     val allTypes = Array(true, true, true)
-    val nBorder = rngs.count(
-      graft.sources.OsmPbfScan.blobIntersects(_, allTypes, ranges))
-    (ranges, if (blobs.isEmpty) 0.0 else nBorder.toDouble / blobs.size)
+    val nBorder = sums.count { case (_, s) =>
+      graft.sources.OsmPbfScan.blobIntersects(s, allTypes, ranges) }
+    (ranges, if (sums.isEmpty) 0.0 else nBorder.toDouble / sums.size)
   }
 
   /** Splits a key-sorted iterator into runs of equal key, each run

@@ -82,30 +82,63 @@ object OsmPbfFile {
   def indexAll(pathStr: String, conf: Configuration = sharedConf): Seq[BlobInfo] =
     expand(pathStr, conf).flatMap(f => index(f, conf))
 
-  /** Per-JVM blob-index cache keyed by (path, length, mtime): one
-    * query plans the SAME scan several times (estimateStatistics,
-    * partition planning, and 2-3 scan branches per OSM query), and
-    * each planning walk re-read every frame header — ~500 positioned
-    * reads per 250-blob extract, multiplied into ~1 s of pure driver
-    * planning per osm_big_* row (and at 100 TB, ~3 MB of header reads
-    * per 100 GB file per plan). The (len, mtime) key drops stale
-    * entries when a file is rewritten — the same freshness contract as
-    * Spark's own file-index cache (guide §6). */
+  /** One version of a file: its framing index and, once walked, the
+    * [[BlobSummary]] of each of its blobs, in index order. */
+  private final class Indexed(val blobs: Seq[BlobInfo]) {
+    @volatile var summaries: Seq[BlobSummary] = _
+  }
+
+  /** Per-JVM file cache keyed by (path, length, mtime): one query plans
+    * the SAME scan several times (estimateStatistics, partition
+    * planning, and 2-3 scan branches per OSM query), and each planning
+    * walk re-read every frame header — ~500 positioned reads per
+    * 250-blob extract, multiplied into ~1 s of pure driver planning per
+    * osm_big_* row (and at 100 TB, ~3 MB of header reads per 100 GB
+    * file per plan). A rewritten file gets a new key, so neither its
+    * index nor its summaries can be served from the old version — the
+    * same freshness contract as Spark's own file-index cache (guide
+    * §6); the old version's entry is dropped. */
   private val indexCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Seq[BlobInfo]]()
+    (String, Long, Long), Indexed]()
+
+  private def indexed(pathStr: String, conf: Configuration): Indexed = {
+    val path = new Path(pathStr)
+    val st = path.getFileSystem(conf).getFileStatus(path)
+    val key = (pathStr, st.getLen, st.getModificationTime)
+    var fresh = false
+    val e = indexCache.computeIfAbsent(key, _ => {
+      fresh = true
+      new Indexed(indexUncached(pathStr, conf, st.getLen))
+    })
+    if (fresh) indexCache.keySet.removeIf(k => k._1 == pathStr && k != key)
+    e
+  }
 
   /** Scan `[len:int32-BE][BlobHeader][Blob]` frames; validate the
     * OSMHeader; return one BlobInfo per OSMData blob. Only reads the
     * small header messages + the header blob — ~50 bytes per data blob,
     * so driver-side planning over a 100 TB corpus stays cheap; repeat
     * plans of an unchanged file are served from [[indexCache]]. */
-  def index(pathStr: String, conf: Configuration = sharedConf): Seq[BlobInfo] = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    val st = fs.getFileStatus(path)
-    indexCache.computeIfAbsent(
-      (pathStr, st.getLen, st.getModificationTime),
-      _ => indexUncached(pathStr, conf, st.getLen))
+  def index(pathStr: String, conf: Configuration = sharedConf): Seq[BlobInfo] =
+    indexed(pathStr, conf).blobs
+
+  /** Every blob under the path/glob paired with its [[BlobSummary]], in
+    * [[indexAll]] order. Summaries are cached with each file's index;
+    * the blobs of files not summarized yet go to `walk` in one call,
+    * which must return their summaries in the same order (the osmpbf
+    * source walks them in one parallel Spark job). */
+  def summarized(pathStr: String, walk: Seq[BlobInfo] => Seq[BlobSummary],
+      conf: Configuration = sharedConf): Seq[(BlobInfo, BlobSummary)] = {
+    val files = expand(pathStr, conf).map(indexed(_, conf))
+    val missing = files.filter(_.summaries == null)
+    if (missing.nonEmpty) {
+      val blobs = missing.flatMap(_.blobs)
+      val sums = walk(blobs)
+      require(sums.size == blobs.size, s"summary walk returned ${sums.size} of ${blobs.size} blobs")
+      val it = sums.iterator
+      missing.foreach(f => f.summaries = f.blobs.map(_ => it.next()))
+    }
+    files.flatMap(f => f.blobs.zip(f.summaries))
   }
 
   /** PBF spec limits (wiki.openstreetmap.org/wiki/PBF_Format): a
@@ -236,131 +269,6 @@ object OsmPbfFile {
         case _ => r.skip(tag & 7)
       }
     }
-  }
-
-  /** Per-type element counts of one blob WITHOUT decoding elements:
-    * walk only the field tags, counting one per plain Node/Way/Relation
-    * message and the packed-id varint count per DenseNodes group. This
-    * backs the COUNT(*) aggregate pushdown — `info()`-style per-type
-    * counts cost inflate + a byte scan instead of a full element decode
-    * (the reference's cache stores these counts after its one full
-    * parse; osmdata.py:75-79). */
-  /** Unlike the skip-driven walks (where `skip(tag & 7)` consumes by
-    * whatever wire type arrived), the counting path ASSUMES
-    * length-delimited encoding — `countPackedVarints` on a non-packed
-    * field would misread a varint as a byte length and walk out of
-    * bounds or return garbage counts. Legal-but-unconventional inputs
-    * (e.g. an unpacked repeated id field, wire type 0 per element) must
-    * therefore fail loudly here, not silently disagree with the full
-    * decoder (which shares the packed assumption). */
-  @inline private def requireWire(tag: Int, field: String): Unit =
-    if ((tag & 7) != 2)
-      throw new java.io.IOException(
-        s"malformed PrimitiveBlock: $field must be length-delimited (wire type 2), " +
-          s"got wire type ${tag & 7} — unpacked/non-message encoding is not supported " +
-          "by the stats-walk paths (COUNT pushdown, id-range index)")
-
-  def countTypes(block: Array[Byte]): (Long, Long, Long) = {
-    var n = 0L
-    var w = 0L
-    var rel = 0L
-    val root = new PbfReader(block)
-    while (root.hasMore) {
-      val tag = root.readTag()
-      if ((tag >> 3) == 2) {
-        requireWire(tag, "primitivegroup")
-        val g = root.readMessage()
-        while (g.hasMore) {
-          val t2 = g.readTag()
-          (t2 >> 3) match {
-            case 1 => requireWire(t2, "Node"); n += 1; g.skip(2)
-            case 2 =>
-              requireWire(t2, "DenseNodes")
-              val d = g.readMessage()
-              while (d.hasMore) {
-                val t3 = d.readTag()
-                if ((t3 >> 3) == 1) { requireWire(t3, "DenseNodes.id"); n += d.countPackedVarints() }
-                else d.skip(t3 & 7)
-              }
-            case 3 => requireWire(t2, "Way"); w += 1; g.skip(2)
-            case 4 => requireWire(t2, "Relation"); rel += 1; g.skip(2)
-            case _ => g.skip(t2 & 7)
-          }
-        }
-      } else root.skip(tag & 7)
-    }
-    (n, w, rel)
-  }
-
-  /** Per-type id ranges of one blob WITHOUT decoding elements — the
-    * same inflate + field-tag walk tier as [[countTypes]] (F10 — the
-    * reference's per-block type index, osmquery.py:242-247; type
-    * presence derives from non-empty intervals), additionally reading
-    * ONLY each element's id field
-    * (plain Node id is zigzag, Way/Relation ids plain varints,
-    * DenseNodes ids packed zigzag deltas — mirroring the decoder).
-    * Returns `[nMin,nMax,wMin,wMax,rMin,rMax]`, with the
-    * (Long.MaxValue, Long.MinValue) empty-interval sentinel for an
-    * absent type. Backs the multi-file border-overlap analysis
-    * (OsmQueryExec border dedup) and blob pruning for id-range
-    * filtered scans. */
-  def blobIdRanges(block: Array[Byte]): Array[Long] = {
-    val out = Array(Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue,
-      Long.MaxValue, Long.MinValue)
-    @inline def upd(t: Int, id: Long): Unit = {
-      if (id < out(2 * t)) out(2 * t) = id
-      if (id > out(2 * t + 1)) out(2 * t + 1) = id
-    }
-    def elemId(g: PbfReader, zig: Boolean): Long = {
-      var id = 0L
-      while (g.hasMore) {
-        val t = g.readTag()
-        if ((t >> 3) == 1 && (t & 7) == 0) {
-          id = if (zig) g.readZigzag() else g.readVarint()
-        } else g.skip(t & 7)
-      }
-      id
-    }
-    val root = new PbfReader(block)
-    while (root.hasMore) {
-      val tag = root.readTag()
-      if ((tag >> 3) == 2) {
-        // same loud-failure rule as countTypes (review r22): a
-        // non-length-delimited group/element would be misparsed into
-        // GARBAGE ranges, and wrong ranges silently drop blobs via
-        // pruning / misclassify border keys — reject like the decoder
-        requireWire(tag, "primitivegroup")
-        val g = root.readMessage()
-        while (g.hasMore) {
-          val t2 = g.readTag()
-          (t2 >> 3) match {
-            case 1 =>
-              requireWire(t2, "Node")
-              upd(0, elemId(g.readMessage(), zig = true))
-            case 2 =>
-              requireWire(t2, "DenseNodes")
-              val d = g.readMessage()
-              while (d.hasMore) {
-                val t3 = d.readTag()
-                if ((t3 >> 3) == 1) {
-                  requireWire(t3, "DenseNodes.id")
-                  val ids = d.readPackedLongs(zigzag = true, delta = true)
-                  var i = 0
-                  while (i < ids.length) { upd(0, ids(i)); i += 1 }
-                } else d.skip(t3 & 7)
-              }
-            case 3 =>
-              requireWire(t2, "Way")
-              upd(1, elemId(g.readMessage(), zig = false))
-            case 4 =>
-              requireWire(t2, "Relation")
-              upd(2, elemId(g.readMessage(), zig = false))
-            case _ => g.skip(t2 & 7)
-          }
-        }
-      } else root.skip(tag & 7)
-    }
-    out
   }
 
   def readBlob(info: BlobInfo, conf: Configuration): Array[Byte] = {
@@ -709,8 +617,8 @@ object BlockDecoder {
 
   /** Fail-loudly guard for tag key/val wire arrays: a truncated or
     * odd-length span in a corrupt block must raise the same
-    * 'malformed PrimitiveBlock' IOException as
-    * `OsmPbfFile.requireWire` / [[mustIx]], never a raw
+    * 'malformed PrimitiveBlock' IOException as the
+    * [[BlobSummary]] walk / [[mustIx]], never a raw
     * ArrayIndexOutOfBoundsException. */
   private def badKvSpan(what: String): Nothing =
     throw new java.io.IOException(

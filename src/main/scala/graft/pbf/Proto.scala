@@ -116,22 +116,6 @@ final class PbfReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     out
   }
 
-  /** Varint count of a length-delimited packed field, consuming it —
-    * one scan for terminating (high-bit-clear) bytes, no value decode.
-    * Backs COUNT(*) aggregate pushdown: a DenseNodes group's node count
-    * is its packed `id` field's varint count. */
-  def countPackedVarints(): Long = {
-    val len = readVarint().toInt
-    checkLen(len, "packed field")
-    val limit = pos + len
-    var n = 0L
-    while (pos < limit) {
-      if ((buf(pos) & 0x80) == 0) n += 1
-      pos += 1
-    }
-    n
-  }
-
   /** packed repeated int32 (no zigzag). */
   def readPackedInts(): Array[Int] = {
     val longs = readPackedLongs(zigzag = false, delta = false)

@@ -34,8 +34,8 @@ object OsmQueries {
         .orderBy("type")
     }),
 
-    // same counts served by the COUNT(*) aggregate pushdown (framing
-    // walk, no element decode) — both decode paths stay oracle-gated
+    // same counts served by the COUNT(*) aggregate pushdown (blob
+    // summaries, no element decode) — both paths stay oracle-gated
     "osm_scan_counts_pushdown" -> ((s, _) => {
       ensureFixture(s)
       s.read.format("osmpbf").load(fixture)

@@ -56,22 +56,36 @@ object OsmPbfSource {
     Set("id", "type", "lat", "lon", "version", "timestamp", "changeset")
 
   /** Per-type id-range scan restriction, as the `idRanges` source
-    * option: `"t,lo,hi;t,lo,hi"` (t ∈ 0/1/2). A scan with ranges keeps
-    * only blobs whose per-type id span (from the cached stats walk)
-    * intersects a requested interval of a wanted type — blob-granular
-    * PRUNING, not an element filter: a kept blob still emits all its
-    * rows, the consumer re-applies the exact predicate (the same
-    * conservative-recheck contract as the pushed filters). Serves the
-    * multi-file border-dedup split, whose overlap intervals are
-    * plan-time metadata. */
+    * option: `"t,lo,hi;t,lo,hi"` (t ∈ 0/1/2, lo ≤ hi). A scan with
+    * ranges keeps only blobs whose per-type id span (from the cached
+    * blob summaries) intersects a requested interval of a wanted type
+    * — blob-granular PRUNING, not an element filter: a kept blob
+    * still emits all its rows, the consumer re-applies the exact
+    * predicate (the same conservative-recheck contract as the pushed
+    * filters). Serves the multi-file border-dedup split, whose overlap
+    * intervals are plan-time metadata. */
   def serializeIdRanges(rs: Seq[(Int, Long, Long)]): String =
     rs.map { case (t, lo, hi) => s"$t,$lo,$hi" }.mkString(";")
 
+  /** Parses the `idRanges` option; a malformed entry raises an
+    * IllegalArgumentException naming the option, the entry and the
+    * expected form (a type outside 0..2 would otherwise prune every
+    * blob and return an empty scan). */
   def parseIdRanges(s: String): Seq[(Int, Long, Long)] =
     if (s == null || s.trim.isEmpty) Nil
-    else s.split(';').toSeq.filter(_.nonEmpty).map { part =>
-      val Array(t, lo, hi) = part.split(',')
-      (t.trim.toInt, lo.trim.toLong, hi.trim.toLong)
+    else s.split(';').toSeq.filter(_.trim.nonEmpty).map { part =>
+      def bad(why: String): Nothing = throw new IllegalArgumentException(
+        s"invalid idRanges entry '$part': $why; expected 't,lo,hi;...' " +
+          "with t in {0,1,2} (node, way, relation) and lo <= hi")
+      val (t, lo, hi) = part.split(",", -1).map(_.trim) match {
+        case Array(t, lo, hi) =>
+          try (t.toInt, lo.toLong, hi.toLong)
+          catch { case _: NumberFormatException => bad("not a number") }
+        case fields => bad(s"${fields.length} fields instead of 3")
+      }
+      if (t < 0 || t > 2) bad(s"type $t outside 0..2")
+      if (lo > hi) bad(s"lo $lo > hi $hi")
+      (t, lo, hi)
     }
 
   val schema: StructType = StructType(Seq(
@@ -124,15 +138,13 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
   // (groupByType, number of COUNT(*) columns) once an agg is pushed
   private var pushedCounts: Option[(Boolean, Int)] = None
 
-  /** Partial COUNT(*) [GROUP BY type] pushdown: per-partition counts
-    * come from the blob framing walk alone — inflate + a field-tag byte
-    * scan, no element decode (a DenseNodes group's count is its packed
-    * id field's varint count). Spark plans the final merge agg on top,
-    * so this composes with multi-partition scans. Only COUNT(*) with no
-    * grouping or grouped exactly by `type` qualifies; any pushed filter
-    * keeps the row path (Spark only offers aggregates when no post-scan
-    * filter remains, and this source conservatively re-checks every
-    * pushed filter post-scan). */
+  /** Partial COUNT(*) [GROUP BY type] pushdown, answered on the driver
+    * from the cached blob summaries ([[OsmPbfCountScan]]); Spark plans
+    * the final merge agg on top. Only COUNT(*) with no grouping or
+    * grouped exactly by `type` qualifies; any pushed filter keeps the
+    * row path (Spark only offers aggregates when no post-scan filter
+    * remains, and this source conservatively re-checks every pushed
+    * filter post-scan). */
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
 
@@ -203,9 +215,14 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
 }
 
 /** Scan produced when a COUNT(*) [GROUP BY type] aggregate is pushed:
-  * emits per-partition partial counts with schema
-  * `[type?] ++ count(*) ...` (group columns first, as the pushdown
-  * contract requires); Spark's rewritten final aggregate sums them.
+  * a `LocalScan`, so Spark plans it as a `LocalTableScanExec` whose
+  * rows are computed on the driver from the blob summaries of the
+  * files under the path. No task reads a blob once the summaries are
+  * cached; otherwise the one summary walk runs first and caches them.
+  * Schema `[type?] ++ count(*) ...` (group columns first, as the
+  * pushdown contract requires); Spark's rewritten final aggregate sums
+  * them. A global count always has one row, so an empty file counts 0,
+  * not null; a grouped count has no row for an absent type.
   *
   * Multi-file caveat: on a DIRECTORY of adjacent extracts, bare-scan
   * counts (`spark.read.format("osmpbf").load(dir).count()`) are RAW —
@@ -215,68 +232,24 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
   * `OsmFile.info()` and `OsmQueryExec.scan` are the deduped surfaces
   * for overlapping-extract corpora. */
 class OsmPbfCountScan(path: String, groupByType: Boolean, nCounts: Int)
-    extends Scan with Batch {
+    extends LocalScan {
 
   override def readSchema(): StructType = StructType(
     (if (groupByType) Seq(StructField("type", ByteType, nullable = false)) else Nil) ++
       (1 to nCounts).map(i => StructField(s"count_$i", LongType, nullable = false)))
 
-  override def toBatch: Batch = this
   override def description(): String =
     s"OsmPbfCountScan(path=$path, groupBy=${if (groupByType) "type" else "<global>"})"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = OsmPbfScan.planPartitions(path, Array(true, true, true))
-    // a header-only file has zero data blobs → zero partitions; the
-    // global COUNT is rewritten to SUM of partials by the pushdown,
-    // and SUM over no rows is null where COUNT must be 0 — keep one
-    // empty partition so exactly one zero partial row is emitted
-    if (parts.isEmpty) Array(OsmPbfPartition(Array.empty))
-    else parts
+  override def rows(): Array[InternalRow] = {
+    val total = OsmPbfStats.summaries(path).foldLeft(BlobSummary.empty)(_ + _._2)
+    def row(lead: Seq[Any], c: Long): InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        (lead ++ Seq.fill(nCounts)(c)).toArray)
+    if (groupByType)
+      (0 to 2).filter(total.count(_) > 0).map(t => row(Seq(t.toByte), total.count(t))).toArray
+    else Array(row(Nil, total.total))
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new OsmPbfCountReaderFactory(groupByType, nCounts)
-}
-
-class OsmPbfCountReaderFactory(groupByType: Boolean, nCounts: Int)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new OsmPbfCountReader(partition.asInstanceOf[OsmPbfPartition], groupByType, nCounts)
-}
-
-class OsmPbfCountReader(p: OsmPbfPartition, groupByType: Boolean, nCounts: Int)
-    extends PartitionReader[InternalRow] {
-
-  private val rows: Iterator[InternalRow] = {
-    var n = 0L
-    var w = 0L
-    var r = 0L
-    val blobReader = new graft.pbf.BlobReader(graft.pbf.OsmPbfFile.sharedConf)
-    try p.blobs.foreach { b =>
-      val (bn, bw, br) = OsmPbfFile.countTypes(blobReader.read(b))
-      n += bn; w += bw; r += br
-    } finally blobReader.close()
-    if (groupByType) {
-      // a type with zero elements in this partition contributes no
-      // group row (groupBy emits no row for an absent key)
-      Seq(OsmPbfSource.TypeNode -> n, OsmPbfSource.TypeWay -> w,
-        OsmPbfSource.TypeRelation -> r)
-        .filter(_._2 > 0L)
-        .map { case (t, c) =>
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            (t +: Seq.fill(nCounts)(c)).toArray[Any]): InternalRow
-        }.iterator
-    } else
-      Iterator(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array.fill[Any](nCounts)(n + w + r)))
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 class OsmPbfScan(path: String, required: StructType,
@@ -335,23 +308,18 @@ object OsmPbfScan {
     * underestimating could broadcast a huge side. */
   val RowBytesPerCompressedByte = 24L
 
-  /** F10 — blob-level pruning: when a type filter is pushed, consult
-    * (and lazily build, one parallel pass per file) the per-blob
-    * element-type stats index and drop blobs that cannot contain
-    * requested types (reference osmquery.py:242-247; the reference's
-    * first-pass cache plays this role, SURVEY §4.1). Shared by
-    * partition planning and the planner statistics. */
+  /** F10 — blob-level pruning: when a type filter or id ranges are
+    * pushed, consult (and lazily build, one parallel pass per file) the
+    * blob summaries and drop blobs that cannot contain requested rows
+    * (reference osmquery.py:242-247; the reference's first-pass cache
+    * plays this role, SURVEY §4.1). Shared by partition planning and
+    * the planner statistics. */
   def prunedBlobs(path: String, wantTypes: Array[Boolean],
-      idRanges: Seq[(Int, Long, Long)] = Nil): Seq[BlobInfo] = {
-    val blobs = OsmPbfFile.indexAll(path)
-    if (wantTypes.forall(identity) && idRanges.isEmpty) blobs
-    else {
-      val stats = OsmPbfStats.ranges(path, blobs)
-      blobs.zip(stats).collect {
-        case (b, a) if blobIntersects(a, wantTypes, idRanges) => b
-      }
+      idRanges: Seq[(Int, Long, Long)] = Nil): Seq[BlobInfo] =
+    if (wantTypes.forall(identity) && idRanges.isEmpty) OsmPbfFile.indexAll(path)
+    else OsmPbfStats.summaries(path).collect {
+      case (b, s) if blobIntersects(s, wantTypes, idRanges) => b
     }
-  }
 
   /** Keep a blob iff SOME wanted type is present in it AND (when id
     * ranges are given) that type's blob id span intersects a requested
@@ -359,17 +327,17 @@ object OsmPbfScan {
     * intersection convention (closed intervals), shared by partition
     * pruning above and the border-dedup blob-fraction decision
     * (OsmQueryExec.dedupMultiFile) so the two can never drift. */
-  def blobIntersects(a: Array[Long], wantTypes: Array[Boolean],
+  def blobIntersects(s: BlobSummary, wantTypes: Array[Boolean],
       idRanges: Seq[(Int, Long, Long)]): Boolean =
     (0 to 2).exists { t =>
-      wantTypes(t) && a(2 * t) <= a(2 * t + 1) && (idRanges.isEmpty ||
+      wantTypes(t) && s.count(t) > 0 && (idRanges.isEmpty ||
         idRanges.exists { case (rt, lo, hi) =>
-          rt == t && lo <= a(2 * t + 1) && hi >= a(2 * t)
+          rt == t && lo <= s.maxId(t) && hi >= s.minId(t)
         })
     }
 
-  /** Index, prune and pack the file's blobs into input partitions —
-    * shared by the row, columnar and pushed-count scans. */
+  /** Index, prune and pack the file's blobs into input partitions for
+    * the row and columnar reads. */
   def planPartitions(path: String, wantTypes: Array[Boolean],
       idRanges: Seq[(Int, Long, Long)] = Nil): Array[InputPartition] = {
     val pruned = prunedBlobs(path, wantTypes, idRanges)
@@ -413,27 +381,27 @@ object OsmPbfScan {
 
 case class OsmPbfPartition(blobs: Array[BlobInfo]) extends InputPartition
 
-/** Driver-side cache of per-blob element stats, built once per
-  * file by a parallel Spark job (inflate + field-tag walk only — no
-  * element decode). One walk yields per-type id RANGES
-  * (`[nMin,nMax,wMin,wMax,rMin,rMax]` per blob); type presence derives
-  * from non-empty intervals. Subsequent scans with type or id-range
-  * filters prune partitions for free. */
+/** The osmpbf source's summary walk: the [[graft.pbf.BlobSummary]] of
+  * every blob under a path, cached per file version with its framing
+  * index ([[graft.pbf.OsmPbfFile.summarized]]). Files not summarized
+  * yet are walked by one parallel Spark job (inflate + field-tag walk,
+  * no element decode); later type-, id-range-pruned and counted scans
+  * read the cache. */
 object OsmPbfStats {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Long]]]()
-
-  def ranges(path: String, blobs: Seq[BlobInfo]): Seq[Array[Long]] =
-    cache.computeIfAbsent(path, _ => {
-      val spark = org.apache.spark.sql.SparkSession.active
-      spark.sparkContext
+  def summaries(path: String): Seq[(BlobInfo, BlobSummary)] =
+    OsmPbfFile.summarized(path, blobs =>
+      org.apache.spark.sql.SparkSession.active.sparkContext
         .parallelize(blobs, math.min(blobs.size, 64).max(1))
-        .map { b =>
-          val block = OsmPbfFile.readBlob(b, OsmPbfFile.sharedConf)
-          OsmPbfFile.blobIdRanges(block)
-        }
-        .collect().toSeq
-    })
+        .map(b => BlobSummary.of(OsmPbfFile.readBlob(b, OsmPbfFile.sharedConf)))
+        .collect().toSeq)
+
+  /** The summaries of `blobs`, an index of the files under `path` (as
+    * from `OsmPbfFile.indexAll(path)`), summarizing any file not
+    * summarized yet. */
+  def ranges(path: String, blobs: Seq[BlobInfo]): Seq[BlobSummary] = {
+    val byBlob = summaries(path).toMap
+    blobs.map(byBlob)
+  }
 }
 
 class OsmPbfReaderFactory(schema: StructType, wantTypes: Array[Boolean],

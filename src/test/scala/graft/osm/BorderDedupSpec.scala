@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pbf.OsmPbfWriter._
 import graft.sources.SparkTestSession
 
-/** Pins the border-range dedup machinery (r22): the stats-walk id
-  * ranges agree with the decoder, every cross-file duplicated key lies
+/** Pins the border-range dedup machinery (r22): the blob summaries' id
+  * spans agree with the decoder, every cross-file duplicated key lies
   * inside a border interval (the correctness invariant of the split
   * dedup), the idRanges scan option prunes blobs, and the split path
   * equals the full-dedup fallback row-for-row. */
@@ -27,13 +27,14 @@ class BorderDedupSpec extends AnyFunSuite {
     (f.getAbsolutePath, dir)
   }
 
+  // name kept from the walk's earlier, ranges-only form
   test("blobIdRanges agrees with the decoded elements per blob") {
     val (single, _) = mkWorld()
     val blobs = graft.pbf.OsmPbfFile.indexAll(single)
     val conf = graft.pbf.OsmPbfFile.sharedConf
     blobs.foreach { b =>
       val block = graft.pbf.OsmPbfFile.readBlob(b, conf)
-      val ranges = graft.pbf.OsmPbfFile.blobIdRanges(block)
+      val sum = graft.pbf.BlobSummary.of(block)
       // decoded truth via the raw scan restricted to this blob is
       // awkward; the writer's fixture is known: derive truth from the
       // full decode of the block
@@ -45,10 +46,10 @@ class BorderDedupSpec extends AnyFunSuite {
       (0 to 2).foreach { t =>
         val ids = decoded.collect { case (`t`, id) => id }
         if (ids.isEmpty) {
-          assert(ranges(2 * t) > ranges(2 * t + 1), s"type $t should be absent")
+          assert(sum.minId(t) > sum.maxId(t), s"type $t should be absent")
         } else {
-          assert(ranges(2 * t) === ids.min, s"type $t min")
-          assert(ranges(2 * t + 1) === ids.max, s"type $t max")
+          assert(sum.minId(t) === ids.min, s"type $t min")
+          assert(sum.maxId(t) === ids.max, s"type $t max")
         }
       }
     }

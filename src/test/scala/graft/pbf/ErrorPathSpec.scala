@@ -103,15 +103,57 @@ class ErrorPathSpec extends AnyFunSuite {
     assert(e.getMessage.contains("OSMWeird"))
   }
 
+  // name kept from the walk's earlier, count-only form
   test("countTypes rejects non-length-delimited encodings loudly") {
     // an UNPACKED repeated DenseNodes.id (wire type 0 per element) is
-    // legal protobuf but violates the packed assumption the counting
-    // walk (and the full decoder) share — countPackedVarints would
-    // misread the varint as a byte length. Hand-craft:
+    // legal protobuf but violates the packed assumption the summary
+    // walk (and the full decoder) share — a packed read would misread
+    // the varint as a byte length. Hand-craft:
     // PrimitiveBlock { group(2,len) { DenseNodes(2,len) { id tag=0x08 varint } } }
     val block = Array[Byte](0x12, 0x04, 0x12, 0x02, 0x08, 0x05)
-    val e = intercept[java.io.IOException] { OsmPbfFile.countTypes(block) }
+    val e = intercept[java.io.IOException] { BlobSummary.of(block) }
     assert(e.getMessage.contains("wire type") && e.getMessage.contains("DenseNodes.id"))
+  }
+
+  // A malformed `idRanges` source option is a typed error naming the
+  // option, the entry and the expected form — not a MatchError, a bare
+  // NumberFormatException, or (type outside 0..2) a silently empty scan.
+  private def badIdRanges(opt: String, entry: String): Unit = {
+    val e = intercept[IllegalArgumentException] {
+      graft.sources.OsmPbfSource.parseIdRanges(opt)
+    }
+    assert(e.getMessage.contains("idRanges") && e.getMessage.contains(s"'$entry'") &&
+      e.getMessage.contains("t,lo,hi") && e.getMessage.contains("{0,1,2}") &&
+      e.getMessage.contains("lo <= hi"), e.getMessage)
+  }
+
+  test("idRanges with fewer or more than 3 fields names the option") {
+    badIdRanges("0,1,5;1,7", "1,7")
+    badIdRanges("0,1", "0,1")
+    badIdRanges("0,1,2,3", "0,1,2,3")
+  }
+
+  test("idRanges with a non-number names the option") {
+    badIdRanges("1,x,9", "1,x,9")
+    badIdRanges("way,1,9", "way,1,9")
+  }
+
+  test("idRanges with a type outside 0..2 or lo > hi is rejected, not an empty scan") {
+    badIdRanges("3,1,9", "3,1,9")
+    badIdRanges("-1,1,9", "-1,1,9")
+    badIdRanges("0,9,1", "0,9,1")
+    assert(graft.sources.OsmPbfSource.parseIdRanges(" 0, 1, 9 ;2,5,5;") === Seq((0, 1L, 9L), (2, 5L, 5L)))
+  }
+
+  test("a malformed idRanges option fails the scan") {
+    val f = java.io.File.createTempFile("idrangesopt", ".osm.pbf")
+    f.deleteOnExit()
+    OsmPbfWriter.write(f.getAbsolutePath, Seq(Seq(OsmPbfWriter.N(1, 1.0, 1.0))))
+    val spark = graft.sources.SparkTestSession.spark
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("osmpbf").option("idRanges", "5,1,9").load(f.getAbsolutePath).collect()
+    }
+    assert(e.getMessage.contains("idRanges") && e.getMessage.contains("'5,1,9'"), e.getMessage)
   }
 
   // Framing lengths are bounded by the PBF spec limits (BlobHeader

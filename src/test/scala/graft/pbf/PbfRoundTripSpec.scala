@@ -191,11 +191,12 @@ class OsmPbfRoundTripSpec extends AnyFunSuite {
     assert(pruned.id === 7L && pruned.tagKeys.isEmpty && pruned.refs.isEmpty)
   }
 
+  // name kept from the walk's earlier, count-only form
   test("property: countTypes matches the full decoder on random blocks") {
-    // the count pushdown never decodes an element — its only ground
+    // the blob summary walk never decodes an element — its only ground
     // truth is agreement with the real decoder over arbitrary block
     // shapes (mixed groups, empty tag sets, optional info, 0-element
-    // blocks, dense and plain encodings)
+    // blocks, dense and plain encodings): per-type counts, min and max ids
     val rnd = new scala.util.Random(4242)
     (1 to 40).foreach { trial =>
       val dense = rnd.nextBoolean()
@@ -226,8 +227,14 @@ class OsmPbfRoundTripSpec extends AnyFunSuite {
           decoded.count(_.etype == 0).toLong,
           decoded.count(_.etype == 1).toLong,
           decoded.count(_.etype == 2).toLong)
-        assert(OsmPbfFile.countTypes(block) === want,
-          s"trial $trial dense=$dense blocks=${blocks.map(_.size)}")
+        val sum = BlobSummary.of(block)
+        val clue = s"trial $trial dense=$dense blocks=${blocks.map(_.size)} $sum"
+        assert((sum.count(0), sum.count(1), sum.count(2)) === want, clue)
+        (0 to 2).foreach { t =>
+          val ids = decoded.filter(_.etype == t).map(_.id)
+          assert(sum.minId(t) === (if (ids.isEmpty) Long.MaxValue else ids.min), clue)
+          assert(sum.maxId(t) === (if (ids.isEmpty) Long.MinValue else ids.max), clue)
+        }
       }
     }
   }

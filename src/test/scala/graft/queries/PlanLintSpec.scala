@@ -96,17 +96,20 @@ class PlanLintSpec extends AnyFunSuite {
   // losing its oracle power over S1-S11 — must fail CI, not surface as
   // an unexplained bench shift (or an unguarded decode path) later.
 
+  // The pushed count plans as a local table scan over the blob
+  // summaries, so neither plan string names the scan: both twins are
+  // told apart by the scan the optimized plan reads and by the
+  // presence of an osmpbf BatchScanExec.
   test("osm_scan_counts_pushdown is served by OsmPbfCountScan") {
-    val plan = graft.SparkEntry.queries("osm_scan_counts_pushdown")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("OsmPbfCountScan"),
-      s"COUNT pushdown did not engage on the pushdown twin:\n$plan")
+    val df = graft.SparkEntry.queries("osm_scan_counts_pushdown")(spark, dir)
+    assert(graft.sources.OsmPbfCountPushdownSpec.usesCountScan(df),
+      s"COUNT pushdown did not engage on the pushdown twin:\n${df.queryExecution.executedPlan}")
   }
 
   test("osm_scan_counts keeps the full element-decode scan (no OsmPbfCountScan)") {
-    val plan = graft.SparkEntry.queries("osm_scan_counts")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("OsmPbfCountScan"),
-      s"the decode-path twin was unexpectedly served by the count pushdown:\n$plan")
+    val df = graft.SparkEntry.queries("osm_scan_counts")(spark, dir)
+    assert(!graft.sources.OsmPbfCountPushdownSpec.usesCountScan(df) &&
+      graft.sources.OsmPbfCountPushdownSpec.osmpbfScans(df).nonEmpty,
+      s"the decode-path twin was unexpectedly served by the count pushdown:\n${df.queryExecution.executedPlan}")
   }
 }

@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pbf.OsmPbfWriter._
 
 /** COUNT(*) aggregate pushdown (SupportsPushDownAggregates): per-type /
-  * global counts served by the blob framing walk ([[graft.pbf
-  * .OsmPbfFile.countTypes]]) with no element decode. Ground truth is
+  * global counts answered on the driver from the cached blob summaries
+  * ([[graft.pbf.BlobSummary]]) with no element decode. Ground truth is
   * the row path over the same file (projecting `id` keeps the pushdown
   * off). */
 class OsmPbfCountPushdownSpec extends AnyFunSuite {
+  import OsmPbfCountPushdownSpec.usesCountScan
   private lazy val spark = SparkTestSession.spark
 
   /** 3 nodes + 2 ways + 1 relation across three blocks, one of them
@@ -30,9 +31,6 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
         N(4, 1.0, 2.0))), denseNodes = dense)
     f.getAbsolutePath
   }
-
-  private def usesCountScan(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.executedPlan.toString.contains("OsmPbfCountScan")
 
   for (dense <- Seq(true, false)) {
     val label = if (dense) "dense nodes" else "plain nodes"
@@ -81,14 +79,15 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
       assert(df.count() === 7L)
     }
 
+    // name kept from the walk's earlier, count-only form
     test(s"countTypes golden over every blob ($label)") {
       val path = fixture(dense)
       val conf = new org.apache.hadoop.conf.Configuration()
       val blobs = graft.pbf.OsmPbfFile.indexAll(path)
       val totals = blobs.map(b =>
-        graft.pbf.OsmPbfFile.countTypes(graft.pbf.OsmPbfFile.readBlob(b, conf)))
+        graft.pbf.BlobSummary.of(graft.pbf.OsmPbfFile.readBlob(b, conf)))
       val (n, w, r) = totals.foldLeft((0L, 0L, 0L)) {
-        case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z)
+        case ((a, b, c), s) => (a + s.count(0), b + s.count(1), c + s.count(2))
       }
       assert((n, w, r) === ((4L, 2L, 1L)))
     }
@@ -171,4 +170,22 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
     val infoS = new graft.osm.OsmFile(spark, f.getAbsolutePath).info()
     assert(infoM - "blobs" === infoS - "blobs")
   }
+}
+
+object OsmPbfCountPushdownSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+
+  /** The osmpbf scans of the physical plan. */
+  def osmpbfScans(df: DataFrame): Seq[BatchScanExec] =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec if b.scan.isInstanceOf[OsmPbfScan] => b }
+
+  /** The pushed count's plan: the optimized plan reads an
+    * [[OsmPbfCountScan]], which Spark plans as a local table scan, so
+    * the physical plan holds no osmpbf scan at all. */
+  def usesCountScan(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case r: DataSourceV2ScanRelation => r.scan.isInstanceOf[OsmPbfCountScan]
+      case _ => false
+    } && osmpbfScans(df).isEmpty
 }
