@@ -115,6 +115,10 @@ object Bench {
       .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
       .getOrElse(Double.MaxValue)
 
+  /** The checkout Bench runs from: the working directory, as for
+    * [[ProbeRig.writeArtifact]]. */
+  private[graft] def checkoutDir: String = System.getProperty("user.dir")
+
   /** Previous-round record: per-query wall + CPU seconds and the source
     * file name, for the artifact's `prev` block and the taint check.
     * Source preference:
@@ -136,8 +140,8 @@ object Bench {
       cpu: Map[String, Double], source: String)
 
   private[graft] def prevRecord(
-      benchDir: String = "/root/repo/bench",
-      repoDir: String = "/root/repo",
+      benchDir: String = new java.io.File(checkoutDir, "bench").getPath,
+      repoDir: String = checkoutDir,
       currentRound: Int = Int.MaxValue): PrevRecord = {
     def read(f: java.io.File): String =
       scala.util.Using(scala.io.Source.fromFile(f))(_.mkString).getOrElse("")
@@ -173,8 +177,8 @@ object Bench {
   }
 
   private[graft] def prevRound(
-      benchDir: String = "/root/repo/bench",
-      repoDir: String = "/root/repo"): Map[String, Double] =
+      benchDir: String = new java.io.File(checkoutDir, "bench").getPath,
+      repoDir: String = checkoutDir): Map[String, Double] =
     prevRecord(benchDir, repoDir).wall
 
   /** One timed repetition: wall/CPU seconds, the 1-min system load
@@ -725,7 +729,7 @@ object Bench {
     * outside the repo checkout. Shared with ScaleProbe so the committed
     * scale artifact carries the same round stamp as the bench record. */
   private[graft] def roundNumber: Int = {
-    Option(new java.io.File("/root/repo").listFiles())
+    Option(new java.io.File(checkoutDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .flatMap(f => "BENCH_r(\\d+)\\.json".r.findFirstMatchIn(f.getName)
         .map(_.group(1).toInt))
@@ -1003,7 +1007,7 @@ object Bench {
     lazy val benchOut: java.io.File =
       sys.env.get("SPARK_GRAFT_BENCH_OUT").map(new java.io.File(_))
         .getOrElse {
-          val dir = new java.io.File("/root/repo/bench")
+          val dir = new java.io.File(checkoutDir, "bench")
           dir.mkdirs()
           resolveBenchOut(dir, roundNumber)
         }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * highway topology. A second phase splits the same world into 3
   * region files with duplicated border blobs (the adjacent-extract
   * corpus shape) and re-runs the headliners on the directory — results
-  * must be IDENTICAL to single-file (`dedupMultiFile` border dedup,
-  * OsmQueryExec.scan). Prints one JSON line. */
+  * must be IDENTICAL to single-file (the osmpbf source reads each
+  * element once across the files). Prints one JSON line. */
 object ScaleProbe {
 
   /** Split a single-file extract into `nFiles` adjacent "region" files

@@ -135,10 +135,9 @@ class OsmFile(spark: org.apache.spark.sql.SparkSession, path: String,
   import org.apache.spark.sql.functions._
 
   lazy val elements: org.apache.spark.sql.DataFrame = {
-    // OsmQueryExec.scan = raw scan + multi-file border dedup, so a
-    // directory of adjacent extracts counts/joins each element once —
-    // the same table the query operators see
-    val df = OsmQueryExec.scan(spark, path)
+    // the osmpbf source reads a directory of adjacent extracts with each
+    // element once, so this is the same table the query operators see
+    val df = spark.read.format("osmpbf").load(path)
     if (cache) df.persist() else df
   }
 

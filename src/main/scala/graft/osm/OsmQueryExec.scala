@@ -77,91 +77,6 @@ object OsmQueryExec {
 
   // ------------------------------------------------------------------
 
-  /** Above this fraction of a multi-file corpus' blobs inside the
-    * cross-file border intervals, [[dedupMultiFile]] falls back to the
-    * plain full-row dedup. */
-  private[osm] val MaxBorderBlobFrac = 0.5
-
-  /** @param maxBorderFrac the split/fallback switch of [[dedupMultiFile]];
-    *   tests pass 0 or 1 to force either side. */
-  private[osm] def scan(spark: SparkSession, path: String,
-      maxBorderFrac: Double = MaxBorderBlobFrac): DataFrame =
-    dedupMultiFile(spark.read.format("osmpbf").load(path), path, maxBorderFrac)
-
-  /** Adjacent region extracts duplicate border elements; a multi-file
-    * corpus therefore dedups on the stable (type, id) key (copies are
-    * identical, so arbitrary-wins is exact) — otherwise a way present
-    * in two files doubles its geometry vertices and turns every one of
-    * its nodes into a topology junction. Single-file scans (the common
-    * case) skip the shuffle entirely.
-    *
-    * Border-range split (VERDICT r21 task 4, guide §2.5 hot-key split +
-    * §6 pushdown): a (type, id) key present in ≥ 2 files necessarily
-    * lies inside the pairwise INTERSECTION of those files' per-type id
-    * spans — plan-time metadata from the cached blob summaries.
-    * Rows outside every intersection are globally unique and PASS
-    * THROUGH with no exchange; only rows inside the border intervals
-    * are re-scanned (a second scan whose `idRanges` option prunes to
-    * the border blobs at the source) and deduped. The full-row dedup
-    * exchange therefore carries only border rows — on adjacent
-    * real-world extracts a few percent of the corpus — instead of
-    * every element. Degenerate id layouts (border intervals touching
-    * more than `maxBorderFrac` of the blobs, e.g. fully interleaved
-    * ids) fall back to the plain full dedup; disjoint id spaces skip
-    * the dedup outright. A query filter cannot cross the dedup, so the
-    * border strip is decoded without must-tag pushdown. */
-  private def dedupMultiFile(df: DataFrame, path: String,
-      maxBorderFrac: Double): DataFrame = {
-    val spark = df.sparkSession
-    val files = graft.pbf.OsmPbfFile.expand(path,
-      spark.sparkContext.hadoopConfiguration)
-    if (files.size <= 1) return df
-    val (ranges, borderFrac) = borderRanges(path)
-    if (ranges.isEmpty) return df
-    if (borderFrac > maxBorderFrac) return df.dropDuplicates("type", "id")
-    val inBorder = ranges.map { case (t, lo, hi) =>
-      col("type") === lit(t) && col("id") >= lo && col("id") <= hi
-    }.reduce(_ || _)
-    val borderScan = spark.read.format("osmpbf")
-      .option("idRanges", graft.sources.OsmPbfSource.serializeIdRanges(ranges))
-      .load(path)
-    df.filter(!inBorder).unionByName(
-      borderScan.filter(inBorder).dropDuplicates("type", "id"))
-  }
-
-  /** Cross-file border intervals per type, merged: the pairwise
-    * intersections of the files' per-type id spans (each file's span
-    * is the sum of its cached blob summaries — driver metadata, no
-    * element decode). Empty ⇔ the files' id spaces are disjoint for
-    * every type ⇔ no key can be duplicated. Also returns the fraction
-    * of blobs the intervals touch, by the shared blob intersection
-    * predicate the border scan prunes with, so the two can never
-    * diverge. */
-  private[osm] def borderRanges(path: String): (Seq[(Int, Long, Long)], Double) = {
-    val sums = graft.sources.OsmPbfStats.summaries(path)
-    val perFile = sums.groupBy(_._1.path).values.map(_.map(_._2).reduce(_ + _)).toSeq
-    val raw = for {
-      i <- perFile.indices
-      j <- (i + 1) until perFile.size
-      t <- 0 to 2
-      lo = math.max(perFile(i).minId(t), perFile(j).minId(t))
-      hi = math.min(perFile(i).maxId(t), perFile(j).maxId(t))
-      if lo <= hi
-    } yield (t, lo, hi)
-    val ranges = raw.groupBy(_._1).toSeq.flatMap { case (t, ivs) =>
-      ivs.map(x => (x._2, x._3)).sortBy(_._1)
-        .foldLeft(List.empty[(Long, Long)]) {
-          case ((plo, phi) :: rest, (lo, hi)) if lo <= phi =>
-            (plo, math.max(phi, hi)) :: rest
-          case (acc, iv) => iv :: acc
-        }.reverse.map { case (lo, hi) => (t, lo, hi) }
-    }.sorted
-    val allTypes = Array(true, true, true)
-    val nBorder = sums.count { case (_, s) =>
-      graft.sources.OsmPbfScan.blobIntersects(s, allTypes, ranges) }
-    (ranges, if (sums.isEmpty) 0.0 else nBorder.toDouble / sums.size)
-  }
-
   /** Splits a key-sorted iterator into runs of equal key, each run
     * buffered in input order — the per-way / per-relation walks below
     * hold one run at a time (OSM bounds a way at 2000 nodes and a
@@ -329,7 +244,7 @@ object OsmQueryExec {
   // ------------------------------------------------------------------
 
   def run(spark: SparkSession, path: String, q: OsmQuery): DataFrame =
-    run(spark, scan(spark, path), q)
+    run(spark, spark.read.format("osmpbf").load(path), q)
 
   /** The one OSM plan builder: every branch (filtered elements, node
     * coordinates, member ways, topology attributes) derives from

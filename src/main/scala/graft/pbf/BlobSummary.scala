@@ -3,8 +3,9 @@ package graft.pbf
 /** Per-type element count and id span of one OSMData blob: the per-blob
   * facts of the reference's first-pass cache (headers.py:124-201), read
   * by a field-tag walk with no element decode. Type presence drives
-  * partition pruning, the id spans drive `idRanges` pruning and the
-  * multi-file border intervals, the counts answer COUNT(*) pushdown.
+  * partition pruning, the id spans decide which blobs of earlier files
+  * shadow a blob in a multi-file read, the counts answer COUNT(*)
+  * pushdown.
   * Types are node 0, way 1, relation 2; an absent type has count 0 and
   * the empty span (Long.MaxValue, Long.MinValue). */
 final class BlobSummary private (private val a: Array[Long]) extends Serializable {
@@ -38,20 +39,27 @@ object BlobSummary {
     0L, Long.MaxValue, Long.MinValue, 0L, Long.MaxValue, Long.MinValue,
     0L, Long.MaxValue, Long.MinValue))
 
-  /** The one summary walk over an inflated PrimitiveBlock: field tags
-    * only, plus each element's id field (plain Node ids are zigzag,
-    * Way/Relation ids plain varints, DenseNodes ids packed zigzag
-    * deltas, as in the decoder). Every group and element must be
-    * length-delimited: unlike the skip-driven decoder walks, a
-    * different wire type here would be misread into wrong counts and
-    * spans, and wrong spans silently drop blobs from pruned scans. */
+  /** The summary of an inflated PrimitiveBlock, from [[foreachId]]. */
   def of(block: Array[Byte]): BlobSummary = {
     val a = empty.a.clone()
-    def add(t: Int, id: Long): Unit = {
+    foreachId(block) { (t, id) =>
       a(3 * t) += 1
       if (id < a(3 * t + 1)) a(3 * t + 1) = id
       if (id > a(3 * t + 2)) a(3 * t + 2) = id
     }
+    new BlobSummary(a)
+  }
+
+  /** The one id walk over an inflated PrimitiveBlock: field tags only,
+    * plus each element's id field (plain Node ids are zigzag,
+    * Way/Relation ids plain varints, DenseNodes ids packed zigzag
+    * deltas, as in the decoder); `f` gets each element's type and id in
+    * block order. Every group and element must be length-delimited:
+    * unlike the skip-driven decoder walks, a different wire type here
+    * would be misread into wrong counts, spans and shadow ids, and
+    * those silently drop blobs from pruned scans or rows from
+    * multi-file reads. */
+  def foreachId(block: Array[Byte])(f: (Int, Long) => Unit): Unit = {
     def elemId(g: PbfReader, zig: Boolean): Long = {
       var id = 0L
       while (g.hasMore) {
@@ -72,7 +80,7 @@ object BlobSummary {
           (t2 >> 3) match {
             case 1 =>
               requireWire(t2, "Node")
-              add(0, elemId(g.readMessage(), zig = true))
+              f(0, elemId(g.readMessage(), zig = true))
             case 2 =>
               requireWire(t2, "DenseNodes")
               val d = g.readMessage()
@@ -82,21 +90,42 @@ object BlobSummary {
                   requireWire(t3, "DenseNodes.id")
                   val ids = d.readPackedLongs(zigzag = true, delta = true)
                   var i = 0
-                  while (i < ids.length) { add(0, ids(i)); i += 1 }
+                  while (i < ids.length) { f(0, ids(i)); i += 1 }
                 } else d.skip(t3 & 7)
               }
             case 3 =>
               requireWire(t2, "Way")
-              add(1, elemId(g.readMessage(), zig = false))
+              f(1, elemId(g.readMessage(), zig = false))
             case 4 =>
               requireWire(t2, "Relation")
-              add(2, elemId(g.readMessage(), zig = false))
+              f(2, elemId(g.readMessage(), zig = false))
             case _ => g.skip(t2 & 7)
           }
         }
       } else root.skip(tag & 7)
     }
-    new BlobSummary(a)
+  }
+
+  /** The ids of `block` that also occur in any of `shadows` (inflated
+    * blocks of earlier files), per wanted type as a sorted array, null
+    * for a type with none: the ids a multi-file read skips in this
+    * blob because an earlier file holds them. The shadows are walked
+    * with [[foreachId]] and never decoded; only this block's own ids
+    * are held, so the result is no larger than its element count. */
+  def shadowedIds(block: Array[Byte], shadows: Iterator[Array[Byte]],
+      wantTypes: Array[Boolean]): Array[Array[Long]] = {
+    val own = Array.fill(3)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    foreachId(block)((t, id) => if (wantTypes(t)) own(t) += id)
+    val ids = own.map { b => val a = b.result(); java.util.Arrays.sort(a); a }
+    val hit = ids.map(a => new Array[Boolean](a.length))
+    shadows.foreach(foreachId(_) { (t, id) =>
+      val k = java.util.Arrays.binarySearch(ids(t), id)
+      if (k >= 0) hit(t)(k) = true
+    })
+    Array.tabulate(3) { t =>
+      val skip = ids(t).indices.filter(hit(t)).map(ids(t)).toArray
+      if (skip.isEmpty) null else skip
+    }
   }
 
   private def requireWire(tag: Int, field: String): Unit =
@@ -104,5 +133,5 @@ object BlobSummary {
       throw new java.io.IOException(
         s"malformed PrimitiveBlock: $field must be length-delimited (wire type 2), " +
           s"got wire type ${tag & 7}: unpacked/non-message encoding is not supported " +
-          "by the blob summary walk (type and idRanges pruning, border intervals, COUNT pushdown)")
+          "by the blob id walk (type pruning, multi-file shadows, COUNT pushdown)")
 }

@@ -320,8 +320,9 @@ object BlockDecoder {
 
   /** Block-wide decode state shared by the per-element walkers. */
   private final class Block(val strs: Array[String], val isMust: Array[Boolean],
-      val needs: DecodeNeeds, val idFilter: Set[Long], val gran: Long,
-      val latOff: Long, val lonOff: Long, val dateGran: Long, val out: ElementBatch)
+      val needs: DecodeNeeds, val idFilter: Set[Long], val skip: Array[Array[Long]],
+      val gran: Long, val latOff: Long, val lonOff: Long, val dateGran: Long,
+      val out: ElementBatch)
 
   /** Decodes one PrimitiveBlock into an [[ElementBatch]].
     *
@@ -338,9 +339,13 @@ object BlockDecoder {
     *   its unsatisfiable-filter block skip (osmquery.py:311-323) when no
     *   key occurs in the string table.
     * @param idFilter when non-null, only elements with these ids are
-    *   emitted (reference osmquery.py:262-276). */
+    *   emitted (reference osmquery.py:262-276).
+    * @param skip when non-null, per type a sorted array (or null) of
+    *   ids not to emit: the ids an earlier file of a multi-file read
+    *   holds ([[BlobSummary.shadowedIds]]). */
   def decodeBatch(block: Array[Byte], wantTypes: Array[Boolean], needs: DecodeNeeds,
-      mustTagKeys: Array[String], idFilter: Set[Long]): ElementBatch = {
+      mustTagKeys: Array[String], idFilter: Set[Long],
+      skip: Array[Array[Long]] = null): ElementBatch = {
     val out = new ElementBatch(needs)
     val root = new PbfReader(block)
     var strs = emptyS
@@ -379,7 +384,7 @@ object BlockDecoder {
       isMust = strs.map(keySet.contains)
       if (!isMust.contains(true)) return out
     }
-    val b = new Block(strs, isMust, needs, idFilter, granularity, latOffset, lonOffset,
+    val b = new Block(strs, isMust, needs, idFilter, skip, granularity, latOffset, lonOffset,
       dateGranularity, out)
     groupSpans.foreach { case (s, e) =>
       val g = new PbfReader(root.buf, s, e)
@@ -472,7 +477,7 @@ object BlockDecoder {
       }
     }
     if (!anyMust(b.isMust, keys, 0, keys.length, 1) ||
-      (b.idFilter != null && !b.idFilter.contains(id))) return
+      (b.idFilter != null && !b.idFilter.contains(id)) || skipped(b, etype, id)) return
     val out = b.out
     val i = out.add(id, etype,
       if (etype == 0) 1e-9 * (b.latOff + b.gran * lat) else 0.0,
@@ -495,8 +500,8 @@ object BlockDecoder {
 
   /** Vectorized DenseNodes incl. the 0-delimited keys_vals splitter
     * (reference dense.py:8-50, protobuf.pyx:74-106). With no tags,
-    * must-key or id filter the packed arrays convert to columns in
-    * tight loops with no per-element allocation (reference
+    * must-key, id filter or skipped node ids the packed arrays convert
+    * to columns in tight loops with no per-element allocation (reference
     * dense.py:83-180); otherwise each node's kv span is walked. */
   private def decodeDense(r: PbfReader, b: Block): Unit = {
     val needs = b.needs
@@ -534,7 +539,8 @@ object BlockDecoder {
     val m = ids.length
     val tsScale = b.dateGran * 1000L // DenseInfo timestamp units → epoch micros
     val out = b.out
-    if (b.isMust == null && b.idFilter == null && !needs.tags) {
+    if (b.isMust == null && b.idFilter == null && (b.skip == null || b.skip(0) == null) &&
+      !needs.tags) {
       out.ensure(m)
       val base = out.n
       System.arraycopy(ids, 0, out.ids, base, m)
@@ -570,7 +576,7 @@ object BlockDecoder {
         if (p > kvs.length) badKvSpan("DenseNodes keys_vals key without value")
         kvPos = if (p < kvs.length) p + 1 else p
         if (anyMust(b.isMust, kvs, spanStart, p, 2) &&
-          (b.idFilter == null || b.idFilter.contains(ids(i)))) {
+          (b.idFilter == null || b.idFilter.contains(ids(i))) && !skipped(b, 0, ids(i))) {
           val j = out.add(ids(i), 0,
             if (lats.isEmpty) 0.0 else 1e-9 * (b.latOff + b.gran * lats(i)),
             if (lons.isEmpty) 0.0 else 1e-9 * (b.lonOff + b.gran * lons(i)),
@@ -585,6 +591,10 @@ object BlockDecoder {
       }
     }
   }
+
+  /** Is `id` of type `t` among the block's skipped ids? */
+  private def skipped(b: Block, t: Int, id: Long): Boolean =
+    b.skip != null && b.skip(t) != null && java.util.Arrays.binarySearch(b.skip(t), id) >= 0
 
   /** Any key id in `keys(from until until by step)` flagged in isMust?
     * (integer check, pre-materialization; true when no must-key test) */

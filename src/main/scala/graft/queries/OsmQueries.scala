@@ -101,10 +101,11 @@ object OsmQueries {
     // scale probe: the SAME topology workload over the BigWorld split
     // into two border-overlapping region files (adjacent real-world
     // extracts carry border elements verbatim in both files). Gated by
-    // the IDENTICAL oracle as osm_big_topology: the multi-file border
-    // dedup (dedupMultiFile) must make the split world's result
-    // byte-equal to the single file's, and the bench row gives that
-    // dedup shuffle a round-over-round signal (VERDICT r9 task 7;
+    // the IDENTICAL oracle as osm_big_topology: the osmpbf source's
+    // multi-file read (each element once, from the first file holding
+    // it) must make the split world's result byte-equal to the single
+    // file's, and the bench row gives its shadow reads a
+    // round-over-round signal (VERDICT r9 task 7;
     // ScaleProbeSplitSpec pins the same identity at mini scale, the
     // 7M three-shard form lives in ScaleProbe's mf_* phases)
     "osm_split_topology" -> ((s, _) => {

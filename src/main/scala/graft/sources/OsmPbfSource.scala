@@ -28,6 +28,17 @@ import graft.pbf._
   * blob — a 100 TB corpus plans ~128 MB splits, not ~6M tasks.
   * At 100 TB the framing pass reads ~3 MB per 100 GB file.
   *
+  * Multi-file reads: a path with several files reads as one table
+  * holding each (type, id) once, taken from the first file in path
+  * order that holds it — adjacent region extracts share one global id
+  * space and carry their border elements in both files. A blob's
+  * shadows are the blobs of earlier files whose id span for a wanted
+  * type overlaps its own ([[OsmPbfScan.shadowsOf]]); the reader walks
+  * their ids (no element decode) and the decoder skips the ones the
+  * blob also holds, so both readers and every pushdown below see the
+  * one deduped stream. Duplicates inside one file are kept, as on a
+  * single-file read.
+  *
   * Pushdown:
   *  - `SupportsPushDownRequiredColumns` — skips protobuf field decode for
   *    unrequested columns (tags/refs/members/info), mirroring the
@@ -54,39 +65,6 @@ object OsmPbfSource {
     * retired (README "Columnar refs/tags tier"). */
   val scalarCols: Set[String] =
     Set("id", "type", "lat", "lon", "version", "timestamp", "changeset")
-
-  /** Per-type id-range scan restriction, as the `idRanges` source
-    * option: `"t,lo,hi;t,lo,hi"` (t ∈ 0/1/2, lo ≤ hi). A scan with
-    * ranges keeps only blobs whose per-type id span (from the cached
-    * blob summaries) intersects a requested interval of a wanted type
-    * — blob-granular PRUNING, not an element filter: a kept blob
-    * still emits all its rows, the consumer re-applies the exact
-    * predicate (the same conservative-recheck contract as the pushed
-    * filters). Serves the multi-file border-dedup split, whose overlap
-    * intervals are plan-time metadata. */
-  def serializeIdRanges(rs: Seq[(Int, Long, Long)]): String =
-    rs.map { case (t, lo, hi) => s"$t,$lo,$hi" }.mkString(";")
-
-  /** Parses the `idRanges` option; a malformed entry raises an
-    * IllegalArgumentException naming the option, the entry and the
-    * expected form (a type outside 0..2 would otherwise prune every
-    * blob and return an empty scan). */
-  def parseIdRanges(s: String): Seq[(Int, Long, Long)] =
-    if (s == null || s.trim.isEmpty) Nil
-    else s.split(';').toSeq.filter(_.trim.nonEmpty).map { part =>
-      def bad(why: String): Nothing = throw new IllegalArgumentException(
-        s"invalid idRanges entry '$part': $why; expected 't,lo,hi;...' " +
-          "with t in {0,1,2} (node, way, relation) and lo <= hi")
-      val (t, lo, hi) = part.split(",", -1).map(_.trim) match {
-        case Array(t, lo, hi) =>
-          try (t.toInt, lo.toLong, hi.toLong)
-          catch { case _: NumberFormatException => bad("not a number") }
-        case fields => bad(s"${fields.length} fields instead of 3")
-      }
-      if (t < 0 || t > 2) bad(s"type $t outside 0..2")
-      if (lo > hi) bad(s"lo $lo > hi $hi")
-      (t, lo, hi)
-    }
 
   val schema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -122,12 +100,10 @@ class OsmPbfTable(path: String) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new OsmPbfScanBuilder(path,
       Option(options.get("mustTagKeys"))
-        .map(_.split('\u0001').filter(_.nonEmpty)).orNull,
-      OsmPbfSource.parseIdRanges(options.get("idRanges")))
+        .map(_.split('\u0001').filter(_.nonEmpty)).orNull)
 }
 
-class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
-    idRanges: Seq[(Int, Long, Long)] = Nil)
+class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
 
@@ -144,14 +120,15 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
     * grouped exactly by `type` qualifies; any pushed filter keeps the
     * row path (Spark only offers aggregates when no post-scan filter
     * remains, and this source conservatively re-checks every pushed
-    * filter post-scan). */
+    * filter post-scan). A path whose planned blobs have shadows is
+    * counted by the deduped row scan instead: the summaries count every
+    * file's copy of a shared element. */
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
 
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (idFilter.nonEmpty || mustTagKeys != null || idRanges.nonEmpty ||
-      !wantTypes.forall(identity)) return false
+    if (idFilter.nonEmpty || mustTagKeys != null || !wantTypes.forall(identity)) return false
     val groupOk = aggregation.groupByExpressions.forall {
       case f: org.apache.spark.sql.connector.expressions.NamedReference =>
         f.fieldNames.length == 1 && f.fieldNames()(0) == "type"
@@ -160,7 +137,8 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
     val aggs = aggregation.aggregateExpressions
     val aggsOk = aggs.nonEmpty && aggs.forall(
       _.isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar])
-    if (!groupOk || !aggsOk) return false
+    if (!groupOk || !aggsOk || OsmPbfScan.plan(path, wantTypes).exists(_._2.nonEmpty))
+      return false
     pushedCounts = Some((aggregation.groupByExpressions.nonEmpty, aggs.length))
     true
   }
@@ -210,7 +188,7 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
   override def build(): Scan = pushedCounts match {
     case Some((groupByType, nCounts)) => new OsmPbfCountScan(path, groupByType, nCounts)
     case None =>
-      new OsmPbfScan(path, required, wantTypes, idFilter, mustTagKeys, idRanges)
+      new OsmPbfScan(path, required, wantTypes, idFilter, mustTagKeys)
   }
 }
 
@@ -224,13 +202,9 @@ class OsmPbfScanBuilder(path: String, mustTagKeys: Array[String] = null,
   * them. A global count always has one row, so an empty file counts 0,
   * not null; a grouped count has no row for an absent type.
   *
-  * Multi-file caveat: on a DIRECTORY of adjacent extracts, bare-scan
-  * counts (`spark.read.format("osmpbf").load(dir).count()`) are RAW —
-  * border elements duplicated across files are counted once per file,
-  * same as the row path's bare-scan semantics have always been.
-  * Deduplication happens ABOVE the scan (which blocks this pushdown):
-  * `OsmFile.info()` and `OsmQueryExec.scan` are the deduped surfaces
-  * for overlapping-extract corpora. */
+  * On a multi-file path it is planned only when no blob has a shadow
+  * (the files' id spans are disjoint), so no element is counted twice;
+  * a path with overlapping files is counted by the deduped row scan. */
 class OsmPbfCountScan(path: String, groupByType: Boolean, nCounts: Int)
     extends LocalScan {
 
@@ -254,12 +228,13 @@ class OsmPbfCountScan(path: String, groupByType: Boolean, nCounts: Int)
 
 class OsmPbfScan(path: String, required: StructType,
     wantTypes: Array[Boolean], idFilter: Option[Set[Long]],
-    mustTagKeys: Array[String] = null,
-    idRanges: Seq[(Int, Long, Long)] = Nil)
+    mustTagKeys: Array[String] = null)
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  private lazy val planned = OsmPbfScan.plan(path, wantTypes)
 
   /** Planner statistics from the blob index: without them a DSv2 scan
     * sizes as `defaultSizeInBytes` (effectively infinite) and Catalyst
@@ -272,7 +247,7 @@ class OsmPbfScan(path: String, required: StructType,
     * pass; sizeInBytes is what the join planner keys on). */
   override def estimateStatistics(): Statistics = {
     val bytes = math.max(1L,
-      OsmPbfScan.prunedBlobs(path, wantTypes, idRanges).map(_.dataLen.toLong).sum *
+      planned.map(_._1.dataLen.toLong).sum *
         OsmPbfScan.RowBytesPerCompressedByte)
     new Statistics {
       override def sizeInBytes: java.util.OptionalLong = java.util.OptionalLong.of(bytes)
@@ -284,13 +259,13 @@ class OsmPbfScan(path: String, required: StructType,
       .collect { case (n, true) => n }.mkString(",")
     val must = if (mustTagKeys == null) ""
       else s", mustTags=${mustTagKeys.mkString("|")}"
-    val rng = if (idRanges.isEmpty) ""
-      else s", idRanges=${OsmPbfSource.serializeIdRanges(idRanges)}"
-    s"OsmPbfScan(path=$path, types=$types, cols=${required.fieldNames.mkString(",")}$must$rng)"
+    val nShadows = planned.map(_._2.length).sum
+    val shadows = if (nShadows == 0) "" else s", shadows=$nShadows"
+    s"OsmPbfScan(path=$path, types=$types, cols=${required.fieldNames.mkString(",")}$must$shadows)"
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    OsmPbfScan.planPartitions(path, wantTypes, idRanges)
+    OsmPbfScan.planPartitions(planned)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new OsmPbfReaderFactory(required, wantTypes,
@@ -308,39 +283,65 @@ object OsmPbfScan {
     * underestimating could broadcast a huge side. */
   val RowBytesPerCompressedByte = 24L
 
-  /** F10 — blob-level pruning: when a type filter or id ranges are
-    * pushed, consult (and lazily build, one parallel pass per file) the
-    * blob summaries and drop blobs that cannot contain requested rows
-    * (reference osmquery.py:242-247; the reference's first-pass cache
-    * plays this role, SURVEY §4.1). Shared by partition planning and
-    * the planner statistics. */
-  def prunedBlobs(path: String, wantTypes: Array[Boolean],
-      idRanges: Seq[(Int, Long, Long)] = Nil): Seq[BlobInfo] =
-    if (wantTypes.forall(identity) && idRanges.isEmpty) OsmPbfFile.indexAll(path)
-    else OsmPbfStats.summaries(path).collect {
-      case (b, s) if blobIntersects(s, wantTypes, idRanges) => b
+  /** F10 — blob-level pruning: when a type filter is pushed, consult
+    * (and lazily build, one parallel pass per file) the blob summaries
+    * and drop blobs that hold no wanted type (reference
+    * osmquery.py:242-247; the reference's first-pass cache plays this
+    * role, SURVEY §4.1). */
+  def prunedBlobs(path: String, wantTypes: Array[Boolean]): Seq[BlobInfo] =
+    if (wantTypes.forall(identity)) OsmPbfFile.indexAll(path)
+    else OsmPbfStats.summaries(path).collect { case (b, s) if holdsWanted(s, wantTypes) => b }
+
+  private def holdsWanted(s: BlobSummary, wantTypes: Array[Boolean]): Boolean =
+    (0 to 2).exists(t => wantTypes(t) && s.count(t) > 0)
+
+  private val NoShadows = Array.empty[BlobInfo]
+
+  /** The blobs a scan reads, in path order, each with its shadows. A
+    * single file has none and plans from [[prunedBlobs]]; several files
+    * need every blob's summary. Shared by partition planning, the
+    * planner statistics, the description and the COUNT pushdown. */
+  def plan(path: String, wantTypes: Array[Boolean]): Seq[(BlobInfo, Array[BlobInfo])] =
+    if (OsmPbfFile.expand(path).size <= 1) prunedBlobs(path, wantTypes).map(_ -> NoShadows)
+    else {
+      val sums = OsmPbfStats.summaries(path).toIndexedSeq
+      sums.zip(shadowsOf(sums, wantTypes)).collect {
+        case ((b, s), sh) if holdsWanted(s, wantTypes) => b -> sh
+      }
     }
 
-  /** Keep a blob iff SOME wanted type is present in it AND (when id
-    * ranges are given) that type's blob id span intersects a requested
-    * interval — blob-granular, consumers re-check exactly. THE single
-    * intersection convention (closed intervals), shared by partition
-    * pruning above and the border-dedup blob-fraction decision
-    * (OsmQueryExec.dedupMultiFile) so the two can never drift. */
-  def blobIntersects(s: BlobSummary, wantTypes: Array[Boolean],
-      idRanges: Seq[(Int, Long, Long)]): Boolean =
-    (0 to 2).exists { t =>
-      wantTypes(t) && s.count(t) > 0 && (idRanges.isEmpty ||
-        idRanges.exists { case (rt, lo, hi) =>
-          rt == t && lo <= s.maxId(t) && hi >= s.minId(t)
-        })
+  /** Per blob of `sums` (every blob under a path, in path order), its
+    * shadows: the blobs of earlier files whose id span for a wanted type
+    * overlaps the blob's own span for that type, in path order. One
+    * sweep per type over the blobs sorted by span start: a blob leaves
+    * the active set once its span ends before the next start, so the
+    * work is the sort plus the overlapping pairs, never all pairs. */
+  def shadowsOf(sums: IndexedSeq[(BlobInfo, BlobSummary)],
+      wantTypes: Array[Boolean]): Array[Array[BlobInfo]] = {
+    val pairs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    (0 to 2).filter(wantTypes(_)).foreach { t =>
+      val active = scala.collection.mutable.ArrayBuffer.empty[Int]
+      sums.indices.filter(sums(_)._2.count(t) > 0).sortBy(sums(_)._2.minId(t)).foreach { i =>
+        val lo = sums(i)._2.minId(t)
+        active.filterInPlace(sums(_)._2.maxId(t) >= lo)
+        // files come in path order, so of two files the later has the higher index
+        active.foreach { j =>
+          if (sums(j)._1.path != sums(i)._1.path) pairs += ((math.max(i, j), math.min(i, j)))
+        }
+        active += i
+      }
     }
+    val out = Array.fill(sums.size)(NoShadows)
+    pairs.distinct.groupBy(_._1).foreach { case (i, ps) =>
+      out(i) = ps.map(_._2).sorted.map(sums(_)._1).toArray
+    }
+    out
+  }
 
-  /** Index, prune and pack the file's blobs into input partitions for
-    * the row and columnar reads. */
-  def planPartitions(path: String, wantTypes: Array[Boolean],
-      idRanges: Seq[(Int, Long, Long)] = Nil): Array[InputPartition] = {
-    val pruned = prunedBlobs(path, wantTypes, idRanges)
+  /** Pack the planned blobs into input partitions for the row and
+    * columnar reads. */
+  def planPartitions(planned: Seq[(BlobInfo, Array[BlobInfo])]): Array[InputPartition] = {
+    val blobs = planned.map(_._1)
     // Pack blobs into splits with Spark's FilePartition formula: a
     // 100 TB corpus is ~6M blobs — one task per blob would swamp the
     // scheduler, so consecutive blobs coalesce up to maxSplitBytes,
@@ -349,11 +350,13 @@ object OsmPbfScan {
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val openCost = conf.filesOpenCostInBytes
     val bytesPerCore =
-      pruned.map(_.dataLen.toLong + openCost).sum /
+      blobs.map(_.dataLen.toLong + openCost).sum /
         math.max(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism, 1)
     val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore))
-    packBlobs(pruned, maxSplit, openCost)
-      .map(bs => OsmPbfPartition(bs.toArray): InputPartition).toArray
+    val shadows = planned.iterator.map(_._2)
+    packBlobs(blobs, maxSplit, openCost)
+      .map(bs => OsmPbfPartition(bs.toArray, bs.map(_ => shadows.next()).toArray): InputPartition)
+      .toArray
   }
 
   /** Greedy split packing, same semantics as Spark's
@@ -379,13 +382,15 @@ object OsmPbfScan {
   }
 }
 
-case class OsmPbfPartition(blobs: Array[BlobInfo]) extends InputPartition
+/** A read task's blobs, and per blob its shadows (see [[OsmPbfScan.shadowsOf]]). */
+case class OsmPbfPartition(blobs: Array[BlobInfo], shadows: Array[Array[BlobInfo]])
+    extends InputPartition
 
 /** The osmpbf source's summary walk: the [[graft.pbf.BlobSummary]] of
   * every blob under a path, cached per file version with its framing
   * index ([[graft.pbf.OsmPbfFile.summarized]]). Files not summarized
   * yet are walked by one parallel Spark job (inflate + field-tag walk,
-  * no element decode); later type-, id-range-pruned and counted scans
+  * no element decode); later type-pruned, multi-file and counted scans
   * read the cache. */
 object OsmPbfStats {
   def summaries(path: String): Seq[(BlobInfo, BlobSummary)] =
@@ -427,7 +432,9 @@ class OsmPbfReaderFactory(schema: StructType, wantTypes: Array[Boolean],
 /** A partition's blobs, read and decoded one PrimitiveBlock at a time
   * into [[graft.pbf.ElementBatch]]es — the one decode both readers
   * emit from. Only the columns the scan requires are decoded; blocks
-  * the type, id or must-key filters empty out are skipped. */
+  * the type, id or must-key filters empty out are skipped. A blob with
+  * shadows first reads them through the same [[graft.pbf.BlobReader]]
+  * and skips the ids they hold. */
 final class OsmPbfBatches(p: OsmPbfPartition, fieldNames: Array[String],
     wantTypes: Array[Boolean], idFilter: Set[Long], mustTagKeys: Array[String])
     extends AutoCloseable {
@@ -440,13 +447,17 @@ final class OsmPbfBatches(p: OsmPbfPartition, fieldNames: Array[String],
     coords = fieldNames.exists(f => f == "lat" || f == "lon"))
 
   private val blobReader = new BlobReader(OsmPbfFile.sharedConf)
-  private val blobIter = p.blobs.iterator
+  private var i = 0
 
   /** The next non-empty batch, or null once the partition is done. */
   def next(): ElementBatch = {
-    while (blobIter.hasNext) {
-      val b = BlockDecoder.decodeBatch(blobReader.read(blobIter.next()), wantTypes, needs,
-        mustTagKeys, idFilter)
+    while (i < p.blobs.length) {
+      val block = blobReader.read(p.blobs(i))
+      val shadows = p.shadows(i)
+      val skip = if (shadows.isEmpty) null
+        else BlobSummary.shadowedIds(block, shadows.iterator.map(blobReader.read), wantTypes)
+      i += 1
+      val b = BlockDecoder.decodeBatch(block, wantTypes, needs, mustTagKeys, idFilter, skip)
       if (b.n > 0) return b
     }
     null

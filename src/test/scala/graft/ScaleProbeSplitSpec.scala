@@ -7,9 +7,9 @@ import graft.sources.SparkTestSession
 
 /** Pins the multi-file corpus contract at fixture scale: splitting one
   * extract into border-overlapping region files (ScaleProbe.splitPbf)
-  * duplicates blobs on disk, and the scan-side (type, id) border dedup
-  * makes every query see each element exactly once — identical results
-  * to the single file. */
+  * duplicates blobs on disk, and the osmpbf source reads each (type, id)
+  * once, so every query sees each element exactly once — identical
+  * results to the single file. */
 class ScaleProbeSplitSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -29,12 +29,12 @@ class ScaleProbeSplitSpec extends AnyFunSuite {
     val dup = ScaleProbe.splitPbf(f.getAbsolutePath, dir, 3, 1)
     assert(dup === 2, "3 regions with overlap 1 duplicate exactly 2 border blobs")
 
-    // raw multi-file scan sees the duplicated elements...
+    // the bare multi-file scan reads each duplicated element once...
     val raw = spark.read.format("osmpbf").load(dir)
     val single = spark.read.format("osmpbf").load(f.getAbsolutePath)
-    assert(raw.count() > single.count())
+    assert(raw.count() === single.count())
 
-    // ...but the OsmFile surface and the query path dedup to identity
+    // ...and so do the OsmFile surface and the query path
     // ("blobs" is a physical stat: 6 + 2 duplicated border blobs)
     val infoM = new graft.osm.OsmFile(spark, dir).info()
     val infoS = new graft.osm.OsmFile(spark, f.getAbsolutePath).info()
@@ -58,7 +58,7 @@ class ScaleProbeSplitSpec extends AnyFunSuite {
     // the multi-file hazard specific to relations: the relation, its
     // member ways and their nodes land in DIFFERENT region files, and
     // border-duplicated member ways (blobs 2 and 4 here) would double
-    // their ring rows without the (type, id) dedup below the assembly.
+    // their ring rows if the scan returned both copies.
     // The inner ring is itself building-tagged — the standalone/member
     // overlap must resolve the same way on both corpora.
     val f = java.io.File.createTempFile("splitrel", ".osm.pbf")

@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pbf.OsmPbfWriter._
 import graft.sources.SparkTestSession
 
-/** Pins the border-range dedup machinery (r22): the blob summaries' id
-  * spans agree with the decoder, every cross-file duplicated key lies
-  * inside a border interval (the correctness invariant of the split
-  * dedup), the idRanges scan option prunes blobs, and the split path
-  * equals the full-dedup fallback row-for-row. */
+/** Pins the multi-file shadow planning: the blob summaries' id spans
+  * agree with the decoder, and every cross-file duplicated key lies
+  * inside the border interval of a blob and one of its shadows — the
+  * correctness invariant of the source's multi-file read, which skips
+  * only ids its shadows hold. */
 class BorderDedupSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -58,45 +58,27 @@ class BorderDedupSpec extends AnyFunSuite {
   test("every cross-file duplicated key lies inside a border interval") {
     val (_, dir) = mkWorld()
     assert(!spark.sparkContext.isStopped) // stats walk needs the active session
-    val (ranges, _) = OsmQueryExec.borderRanges(dir)
-    assert(ranges.nonEmpty, "3-way overlap-1 split must have border intervals")
-    // raw per-file keys
-    val files = graft.pbf.OsmPbfFile.expand(dir, graft.pbf.OsmPbfFile.sharedConf)
-    val perFile = files.map { f =>
-      spark.read.format("osmpbf").load(f)
-        .select("type", "id").collect()
-        .map(r => (r.getByte(0).toInt, r.getLong(1))).toSet
-    }
-    val dups = perFile.combinations(2).flatMap(p => p(0) intersect p(1)).toSet
+    val sums = graft.sources.OsmPbfStats.summaries(dir).toIndexedSeq
+    val shadows = graft.sources.OsmPbfScan.shadowsOf(sums, Array(true, true, true))
+    val conf = graft.pbf.OsmPbfFile.sharedConf
+    // (type, id) -> the blobs holding it, in path order
+    val holders = sums.indices.flatMap { i =>
+      graft.pbf.BlockDecoder.decode(graft.pbf.OsmPbfFile.readBlob(sums(i)._1, conf),
+        Array(true, true, true), graft.pbf.DecodeNeeds(tags = false, refs = false,
+          members = false, info = false, coords = false))
+        .map(d => ((d.etype.toInt, d.id), i))
+    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
+    val dups = holders.filter { case (_, bs) => bs.map(sums(_)._1.path).distinct.size > 1 }
     assert(dups.nonEmpty, "the split must duplicate border elements")
-    dups.foreach { case (t, id) =>
-      assert(ranges.exists { case (rt, lo, hi) => rt == t && id >= lo && id <= hi },
-        s"duplicated key ($t,$id) outside every border interval $ranges")
+    dups.foreach { case ((t, id), bs) =>
+      val first = bs.head
+      bs.filter(sums(_)._1.path != sums(first)._1.path).foreach { later =>
+        assert(shadows(later).contains(sums(first)._1),
+          s"($t,$id): blob $later lacks shadow $first")
+        val lo = math.max(sums(first)._2.minId(t), sums(later)._2.minId(t))
+        val hi = math.min(sums(first)._2.maxId(t), sums(later)._2.maxId(t))
+        assert(lo <= id && id <= hi, s"($t,$id) outside the border interval [$lo, $hi]")
+      }
     }
-  }
-
-  test("idRanges option prunes blobs; split path equals full-dedup fallback") {
-    val (_, dir) = mkWorld()
-    assert(!spark.sparkContext.isStopped) // stats walk needs the active session
-    val (ranges, _) = OsmQueryExec.borderRanges(dir)
-    val ser = graft.sources.OsmPbfSource.serializeIdRanges(ranges)
-    assert(graft.sources.OsmPbfSource.parseIdRanges(ser) === ranges)
-    val all = spark.read.format("osmpbf").load(dir)
-    val pruned = spark.read.format("osmpbf").option("idRanges", ser).load(dir)
-    // pruning is blob-granular: a strict subset of raw rows, and a
-    // SUPERSET of the rows actually inside the intervals
-    assert(pruned.count() < all.count())
-    val inRange = ranges.map { case (t, lo, hi) =>
-      org.apache.spark.sql.functions.col("type") === t &&
-        org.apache.spark.sql.functions.col("id").between(lo, hi)
-    }.reduce(_ || _)
-    assert(pruned.filter(inRange).count() === all.filter(inRange).count(),
-      "blob pruning must not drop in-range rows")
-
-    // end-to-end: split dedup == full-dedup fallback, row for row
-    def rows(maxBorderFrac: Double) =
-      OsmQueryExec.scan(spark, dir, maxBorderFrac).select("type", "id")
-        .collect().map(r => (r.getByte(0), r.getLong(1))).sorted.toSeq
-    assert(rows(1.0) === rows(0.0))
   }
 }

@@ -12,7 +12,12 @@ import graft.pbf.OsmPbfWriter._
   * reference, as a city extract cut from a larger region does. */
 object RandomWorld {
 
-  def write(path: String, seed: Long, clipped: Boolean): Unit = {
+  def write(path: String, seed: Long, clipped: Boolean): Unit =
+    graft.pbf.OsmPbfWriter.write(path, blocks(seed, clipped))
+
+  /** The world's blocks: nodes in id order, then the ways, then the
+    * relations. */
+  def blocks(seed: Long, clipped: Boolean): Seq[Seq[Elem]] = {
     val rnd = new scala.util.Random(seed)
     val side = 12 + rnd.nextInt(10)
     def nid(r: Int, c: Int): Long = 1L + r * side + c
@@ -71,7 +76,6 @@ object RandomWorld {
       Seq("type" -> "route", "route" -> "bus"))
 
     val kept = if (clipped) nodes.filter(_ => rnd.nextInt(8) != 0) else nodes
-    graft.pbf.OsmPbfWriter.write(path,
-      kept.grouped(97).toSeq ++ Seq(highways ++ buildings ++ ringWays, rels.toSeq))
+    kept.grouped(97).toSeq ++ Seq(highways ++ buildings ++ ringWays, rels.toSeq)
   }
 }

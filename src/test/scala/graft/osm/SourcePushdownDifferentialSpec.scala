@@ -1,22 +1,21 @@
 package graft.osm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{OsmPbfCountPushdownSpec, OsmPbfSource, SparkTestSession}
+import graft.sources.{OsmPbfCountPushdownSpec, SparkTestSession}
 
 /** The osmpbf source's summary-driven pushdowns are optimizations
   * only. Over random generated worlds, plain and clipped, and their
   * three-file border-overlapping splits:
-  *  - pushed `count()` and `groupBy("type").count()` equal the row
-  *    path's rows grouped on the client (raw on a directory);
+  *  - `count()` and `groupBy("type").count()` equal the row path's rows
+  *    grouped on the client; they are pushed on the single file and
+  *    not on the split, whose files share elements;
   *  - a type filter the source accepts returns the rows of one it
   *    cannot accept (`cast(type as string)`: Catalyst folds an
-  *    integer cast plus 0 back into a pushable `type` predicate);
-  *  - an `idRanges`-pruned scan filtered to its ranges returns the rows
-  *    of the unpruned scan with the same filter. */
+  *    integer cast plus 0 back into a pushable `type` predicate). */
 class SourcePushdownDifferentialSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -29,24 +28,25 @@ class SourcePushdownDifferentialSpec extends AnyFunSuite {
     df.queryExecution.optimizedPlan.collect { case r: DataSourceV2ScanRelation => r.scan.description() }
 
   /** A world and its three-file split (one duplicated blob per border). */
-  private def inputs(seed: Long, clipped: Boolean): Seq[String] = {
+  private def inputs(seed: Long, clipped: Boolean): (String, String) = {
     val f = java.io.File.createTempFile("srcdiff", ".osm.pbf")
     f.deleteOnExit()
     RandomWorld.write(f.getAbsolutePath, seed, clipped)
     val dir = java.nio.file.Files.createTempDirectory("srcdiffsplit").toString
     graft.ScaleProbe.splitPbf(f.getAbsolutePath, dir, 3, 1)
-    Seq(f.getAbsolutePath, dir)
+    (f.getAbsolutePath, dir)
   }
 
-  private def countsAgree(path: String): Option[String] = {
+  private def countsAgree(path: String, pushable: Boolean): Option[String] = {
     val truth = load(path).select("type", "id").collect()
       .groupBy(_.getByte(0)).map { case (t, rs) => t -> rs.length.toLong }
     val grouped = load(path).groupBy("type").count()
     val global = load(path).agg(count(lit(1)))
-    val pushed = Seq(grouped, global).forall(OsmPbfCountPushdownSpec.usesCountScan)
+    val pushed = Seq(grouped, global).map(OsmPbfCountPushdownSpec.usesCountScan)
     val byType = grouped.collect().map(r => r.getByte(0) -> r.getLong(1)).toMap
     val total = global.collect().head.getLong(0)
-    if (pushed && byType == truth && total == truth.values.sum && load(path).count() == total) None
+    if (pushed.forall(_ == pushable) && byType == truth && total == truth.values.sum &&
+      load(path).count() == total) None
     else Some(s"counts on $path: pushed=$pushed $byType / $total vs rows $truth")
   }
 
@@ -61,42 +61,13 @@ class SourcePushdownDifferentialSpec extends AnyFunSuite {
     else Some(s"types $types on $path: planned=$planned ${scans(accepted)} ${scans(refused)}")
   }
 
-  private def rangesAgree(path: String, ranges: Seq[(Int, Long, Long)]): Option[String] = {
-    val inRange: Column = ranges.map { case (t, lo, hi) =>
-      col("type") === t && col("id").between(lo, hi)
-    }.reduce(_ || _)
-    val pruned = spark.read.format("osmpbf")
-      .option("idRanges", OsmPbfSource.serializeIdRanges(ranges)).load(path).filter(inRange)
-    val full = load(path).filter(inRange)
-    if (scans(pruned).nonEmpty && scans(pruned).forall(_.contains("idRanges=")) &&
-      rows(pruned) == rows(full)) None
-    else Some(s"idRanges $ranges on $path: ${scans(pruned)}")
-  }
-
-  /** 1-3 random intervals around each type's id span in the world. */
-  private def randomRanges(path: String, rnd: scala.util.Random): Seq[(Int, Long, Long)] = {
-    val spans = load(path).select("type", "id").collect()
-      .groupBy(_.getByte(0).toInt).map { case (t, rs) =>
-        val ids = rs.map(_.getLong(1))
-        t -> (ids.min, ids.max)
-      }
-    Seq.fill(1 + rnd.nextInt(3)) {
-      val t = rnd.nextInt(3)
-      val (lo, hi) = spans(t)
-      def pick(): Long = lo - 3 + (rnd.nextDouble() * (hi - lo + 6)).toLong
-      val (a, b) = (pick(), pick())
-      (t, math.min(a, b), math.max(a, b))
-    }
-  }
-
-  test("property: count, type and idRanges pushdowns return the rows of the unpushed scans") {
+  test("property: count and type pushdowns equal unpushed scans") {
     val prop = Prop.forAll(Gen.choose(1L, 1000000L), Gen.oneOf(false, true)) { (seed, clipped) =>
       val rnd = new scala.util.Random(seed)
       val types = rnd.shuffle(Seq(0, 1, 2)).take(1 + rnd.nextInt(2)).sorted
-      val paths = inputs(seed, clipped)
-      val ranges = randomRanges(paths.head, rnd)
-      val failures = paths.flatMap(p =>
-        Seq(countsAgree(p), typesAgree(p, types), rangesAgree(p, ranges)).flatten)
+      val (file, dir) = inputs(seed, clipped)
+      val failures = Seq(countsAgree(file, pushable = true), countsAgree(dir, pushable = false),
+        typesAgree(file, types), typesAgree(dir, types)).flatten
       Prop(failures.isEmpty) :| s"seed $seed clipped $clipped:\n${failures.mkString("\n")}"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), prop)

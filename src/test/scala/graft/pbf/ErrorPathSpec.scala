@@ -115,47 +115,6 @@ class ErrorPathSpec extends AnyFunSuite {
     assert(e.getMessage.contains("wire type") && e.getMessage.contains("DenseNodes.id"))
   }
 
-  // A malformed `idRanges` source option is a typed error naming the
-  // option, the entry and the expected form — not a MatchError, a bare
-  // NumberFormatException, or (type outside 0..2) a silently empty scan.
-  private def badIdRanges(opt: String, entry: String): Unit = {
-    val e = intercept[IllegalArgumentException] {
-      graft.sources.OsmPbfSource.parseIdRanges(opt)
-    }
-    assert(e.getMessage.contains("idRanges") && e.getMessage.contains(s"'$entry'") &&
-      e.getMessage.contains("t,lo,hi") && e.getMessage.contains("{0,1,2}") &&
-      e.getMessage.contains("lo <= hi"), e.getMessage)
-  }
-
-  test("idRanges with fewer or more than 3 fields names the option") {
-    badIdRanges("0,1,5;1,7", "1,7")
-    badIdRanges("0,1", "0,1")
-    badIdRanges("0,1,2,3", "0,1,2,3")
-  }
-
-  test("idRanges with a non-number names the option") {
-    badIdRanges("1,x,9", "1,x,9")
-    badIdRanges("way,1,9", "way,1,9")
-  }
-
-  test("idRanges with a type outside 0..2 or lo > hi is rejected, not an empty scan") {
-    badIdRanges("3,1,9", "3,1,9")
-    badIdRanges("-1,1,9", "-1,1,9")
-    badIdRanges("0,9,1", "0,9,1")
-    assert(graft.sources.OsmPbfSource.parseIdRanges(" 0, 1, 9 ;2,5,5;") === Seq((0, 1L, 9L), (2, 5L, 5L)))
-  }
-
-  test("a malformed idRanges option fails the scan") {
-    val f = java.io.File.createTempFile("idrangesopt", ".osm.pbf")
-    f.deleteOnExit()
-    OsmPbfWriter.write(f.getAbsolutePath, Seq(Seq(OsmPbfWriter.N(1, 1.0, 1.0))))
-    val spark = graft.sources.SparkTestSession.spark
-    val e = intercept[IllegalArgumentException] {
-      spark.read.format("osmpbf").option("idRanges", "5,1,9").load(f.getAbsolutePath).collect()
-    }
-    assert(e.getMessage.contains("idRanges") && e.getMessage.contains("'5,1,9'"), e.getMessage)
-  }
-
   // Framing lengths are bounded by the PBF spec limits (BlobHeader
   // <= 64 KiB, Blob datasize and raw_size <= 32 MiB, no frame past the
   // end of the file): a corrupt length field raises an IOException

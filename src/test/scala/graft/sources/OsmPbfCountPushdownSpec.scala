@@ -123,13 +123,10 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
       Map(0.toByte -> 1L))
   }
 
-  test("multi-file split dir: pushed counts are RAW (border blobs counted per file)") {
-    // OsmPbfCountScan documents that bare-scan counts over a directory
-    // of adjacent extracts do NOT dedup border-duplicated elements —
-    // they match the row path's bare-scan semantics, and dedup happens
-    // ABOVE the scan (OsmFile.info / OsmQueryExec.scan). This pins the
-    // documented raw semantics so a future "fix" that silently changes
-    // them fails here first (VERDICT r7 task 5).
+  test("multi-file split dir: counts are deduped, not pushed") {
+    // a border-overlapping split holds shared elements in two files; the
+    // blob summaries would count both copies, so the count is declined
+    // and comes from the deduped row scan, equal to the single file's
     val f = java.io.File.createTempFile("countsplit", ".osm.pbf")
     f.deleteOnExit()
     // 6 blocks so a 3-way split has two interior borders
@@ -144,28 +141,18 @@ class OsmPbfCountPushdownSpec extends AnyFunSuite {
     val dup = graft.ScaleProbe.splitPbf(f.getAbsolutePath, dir, 3, 1)
     assert(dup === 2)
 
-    val pushedDir = spark.read.format("osmpbf").load(dir).groupBy("type").count()
-    assert(usesCountScan(pushedDir), "directory scans must still push the count")
-    // ground truth 1: the row path over the same directory (bare-scan
-    // raw semantics — collect and group client-side)
-    val rowTruth = spark.read.format("osmpbf").load(dir).select("type", "id")
-      .collect().groupBy(_.getByte(0)).map { case (t, rs) => t -> rs.length.toLong }
-    val got = pushedDir.collect().map(r => r.getByte(0) -> r.getLong(1)).toMap
-    assert(got === rowTruth, "pushed dir counts must equal raw row-path dir counts")
-    // ground truth 2: the sum of per-file pushed counts (raw = per-file)
-    val perFile = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".pbf"))
-      .flatMap { pf =>
-        spark.read.format("osmpbf").load(pf.getAbsolutePath)
-          .groupBy("type").count().collect()
-          .map(r => r.getByte(0) -> r.getLong(1))
-      }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sum }
-    assert(got === perFile)
-    // the duplicated border elements ARE double-counted vs the single file
-    val single = spark.read.format("osmpbf").load(f.getAbsolutePath)
-      .groupBy("type").count().collect().map(r => r.getByte(0) -> r.getLong(1)).toMap
-    assert(got.values.sum > single.values.sum,
-      "a border-overlapping split must raise the raw count")
-    // ...while the deduped surface above the scan is split-invariant
+    val dirGrouped = spark.read.format("osmpbf").load(dir).groupBy("type").count()
+    val dirGlobal = spark.read.format("osmpbf").load(dir).agg(count(lit(1)))
+    assert(!usesCountScan(dirGrouped) && !usesCountScan(dirGlobal),
+      "overlapping files must not push the count")
+    val singleGrouped = spark.read.format("osmpbf").load(f.getAbsolutePath).groupBy("type").count()
+    assert(usesCountScan(singleGrouped))
+    val single = singleGrouped.collect().map(r => r.getByte(0) -> r.getLong(1)).toMap
+    assert(dirGrouped.collect().map(r => r.getByte(0) -> r.getLong(1)).toMap === single)
+    assert(dirGlobal.collect().head.getLong(0) === single.values.sum)
+    // the summaries count the duplicated blobs once per file
+    val perFile = OsmPbfStats.summaries(dir).map(_._2.total).sum
+    assert(perFile > single.values.sum)
     val infoM = new graft.osm.OsmFile(spark, dir).info()
     val infoS = new graft.osm.OsmFile(spark, f.getAbsolutePath).info()
     assert(infoM - "blobs" === infoS - "blobs")
