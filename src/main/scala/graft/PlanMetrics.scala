@@ -1,14 +1,21 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev utility: per-STAGE cost breakdown for a query. TimeQuery's
   * end-to-end wall/CPU can't attribute cost inside a multi-job plan
   * (lazy localCheckpoint materializations each run as their own job,
   * invisible to final-plan metrics); a stage listener sees every stage
   * with its callsite, executor CPU and shuffle volume. It also prints
-  * the classes Spark compiled and the compile seconds of each rep.
+  * the classes Spark compiled and the compile seconds of each rep, and
+  * the largest generated method of each whole-stage codegen stage the
+  * recorded rep ran: one over [[ProbeRig.HugeMethodLimit]] bytes is
+  * never JIT-compiled, so that stage runs interpreted.
   * sbt "runMain graft.PlanMetrics osm_big_buildings" */
 object PlanMetrics {
 
@@ -52,6 +59,14 @@ object PlanMetrics {
         }
     }
     spark.sparkContext.addSparkListener(listener)
+    // every query execution of the recorded rep, its local checkpoints'
+    // plans included
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (record) executions.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
 
     args.toSeq.foreach { name =>
       println(s"\n========== $name ==========")
@@ -61,12 +76,15 @@ object PlanMetrics {
       val coldCodegen = ProbeRig.codegen() - c0
       graft.operators.Checkpoints.unpersistUnpinned(spark, blocking = true)
       rows.clear()
+      executions.clear()
       record = true
       val c1 = ProbeRig.codegen()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       val warmCodegen = ProbeRig.codegen() - c1
+      // let the listener bus deliver the rep's last stage and query
+      // events before they stop counting
+      Thread.sleep(500)
       record = false
-      Thread.sleep(500) // let the listener bus drain the last stage events
       println(s"rows=$n")
       println(f"${"stage"}%-6s${"tasks"}%-7s${"run_s"}%-8s${"cpu_s"}%-8s${"gc_s"}%-7s${"shRd_MB"}%-9s${"shWr_MB"}%-9s${"in_MB"}%-8s name")
       rows.sortBy(-_.runMs).foreach { r =>
@@ -79,6 +97,15 @@ object PlanMetrics {
       // Spark's 100-class codegen cache
       println(f"codegen_compiles=${warmCodegen.compiles} codegen_s=${warmCodegen.seconds}%.2f " +
         f"(warmup rep: codegen_compiles=${coldCodegen.compiles} codegen_s=${coldCodegen.seconds}%.2f)")
+      // stage ids restart at 1 in every execution (the query and each
+      // of its checkpoints)
+      executions.asScala.toSeq.zipWithIndex.foreach { case ((action, qe), i) =>
+        ProbeRig.stageMethodSizes(qe.executedPlan).foreach { case (id, bytes) =>
+          val jit = if (bytes > ProbeRig.HugeMethodLimit)
+            s" — over ${ProbeRig.HugeMethodLimit} B, run interpreted by HotSpot" else ""
+          println(s"execution $i ($action) codegen stage $id: largest method $bytes B$jit")
+        }
+      }
       graft.operators.Checkpoints.unpersistUnpinned(spark, blocking = true)
     }
     spark.stop()

@@ -119,6 +119,24 @@ private[graft] object ProbeRig {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
 
+  /** HotSpot never JIT-compiles a method of more than this many bytes
+    * of bytecode (`-XX:+DontCompileHugeMethods`, on by default): a
+    * whole-stage codegen stage whose largest method is bigger runs in
+    * the bytecode interpreter on every pass. */
+  val HugeMethodLimit = 8000
+
+  /** (codegen stage id, largest generated method in bytes) of every
+    * whole-stage codegen stage of an executed plan, adaptive query
+    * stages included. The compile is served from Spark's codegen cache
+    * when the stage ran. */
+  def stageMethodSizes(plan: org.apache.spark.sql.execution.SparkPlan): Seq[(Int, Int)] = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case w: WholeStageCodegenExec => w }
+      .map(w => w.codegenStageId -> CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize)
+  }
+
   /** `name` under `java.io.tmpdir`: where probes keep generated worlds. */
   def tmpPath(name: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"), name).getPath

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for the iterative operators
   * ([[ConnectedComponents]], [[graft.queries.GraphOps]].pagerank,
-  * [[DistributedRank]]), with an opt-in RELIABLE mode.
+  * [[DistributedRank]]) and the OSM geometry plans
+  * ([[graft.osm.GeometryBuilder]]), with an opt-in RELIABLE mode.
   *
   * Default (`spark.graft.checkpoint.reliable` unset/false):
   * `localCheckpoint` — blocks live in EXECUTOR-LOCAL storage. That is

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.Wkb
 import graft.geom.Wkb.Coord
+import graft.operators.Checkpoints
 
 /** Compiles an [[OsmQuery]] into a Spark dataflow over the osmpbf
   * DataSource (SURVEY §3.2): one declarative plan instead of the
@@ -26,46 +27,6 @@ import graft.geom.Wkb.Coord
 object OsmQueryExec {
 
   import graft.sources.OsmPbfSource.{TypeNode, TypeRelation, TypeWay}
-
-  // --- area heuristic tag tables (reference defaults.py:5-62) ---
-  val NotArea: Map[String, Seq[String]] = Map(
-    "area:highway" -> Seq("no"),
-    "aeroway" -> Seq("no", "taxiway"),
-    "amenity" -> Seq("no"),
-    "boundary" -> Seq("no"),
-    "building:part" -> Seq("no"),
-    "building" -> Seq("no"),
-    "craft" -> Seq("no"),
-    "golf" -> Seq("no"),
-    "historic" -> Seq("no"),
-    "indoor" -> Seq("no"),
-    "landuse" -> Seq("no"),
-    "leisure" -> Seq("no"),
-    "man_made" -> Seq("no", "cutline", "embankment", "pipeline"),
-    "natural" -> Seq("no", "coastline", "cliff", "ridge", "arete", "tree_row"),
-    "office" -> Seq("no"),
-    "place" -> Seq("no"),
-    "public_transport" -> Seq("no"),
-    "ruins" -> Seq("no"),
-    // "shops" (not "shop") is faithful to the reference table
-    // (defaults.py:24 has "shops" in NOT_AREA while defaults.py:54 has
-    // "shop" in IS_AREA_KEY) — the shop=no demotion never fires there
-    // either; kept for parity.
-    "shops" -> Seq("no"),
-    "tourism" -> Seq("no"))
-
-  val IsArea: Map[String, Seq[String]] = Map(
-    "barrier" -> Seq("city_wall", "ditch", "hedge", "retaining_wall", "wall", "spikes"),
-    "highway" -> Seq("services", "rest_area", "escape", "elevator"),
-    "power" -> Seq("plant", "substation", "generator", "transformer"),
-    "railway" -> Seq("station", "turntable", "roundhouse", "platform"),
-    "waterway" -> Seq("riverbank", "dock", "boatyard", "dam"))
-
-  val IsAreaKeyAnyValue: Seq[String] = Seq(
-    "area", "area:highway", "aeroway", "amenity", "boundary", "building",
-    "building:part", "craft", "golf", "historic", "indoor", "landuse",
-    "leisure", "man_made", "natural", "office", "place", "public_transport",
-    "ruins", "shop", "tourism")
 
   val RelationLine: Seq[String] = Seq("route")
   val RelationArea: Seq[String] = Seq("multipolygon", "boundary")
@@ -95,15 +56,13 @@ object OsmQueryExec {
   }
 
   /** keep/exclude pair+key match over the tags map — one side of the
-    * `_validate_tagval` truth table (reference primitives.py:186-215).
-    * Empty value list = any value (key-only match). */
-  private def tagSpecMatch(tags: Column, spec: Map[String, Seq[String]]): Column =
-    spec.foldLeft(lit(false)) { case (acc, (k, vs)) =>
-      val hit =
-        if (vs.isEmpty) map_contains_key(tags, lit(k))
-        else coalesce(try_element_at(tags, lit(k)).isin(vs.map(v => v: Any): _*), lit(false))
-      acc || hit
-    }
+    * `_validate_tagval` truth table (reference primitives.py:186-215),
+    * as one native [[graft.functions.TagMatch]] call. Empty value list =
+    * any value (key-only match). */
+  private[osm] def tagMatch(tags: Column, spec: Map[String, Seq[String]]): Column = {
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    column(graft.functions.TagMatch(expression(tags), graft.functions.TagTable(spec)))
+  }
 
   /** Full element-keep predicate, exactly the reference formula:
     * keepFirst ? (kps && !exs) : (!exs || kps)
@@ -111,8 +70,8 @@ object OsmQueryExec {
     * matching information resolves to `!keepFirst`
     * (reference primitives.py:186-215). */
   def tagPredicate(q: OsmQuery, tags: Column): Column = {
-    val kps = q.keep.map(tagSpecMatch(tags, _)).getOrElse(lit(false))
-    val exs = q.exclude.map(tagSpecMatch(tags, _)).getOrElse(lit(false))
+    val kps = q.keep.map(tagMatch(tags, _)).getOrElse(lit(false))
+    val exs = q.exclude.map(tagMatch(tags, _)).getOrElse(lit(false))
     val noTagval = q.mustTags.isEmpty && q.keep.isEmpty && q.exclude.isEmpty
     val body =
       if (noTagval) lit(!q.keepFirst)
@@ -128,18 +87,12 @@ object OsmQueryExec {
     if (q.mustTags.isEmpty) lit(true)
     else arrays_overlap(map_keys(tags), array(q.mustTags.map(lit): _*))
 
-  /** Way line/area heuristic as a pure Column cascade (reference
-    * primitives.py:260-285 `_way_geotype` intended semantics — the
-    * reference's `_is_area` has dead branches from `if not <set>`
-    * confusion; we implement the documented intent, SURVEY §2.7 R7). */
+  /** Way line/area heuristic (SURVEY §2.7 R7) — the native
+    * [[graft.functions.WayIsArea]] expression, which holds the
+    * reference's tag tables. */
   def wayIsArea(tags: Column, refs: Column): Column = {
-    val closed = element_at(refs, 1) === element_at(refs, -1)
-    val areaNo = coalesce(try_element_at(tags, lit("area")) === "no", lit(false))
-    val isAreaPair = tagSpecMatch(tags, IsArea)
-    val notAreaPair = tagSpecMatch(tags, NotArea)
-    val anyKey = arrays_overlap(map_keys(tags), array(IsAreaKeyAnyValue.map(lit): _*))
-    size(refs) >= 4 && closed && !areaNo &&
-      (isAreaPair || (!notAreaPair && anyKey))
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    column(graft.functions.WayIsArea(expression(tags), expression(refs)))
   }
 
   /** Relation geometry dispatch (reference primitives.py:288-305):
@@ -410,9 +363,10 @@ object GeometryBuilder {
   /** Attach node coordinates to exploded (…, ref) way-ref rows —
     * the geometry path's one big join — choosing the strategy from the
     * MEASURED exploded size, not an estimate. The exploded rows are
-    * lazily localCheckpoint'ed (counting the checkpointed RDD is the
-    * materializing action, and the join consumes the same blocks —
-    * nothing runs twice), then:
+    * lazily checkpointed through [[graft.operators.Checkpoints.truncate]]
+    * (counting the checkpointed RDD is the materializing action, and
+    * the join consumes the same blocks — with the default local
+    * checkpoint nothing runs twice), then:
     *  - small side (≤ `broadcastRows`, default [[RefsBroadcastRows]]):
     *    BROADCAST the refs. This removes BOTH exchanges — the
     *    multi-million-row node table streams straight
@@ -450,9 +404,10 @@ object GeometryBuilder {
     * whether it took the broadcast side. */
   private def measuredCoordJoin(exploded: DataFrame, nodes: DataFrame,
       broadcastRows: Long): (DataFrame, DataFrame, Boolean) = {
-    val expC = exploded.localCheckpoint(eager = false)
+    val expC = Checkpoints.truncate(exploded)
     // count the checkpointed RDD itself: a `count()` query would plan
-    // (and compile) two aggregation stages just to size the join
+    // (and compile) two aggregation stages just to size the join. Local
+    // and reliable checkpoints both plan as a LogicalRDD
     val rows = expC.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.count()
       case _ => expC.count()
@@ -471,7 +426,7 @@ object GeometryBuilder {
     * are the coordinates of node `refs(i)`, NaN where that node is
     * missing from the extract.
     *
-    * Its input is cut off by [[coordJoin]]'s narrow `localCheckpoint` of
+    * Its input is cut off by [[coordJoin]]'s narrow checkpoint of
     * the exploded `(wid, pos, ref)` rows, so every plan above it (the
     * coordinate join and the per-way walk) reads the same three-column
     * RDD whatever query feeds it: their generated classes are
@@ -479,7 +434,7 @@ object GeometryBuilder {
     * them once per session. The walk takes the refs from the exploded
     * rows and the coordinates from the joined ones, so a ref whose node
     * the inner coordinate join dropped still keeps its position. The
-    * result is a lazy `localCheckpoint` too: buildings reads it twice.
+    * result is a lazy checkpoint too: buildings reads it twice.
     *
     * @return the sequences and whether they are small enough (by the
     *   measured exploded-ref count) to broadcast into a consumer join */
@@ -510,8 +465,7 @@ object GeometryBuilder {
         (rows.head._1, refs, xs, ys)
       })
       .toDF("wid", "refs", "xs", "ys")
-      .localCheckpoint(eager = false)
-    (seqs, small)
+    (Checkpoints.truncate(seqs), small)
   }
 
   /** Points (G1), way linestrings/polygons (G2/G3) and relation
@@ -540,8 +494,8 @@ object GeometryBuilder {
 
     // the relation path consumes the filtered elements several times;
     // they are small by construction (elements passing the query's
-    // must filter), so a lazy local checkpoint decodes them once
-    val elG = if (q.relations) el.localCheckpoint(eager = false) else el
+    // must filter), so a lazy checkpoint decodes them once
+    val elG = if (q.relations) Checkpoints.truncate(el) else el
     val elWays = elG.filter(isWay)
 
     // G5-G8 member ways of the geometry relations (J3: a second pruned

@@ -13,7 +13,9 @@ import graft.sources.SparkTestSession
   * class loader; a session whose default queries need more recompiles
   * them on every pass. The geometry queries therefore share one way
   * assembly whose compiled stages are byte-identical across queries,
-  * and keep every operator inside whole-stage codegen. */
+  * and keep every operator inside whole-stage codegen. Each stage's
+  * largest generated method stays within HotSpot's 8,000-byte limit,
+  * above which the JIT never compiles it. */
 class CodegenFootprintSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -47,6 +49,26 @@ class CodegenFootprintSpec extends AnyFunSuite {
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     info(s"compiled $compiled classes")
     assert(compiled <= 80, s"the six default queries compiled $compiled classes")
+  }
+
+  test("every whole-stage codegen method of the six default queries stays JIT-compilable") {
+    val file = new OsmFile(spark, world)
+    val frames = ("geometry" -> (() => file.geometry())) +:
+      geometryQueries.map { case (name, q) => name -> (() => q.run(spark, world)) }
+    // each query read bare and under the checksum aggregate: the
+    // caller's action is fused into the result stage's method
+    val runs: Seq[(String, () => Unit)] = ("info" -> (() => { file.info(); () })) +:
+      frames.flatMap { case (name, df) => Seq(
+        s"$name collect" -> (() => { df().collect(); () }),
+        s"$name consume" -> (() => consume(df()))) }
+    val sizes = runs.map { case (name, body) =>
+      name -> PlanCapture.executions(spark)(body())
+        .flatMap(qe => graft.ProbeRig.stageMethodSizes(qe.executedPlan))
+    }
+    sizes.foreach { case (name, s) => info(s"$name: largest method ${s.map(_._2).max} bytes") }
+    val huge = for ((name, s) <- sizes; (id, bytes) <- s if bytes > graft.ProbeRig.HugeMethodLimit)
+      yield s"$name stage $id: $bytes bytes"
+    assert(huge.isEmpty, s"stages HotSpot runs interpreted:\n${huge.mkString("\n")}")
   }
 
   /** Filters that run outside whole-stage codegen (interpreted, with a
