@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN batch-scale probe — the MEASURED proof that the cid-indexed
   * probe layout ([[graft.queries.VectorOps.tablesByList]]) keeps
   * per-corpus-row scorer work proportional to the queries PROBING that
@@ -41,14 +39,7 @@ object AnnBatchProbe {
     // inline copy and its ADVICE-r19 '9 9' / double-sample defects)
     val (loadStart, tainted) = ProbeRig.loadGate(tag = "annbatchprobe")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ProbeRig.session()
     import spark.implicits._
 
     val n = sys.env.getOrElse("SPARK_GRAFT_VECPROBE_N", "200000").toLong
@@ -85,8 +76,8 @@ object AnnBatchProbe {
       .localCheckpoint(eager = true)
 
     /** One measured batch: build probes + ADC tables for `bn` queries,
-      * invert via tablesByList, run the indexed scoring pass with an
-      * accumulator on the inner loop. Returns (pairs, visits, bestWall). */
+      * invert via tablesByList, run the indexed scoring pass with a
+      * tally of the inner loop. Returns (pairs, visits, bestWall). */
     def runBatch(bn: Int): (Long, Long, Double) = {
       val qids = (0L until bn.toLong).toArray
       val probes: Map[Long, Seq[Long]] = qids.map { q =>
@@ -135,18 +126,8 @@ object AnnBatchProbe {
         (r.getLong(0), r.getLong(1))
       }
 
-      var best = Double.MaxValue
-      var pairs = 0L
-      var visitsV = 0L
-      (1 to 3).foreach { _ =>
-        val s = System.nanoTime()
-        val (p, v) = scorePass()
-        pairs = p
-        visitsV = v
-        val d = (System.nanoTime() - s) / 1e9
-        if (d < best) best = d
-      }
-      (pairs, visitsV, best)
+      val t = ProbeRig.timed(3)(scorePass())
+      (t.result._1, t.result._2, t.wallS)
     }
 
     val batches = Seq(1000, 10000)

@@ -73,7 +73,7 @@ object Bench {
     "vec_ann_adaptive", "vec_ann_adaptive_sparse",
     // osm fixture end-to-end + 2M-node scale probes (osm_split_topology
     // = same workload over a two-shard border-overlapping split: the
-    // multi-file border-dedup shuffle's round-over-round signal)
+    // round-over-round signal of the source's multi-file shadow skip)
     "osm_buildings", "osm_topology",
     "osm_big_pois", "osm_big_topology", "osm_big_buildings",
     "osm_split_topology")
@@ -742,32 +742,27 @@ object Bench {
     // unparseable (ADVICE r7)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = BenchRig.buildSession()
+    val spark = ProbeRig.session()
     // untimed warmup: touch every table once so the timed loop measures
     // steady-state query latency, not JVM/codegen/file-index warmup
-    BenchRig.warmup(spark, sfDir)
+    ProbeRig.warmup(spark, sfDir)
     val qs = SparkEntry.queries
     // process CPU-seconds alongside wall per rep: on a contended host
     // the wall clock swings 10-20x with steal while CPU-seconds of
-    // actual work stay comparable (TimeQuery doctrine) — BENCH_r06
+    // actual work stay comparable — BENCH_r06
     // recorded a phantom 2.1x "regression" that was pure host noise and
     // could not be diagnosed from the artifact because only wall was
     // recorded. The system 1-min load average sampled before each query
     // is the second sentinel: a polluted run shows load >> this JVM's
     // own parallelism, making noise self-evident from the JSON alone.
-    // JVM-health beans (VERDICT r16 task 1) live in BenchRig — shared
+    // JVM-health beans (VERDICT r16 task 1) live in ProbeRig — shared
     // with the BenchOne requeue child so both timing protocols sample
     // the same sources: GC time, JIT-compiler time, heap; plus the
     // code-cache / metaspace pools here, so a repeat of the r16
     // driver-host CPU inflation self-adjudicates from the artifact
     // (heap pressure vs compilation churn vs external work)
     import scala.jdk.CollectionConverters._
-    def procCpuNanos(): Long = BenchRig.procCpuNanos()
-    def loadAvg(): Double = BenchRig.loadAvg()
-    def gcMillis(): Long = BenchRig.gcMillis()
-    def jitMillis(): Long = BenchRig.jitMillis()
-    def heapUsedMb(): Double = BenchRig.heapUsedMb()
-    val memBean = BenchRig.memBean
+    import ProbeRig.{gcMillis, heapUsedMb, jitMillis, loadAvg, memBean, procCpuNanos}
     val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
     def poolMb(subs: Seq[String])(of: java.lang.management.MemoryUsage => Long): Double = {
       val vs = pools.filter(p =>
@@ -791,7 +786,7 @@ object Bench {
     // per-query persisted-block snapshot taken right before the row
     // runs: [persisted RDD count, persisted MB, pinned RDD count] —
     // names whether block accumulation tracks a degradation
-    def storageSnap(): (Int, Double, Int) = BenchRig.storageSnap(spark)
+    def storageSnap(): (Int, Double, Int) = ProbeRig.storageSnap(spark)
     // three timed reps for EVERY row, report the min: single-shot
     // numbers swing ±2x from GC/codegen/scheduler jitter, and the
     // heavy per-way-walk probes JIT across the first TWO executions

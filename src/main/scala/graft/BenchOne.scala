@@ -1,92 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Shared measurement rig for the headline bench and its fresh-JVM
-  * requeue child: the session recipe, the JVM-health beans, the table
-  * warmup and the storage snapshot live HERE so the in-run and
-  * requeued measurements are the same protocol by construction —
-  * a requeued number that differed from the in-run one because the
-  * child forgot the warmup (or sampled different beans) would be a
-  * third timing protocol, not an adjudication. */
-private[graft] object BenchRig {
-  def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Untimed warmup: touch every table once so the timed loop measures
-    * steady-state query latency, not file-index/codegen warmup, and
-    * pre-generate the BigWorld extract (a stat call when it exists). */
-  def warmup(spark: SparkSession, sfDir: String): Unit = {
-    Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
-    try graft.pbf.BigWorld.ensure(graft.queries.OsmQueries.BigPath, 2000000, 100000)
-    catch { case _: Throwable => }
-  }
-
-  // the HotSpot-specific subinterface carries getProcessCpuTime; on a
-  // JVM whose bean doesn't implement it, degrade to -1 CPU sentinels
-  // rather than throwing (ADVICE r7)
-  private val baseBean =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean
-  private val sunBean = baseBean match {
-    case b: com.sun.management.OperatingSystemMXBean => Some(b)
-    case _ => None
-  }
-  def procCpuNanos(): Long = sunBean.map(_.getProcessCpuTime).getOrElse(-1L)
-  def loadAvg(): Double = baseBean.getSystemLoadAverage
-
-  import scala.jdk.CollectionConverters._
-  private val gcBeans =
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-  def gcMillis(): Long = {
-    val ts = gcBeans.asScala.map(_.getCollectionTime).filter(_ >= 0)
-    if (ts.isEmpty) -1L else ts.sum
-  }
-  private val compBean =
-    Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-      .filter(_.isCompilationTimeMonitoringSupported)
-  def jitMillis(): Long = compBean.map(_.getTotalCompilationTime).getOrElse(-1L)
-  private[graft] val memBean =
-    java.lang.management.ManagementFactory.getMemoryMXBean
-  def heapUsedMb(): Double = memBean.getHeapMemoryUsage.getUsed / 1048576.0
-
-  /** [persisted RDD count, persisted MB, pinned RDD count] right now —
-    * names whether block accumulation tracks a degradation. */
-  def storageSnap(spark: SparkSession): (Int, Double, Int) = {
-    val infos = spark.sparkContext.getRDDStorageInfo
-    val pinned = spark.sparkContext.getPersistentRDDs.keys
-      .count(id => graft.operators.Checkpoints.isPinned(spark.sparkContext, id))
-    (infos.length, infos.map(_.memSize).sum / 1048576.0, pinned)
-  }
-}
-
-/** Fresh-JVM measurement child (VERDICT r17 task 1, the TimeQuery
-  * doctrine automated): the headline bench forks ONE of these at END
-  * of run over every churn-/growth-/2x-flagged row, so the committed
-  * record carries a same-code fresh-JVM reading NEXT TO the in-run
-  * one — the r16/r17 phantom regressions (host JIT/state artifacts
-  * that fresh JVMs contradicted) become self-adjudicating from the
-  * artifact alone instead of needing a by-hand TimeQuery session.
+/** Times named queries in a fresh JVM, on the same session, warmup and
+  * JVM meters as Bench ([[ProbeRig]]), so an in-run bench number and a
+  * fresh-JVM one are the same protocol by construction.
   *
-  * Also the rep-growth probe driver: `SPARK_GRAFT_BENCHONE_REPS=10
-  * runMain graft.BenchOne pipe_full_curation text_collocations`
-  * prints per-rep `[wall,cpu,load,gc,jit,heapMB,persistedRdds,
-  * persistedMB,pinnedRdds]` — the storage triple after each rep is
-  * what distinguishes in-JVM block accumulation from host state.
+  * The headline bench forks ONE of these at END of run over every
+  * churn-/growth-/2x-flagged row, so the committed record carries a
+  * same-code fresh-JVM reading NEXT TO the in-run one — host JIT/state
+  * artifacts that a fresh JVM contradicts (the r16/r17 phantom
+  * regressions) self-adjudicate from the artifact alone.
+  *
+  * By hand, it is the isolated timing and A/B driver:
+  * `SPARK_GRAFT_BENCHONE_REPS=10 runMain graft.BenchOne q1 set:k=v q1`
+  * runs q1, sets the session conf `k` to `v`, and runs q1 again in the
+  * SAME JVM (same warmup, same GC state). Each rep prints
+  * `[wall,cpu,load,gc,jit,heapMB,persistedRdds,persistedMB,pinnedRdds]`
+  * — the storage triple after each rep is what distinguishes in-JVM
+  * block accumulation from host state. Judge on CPU when wall variance
+  * is pathological: on a noisy host the wall clock swings with steal
+  * while CPU-seconds of actual work stay comparable.
   *
   * Prints ONE JSON line per query (min-of-reps wall/cpu + the reps
   * array); the parent parses the `"benchone"` marker. Sweeps
@@ -96,31 +28,37 @@ object BenchOne {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCHONE_REPS", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = BenchRig.buildSession()
-    BenchRig.warmup(spark, sfDir)
+    val spark = ProbeRig.session()
+    ProbeRig.warmup(spark, sfDir)
     val qs = SparkEntry.queries
-    args.filter(qs.contains).foreach { name =>
-      // one measure() call per rep so the storage snapshot lands
-      // AFTER each rep (inside a 3-rep measure it could only be
-      // sampled before/after the triple)
-      val repRes = (1 to reps).map { _ =>
-        val r = Bench.measure(name, 1, BenchRig.loadAvg _,
-          BenchRig.procCpuNanos _, () => qs(name)(spark, sfDir).count(),
-          () => (), BenchRig.gcMillis _, BenchRig.jitMillis _,
-          BenchRig.heapUsedMb _)
-        (r.reps.head, BenchRig.storageSnap(spark))
-      }
-      val ok = repRes.map(_._1).filterNot(_.failed)
-      val wall = if (ok.nonEmpty) ok.map(_.wall).min else -1.0
-      val cpu = if (ok.nonEmpty) ok.map(_.cpu).min else -1.0
-      val rows = if (ok.nonEmpty) ok.head.rows else -1L
-      val repJson = repRes.map { case (r, (n, mb, pin)) =>
-        if (r.failed) "\"FAIL\""
-        else f"[${r.wall}%.3f,${r.cpu}%.2f,${r.load}%.2f,${r.gc}%.2f," +
-          f"${r.jit}%.2f,${r.heap}%.0f,$n%d,$mb%.0f,$pin%d]"
-      }.mkString("[", ",", "]")
-      println(f"""{"benchone":"$name","wall":$wall%.3f,"cpu":$cpu%.2f,"rows":$rows,"reps":$repJson}""")
-      graft.operators.Checkpoints.unpersistUnpinned(spark)
+    args.foreach {
+      case set if set.startsWith("set:") =>
+        val (k, v) = ProbeRig.setConf(set)
+        spark.conf.set(k, v)
+        println(s"[benchone] -- $k=$v")
+      case name if qs.contains(name) =>
+        // one measure() call per rep so the storage snapshot lands
+        // AFTER each rep (inside a 3-rep measure it could only be
+        // sampled before/after the triple)
+        val repRes = (1 to reps).map { _ =>
+          val r = Bench.measure(name, 1, ProbeRig.loadAvg _,
+            ProbeRig.procCpuNanos _, () => qs(name)(spark, sfDir).count(),
+            () => (), ProbeRig.gcMillis _, ProbeRig.jitMillis _,
+            ProbeRig.heapUsedMb _)
+          (r.reps.head, ProbeRig.storageSnap(spark))
+        }
+        val ok = repRes.map(_._1).filterNot(_.failed)
+        val wall = if (ok.nonEmpty) ok.map(_.wall).min else -1.0
+        val cpu = if (ok.nonEmpty) ok.map(_.cpu).min else -1.0
+        val rows = if (ok.nonEmpty) ok.head.rows else -1L
+        val repJson = repRes.map { case (r, (n, mb, pin)) =>
+          if (r.failed) "\"FAIL\""
+          else f"[${r.wall}%.3f,${r.cpu}%.2f,${r.load}%.2f,${r.gc}%.2f," +
+            f"${r.jit}%.2f,${r.heap}%.0f,$n%d,$mb%.0f,$pin%d]"
+        }.mkString("[", ",", "]")
+        println(f"""{"benchone":"$name","wall":$wall%.3f,"cpu":$cpu%.2f,"rows":$rows,"reps":$repJson}""")
+        graft.operators.Checkpoints.unpersistUnpinned(spark)
+      case name => System.err.println(s"[benchone] no query named '$name' — skipped")
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Coordinate-join 10× scale probe (VERDICT r18 task 8 — SURVEY §7.3
   * risk #1): the geometry path's one big join (`GeometryBuilder.coordJoin`
   * — exploded way refs ⋈ node coords) measured at the standard 2M-node
@@ -37,23 +35,7 @@ object CoordJoinProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val (loadStart, tainted) = ProbeRig.loadGate(tag = "coordjoin")
 
-    // the shared bench session recipe (review r19: don't grow another
-    // inline copy of the SPARK_GRAFT_CPUS/local[n]/shuffle-partitions
-    // builder — BenchRig owns it)
-    val spark = BenchRig.buildSession()
-
-    // per-phase shuffle totals via stage listener (PlanMetrics pattern)
-    @volatile var record = false
-    val shRead = new java.util.concurrent.atomic.AtomicLong()
-    val shWrite = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-        if (record) {
-          val m = ev.stageInfo.taskMetrics
-          shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-    })
+    val spark = ProbeRig.session()
 
     System.err.println("[coordjoin] ensuring worlds (the 10x generation is ~2 min one-off)")
     val genT0 = System.nanoTime()
@@ -72,40 +54,32 @@ object CoordJoinProbe {
       // execution's own QueryExecution (ADVICE r19 — a separate
       // warmup plan could in principle differ from the measured one)
       q.run(spark, path).foreach(_ => ())
-      // per-rep shuffle deltas + plan, reported from the MIN-WALL rep:
+      // per-rep shuffle totals + plans, reported from the MIN-WALL rep:
       // a cross-rep sum would mix multipliers between phases with
-      // different rep counts, and the bus must drain BEFORE the
-      // recording window closes (review r19). Each rep executes
+      // different rep counts (review r19). Each rep executes
       // through ITS df's QueryExecution (foreach + row accumulator —
       // count() would spawn a fresh QE whose pruned plan is not the
       // one measured), and under AQE the adaptive plan mutates in
       // place, so the post-execution string carries the RUNTIME
       // strategy of exactly the execution the wall number came from.
-      var best = Double.MaxValue
-      var rows = -1L
-      var bestRd = 0.0
-      var bestWr = 0.0
-      var plan = ""
-      (1 to reps).foreach { _ =>
-        shRead.set(0L); shWrite.set(0L)
-        record = true
-        val df = q.run(spark, path)
+      // The recording starts before the plan is built: building it
+      // runs the checkpoints' shuffle stages. The coordJoin sits under
+      // the way-sequence checkpoint, a query execution of its own, so
+      // the strategy is read from every execution the rep ran.
+      val p = (1 to reps).map { _ =>
         val acc = spark.sparkContext.longAccumulator
-        val s = System.nanoTime()
-        df.foreach(_ => acc.add(1))
-        val d = (System.nanoTime() - s) / 1e9
-        Thread.sleep(500) // drain listener bus inside the window
-        record = false
-        if (d < best) {
-          best = d; rows = acc.value
-          bestRd = shRead.get() / 1e6; bestWr = shWrite.get() / 1e6
-          plan = df.queryExecution.executedPlan.toString
+        val rec = ProbeRig.recordStages(spark) {
+          val df = q.run(spark, path)
+          ProbeRig.timed(1)(df.foreach(_ => acc.add(1)))
         }
-      }
-      val p = Phase(name, best, rows, bestRd, bestWr,
-        broadcast = plan.contains("BroadcastHashJoin"),
-        shuffleHash = plan.contains("ShuffledHashJoin"),
-        sortMerge = plan.contains("SortMergeJoin"))
+        val t = rec.result
+        val plan = rec.executions.map(_._2.executedPlan.toString).mkString("\n")
+        Phase(name, t.wallS, acc.value, rec.stages.map(_.shuffleReadMB).sum,
+          rec.stages.map(_.shuffleWriteMB).sum,
+          broadcast = plan.contains("BroadcastHashJoin"),
+          shuffleHash = plan.contains("ShuffledHashJoin"),
+          sortMerge = plan.contains("SortMergeJoin"))
+      }.minBy(_.wall)
       System.err.println(f"[coordjoin] $name: wall=${p.wall}%.2fs rows=${p.rows} " +
         f"shRd=${p.shReadMB}%.0fMB shWr=${p.shWriteMB}%.0fMB " +
         s"bcast=${p.broadcast} shash=${p.shuffleHash} smj=${p.sortMerge}")

@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev utility: dump formatted physical plans of selected queries.
+/** Dev utility: dump formatted physical plans of selected queries
+  * (all of them when none is named); `SPARK_GRAFT_CONF` session confs
+  * apply, so conf-gated plan shapes can be dumped.
   * sbt "runMain graft.Explain q1_agg j1_ref_coord_join ..." */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same session-conf hook as TimeQuery/PlanMetrics, so conf-gated
-    // plan shapes (e.g. spark.graft.index.dir) can be dumped
-    ProbeRig.applyEnvConf(spark)
+    val spark = ProbeRig.session()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")

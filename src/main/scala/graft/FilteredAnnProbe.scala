@@ -47,8 +47,7 @@ object FilteredAnnProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val (loadStart, tainted) = ProbeRig.loadGate(tag = "filtprobe")
 
-    // shared bench session recipe (review r19 — see CoordJoinProbe)
-    val spark = BenchRig.buildSession()
+    val spark = ProbeRig.session()
     import spark.implicits._
 
     val n = sys.env.getOrElse("SPARK_GRAFT_FILTPROBE_N", "100000").toLong

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off throughput probe at the reference's demo scale (Marseille ≈
   * 6.97M cached nodes, BASELINE.md): generates a 7M-node / 700k-way
   * synthetic extract, then times full-scan info(), the node coordinate
@@ -96,29 +94,14 @@ object ScaleProbe {
     * `SPARK_GRAFT_SCALE_WAIT_S` (default 300) — and if the host never
     * quiets down it still runs but stamps the artifact
     * `"tainted":true`, so a contended record can never be mistaken
-    * for a scale regression. The gate itself is [[ProbeRig.loadGate]]
-    * (VERDICT r19 task 6 retired this file's inline copy; the shared
-    * rule reads an unreadable /proc/loadavg as UNKNOWN — proceed
-    * tainted with load_start -1 — instead of this copy's old MXBean
-    * 1-min-only fallback). */
+    * for a scale regression ([[ProbeRig.loadGate]]). */
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_SCALE_MAX_LOAD", "2.0").toDouble
     val (loadStart, loadTainted) = ProbeRig.loadGate(
       maxWaitS = sys.env.getOrElse("SPARK_GRAFT_SCALE_WAIT_S", "300").toInt,
       tag = "scaleprobe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" applies session confs before the
-    // phases (same contract as TimeQuery)
-    ProbeRig.applyEnvConf(spark)
+    val spark = ProbeRig.session()
 
     // _v3: building-tagged inner rings + forest multipolygons — same
     // versioning rule as OsmQueries.BigPath (ensure() only checks
@@ -134,93 +117,76 @@ object ScaleProbe {
     // 7M topology phase: 13.6 → 4.9 → 4.0 s across reps in a cold JVM,
     // converging to ~3.3 s; a min-of-2 run whose generation step was
     // skipped (warm file cache) reported 7.5 s for a plan whose steady
-    // state is 3.5 s. A long-lived cluster never re-pays this warmup.
-    // per-phase codegen churn over all of a phase's repetitions, in
-    // phase order, for the record
+    // state is 3.5 s. A long-lived cluster never re-pays this warmup,
+    // so the first rep is reported apart as `<phase>_cold_s`, next to
+    // the min process CPU-seconds as `<phase>_cpu_s`.
+    // Per-phase codegen churn over all of a phase's repetitions, in
+    // phase order, for the record.
     val churn = scala.collection.mutable.LinkedHashMap.empty[String, ProbeRig.Codegen]
-    def phase[A](name: String)(f: => (A, Double)): (A, Double) = {
+    def phase[A](name: String)(f: => A): ProbeRig.Timed[A] = {
       val c0 = ProbeRig.codegen()
-      val r = f
+      val r = ProbeRig.timed(3)(f)
       churn(name) = ProbeRig.codegen() - c0
       r
     }
-    def timed[A](f: => A): (A, Double) = {
-      var best = Double.MaxValue
-      var r1: Option[A] = None
-      (1 to 3).foreach { _ =>
-        val s = System.nanoTime()
-        val r = f
-        val d = (System.nanoTime() - s) / 1e9
-        if (r1.isEmpty) r1 = Some(r)
-        if (d < best) best = d
-      }
-      (r1.get, best)
-    }
+    def times(key: String, t: ProbeRig.Timed[_]): String =
+      f""""${key}_s":${t.wallS}%.1f,"${key}_cold_s":${t.coldS}%.1f,"${key}_cpu_s":${t.cpuS}%.1f"""
 
     // process CPU-seconds across the whole probe (same doctrine as
     // Bench: on a contended host wall swings with steal while CPU of
     // actual work stays comparable)
-    val cpuBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def cpuNanos(): Long = cpuBean.map(_.getProcessCpuTime).getOrElse(-1L)
-    val cpu0 = cpuNanos()
+    val cpu0 = ProbeRig.procCpuNanos()
 
     val f = new graft.osm.OsmFile(spark, path)
-    val (info, tInfo) = phase("info_")(timed(f.info()))
-    val (nGeo, tGeo) = phase("geometry_cache_")(timed(f.geometry().count()))
-    val (nPois, tPois) = phase("pois_")(timed(
-      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, path).count()))
-    val (nTopo, tTopo) = phase("topology_")(timed(
+    val info = phase("info_")(f.info())
+    val geo = phase("geometry_cache_")(f.geometry().count())
+    val pois = phase("pois_")(
+      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, path).count())
+    val topo = phase("topology_")(
       graft.osm.OsmQuery.highways.copy(geometry = true, topology = true)
-        .run(spark, path).count()))
+        .run(spark, path).count())
     // buildings incl. multipolygon assembly: the per-relation
     // sequential ring-chaining path (G3-G8) — 35k relations + 70k
     // closed ways at this scale, the one per-group-sequential operator
     // family that previously had no scale datapoint
-    val (nBldg, tBldg) = phase("buildings_")(timed(
-      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, path).count()))
+    val bldg = phase("buildings_")(
+      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, path).count())
 
     // multi-file phase: same world as 3 border-overlapping region files.
-    // single-run timing: a raw file copy has no plan/codegen warmup for
-    // min-of-2 to strip, and a second run would only report the
-    // page-cache-warm rerun
-    def timedOnce[A](f: => A): (A, Double) = {
-      val s = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - s) / 1e9)
-    }
+    // The split is timed once: a raw file copy has no plan/codegen
+    // warmup for a min to strip, and a second run would only report
+    // the page-cache-warm rerun
     val mfDir = ProbeRig.tmpPath("graft_marseille_multifile_v3")
-    val (dupBlobs, tSplit) = timedOnce(splitPbf(path, mfDir, 3, 2))
+    val split = ProbeRig.timed(1)(splitPbf(path, mfDir, 3, 2))
     val fm = new graft.osm.OsmFile(spark, mfDir)
-    val (infoM, tInfoM) = phase("mf_info_")(timed(fm.info()))
-    val (nPoisM, tPoisM) = phase("mf_pois_")(timed(
-      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, mfDir).count()))
-    val (nTopoM, tTopoM) = phase("mf_topology_")(timed(
+    val infoM = phase("mf_info_")(fm.info())
+    val poisM = phase("mf_pois_")(
+      graft.osm.OsmQuery.pois.copy(geometry = true).run(spark, mfDir).count())
+    val topoM = phase("mf_topology_")(
       graft.osm.OsmQuery.highways.copy(geometry = true, topology = true)
-        .run(spark, mfDir).count()))
-    // relation assembly across a border-overlapping split: the border
-    // dedup must keep exactly one copy of every member way / relation
-    // blob or the per-relation chainer sees duplicate or missing
-    // members — ScaleProbeSplitSpec pins this at mini scale only; this
-    // is the at-volume gate (VERDICT r7 task 3)
-    val (nBldgM, tBldgM) = phase("mf_buildings_")(timed(
-      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, mfDir).count()))
-    val mfMatch = infoM("nodes") == info("nodes") && infoM("ways") == info("ways") &&
-      nPoisM == nPois && nTopoM == nTopo && nBldgM == nBldg
+        .run(spark, mfDir).count())
+    // relation assembly across a border-overlapping split: the source
+    // must read exactly one copy of every member way / relation that
+    // two files hold, or the per-relation chainer sees duplicate or
+    // missing members — ScaleProbeSplitSpec pins this at mini scale
+    // only; this is the at-volume gate (VERDICT r7 task 3)
+    val bldgM = phase("mf_buildings_")(
+      graft.osm.OsmQuery.buildings.copy(geometry = true).run(spark, mfDir).count())
+    val (inf, infM) = (info.result, infoM.result)
+    val mfMatch = infM("nodes") == inf("nodes") && infM("ways") == inf("ways") &&
+      poisM.result == pois.result && topoM.result == topo.result &&
+      bldgM.result == bldg.result
     // parity_total_s: the reference's Marseille demo workload (info +
     // geometry cache + POIs + topology + buildings) as ONE tracked
     // number, consumed by the README scale table (VERDICT r7 task 7)
-    val parityTotal = tInfo + tGeo + tPois + tTopo + tBldg
-    val cpuTotal = if (cpu0 < 0) -1.0 else (cpuNanos() - cpu0) / 1e9
-    val load = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val parityTotal = Seq(info, geo, pois, topo, bldg).map(_.wallS).sum
+    val cpuTotal = if (cpu0 < 0) -1.0 else (ProbeRig.procCpuNanos() - cpu0) / 1e9
+    val load = ProbeRig.loadAvg()
 
     // end-of-probe load includes this JVM's own 32 threads, so taint is
     // judged on the gated START load only; "load" stays in the record
     // as raw context
-    val line = f"""{"round":${Bench.roundNumber},"tainted":$loadTainted,"load_start":$loadStart%.2f,"max_load":$maxLoad%.1f,"gen_s":$tGen%.1f,"blobs":${info("blobs")},"nodes":${info("nodes")},"ways":${info("ways")},"info_s":$tInfo%.1f,"geometry_cache_rows":$nGeo,"geometry_cache_s":$tGeo%.1f,"pois_rows":$nPois,"pois_s":$tPois%.1f,"topology_rows":$nTopo,"topology_s":$tTopo%.1f,"buildings_rows":$nBldg,"buildings_s":$tBldg%.1f,"parity_total_s":$parityTotal%.1f,"cpu_total_s":$cpuTotal%.1f,"load":$load%.2f,"mf_files":3,"mf_dup_blobs":$dupBlobs,"mf_split_s":$tSplit%.1f,"mf_info_s":$tInfoM%.1f,"mf_pois_s":$tPoisM%.1f,"mf_topology_s":$tTopoM%.1f,"mf_buildings_s":$tBldgM%.1f,"mf_results_match":$mfMatch,${churn.map { case (k, c) => c.json(k) }.mkString(",")}}"""
+    val line = f"""{"round":${Bench.roundNumber},"tainted":$loadTainted,"load_start":$loadStart%.2f,"max_load":$maxLoad%.1f,"gen_s":$tGen%.1f,"blobs":${inf("blobs")},"nodes":${inf("nodes")},"ways":${inf("ways")},${times("info", info)},"geometry_cache_rows":${geo.result},${times("geometry_cache", geo)},"pois_rows":${pois.result},${times("pois", pois)},"topology_rows":${topo.result},${times("topology", topo)},"buildings_rows":${bldg.result},${times("buildings", bldg)},"parity_total_s":$parityTotal%.1f,"cpu_total_s":$cpuTotal%.1f,"load":$load%.2f,"mf_files":3,"mf_dup_blobs":${split.result},"mf_split_s":${split.wallS}%.1f,"mf_split_cpu_s":${split.cpuS}%.1f,${times("mf_info", infoM)},${times("mf_pois", poisM)},${times("mf_topology", topoM)},${times("mf_buildings", bldgM)},"mf_results_match":$mfMatch,${churn.map { case (k, c) => c.json(k) }.mkString(",")}}"""
     println(line)
     // committed per-round artifact (VERDICT r9 task 3): scale tracking
     // must not depend on README prose diffs or the stdout window —
@@ -230,8 +196,9 @@ object ScaleProbe {
     ProbeRig.writeArtifact(s"scale_r${Bench.roundNumber}.json", line, "scaleprobe")
     if (!mfMatch)
       System.err.println(s"[scaleprobe] MULTI-FILE MISMATCH: " +
-        s"nodes ${infoM("nodes")} vs ${info("nodes")}, ways ${infoM("ways")} vs ${info("ways")}, " +
-        s"pois $nPoisM vs $nPois, topo $nTopoM vs $nTopo, buildings $nBldgM vs $nBldg")
+        s"nodes ${infM("nodes")} vs ${inf("nodes")}, ways ${infM("ways")} vs ${inf("ways")}, " +
+        s"pois ${poisM.result} vs ${pois.result}, topo ${topoM.result} vs ${topo.result}, " +
+        s"buildings ${bldgM.result} vs ${bldg.result}")
     spark.stop()
   }
 }

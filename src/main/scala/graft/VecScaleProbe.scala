@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Vector-index scale probe — turns the IVF-PQ layout's scale claims
@@ -125,15 +124,7 @@ object VecScaleProbe {
     // between loadStart and the taint verdict)
     val (loadStart, tainted) = ProbeRig.loadGate(tag = "vecscaleprobe")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ProbeRig.session()
     import spark.implicits._
 
     val n = sys.env.getOrElse("SPARK_GRAFT_VECPROBE_N", "200000").toLong
@@ -197,19 +188,6 @@ object VecScaleProbe {
     val bcT = spark.sparkContext.broadcast(tables)
     val bcP = spark.sparkContext.broadcast(probes)
 
-    def timed[A](f: => A): (A, Double) = {
-      var best = Double.MaxValue
-      var r: Option[A] = None
-      (1 to 3).foreach { _ =>
-        val s = System.nanoTime()
-        val x = f
-        val d = (System.nanoTime() - s) / 1e9
-        if (r.isEmpty) r = Some(x)
-        if (d < best) best = d
-      }
-      (r.get, best)
-    }
-
     // exact truth: brute-force L2 top-10 per query (bounded heap)
     val bcQ = spark.sparkContext.broadcast(qvecs)
     def bruteTop(): Map[Long, Set[Long]] =
@@ -242,7 +220,8 @@ object VecScaleProbe {
         .filter(col("rk") <= 10)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).toSet }
-    val (truth, tBrute) = timed(bruteTop())
+    val brute = ProbeRig.timed(3)(bruteTop())
+    val truth = brute.result
 
     // ADC scoring: flat (every code) vs probed (nprobe lists only)
     def adcScored(pruned: Boolean) =
@@ -278,13 +257,13 @@ object VecScaleProbe {
       }
     }
 
-    val (pairsFlat, tPairsFlat) = timed(adcScored(pruned = false).count())
-    val (pairsIvf, tPairsIvf) = timed(adcScored(pruned = true).count())
-    val (annFlat, tFlat) = timed(annTop(pruned = false))
-    val (annIvf, tIvf) = timed(annTop(pruned = true))
-    val rFlat = recall(truth, annFlat)
-    val rIvf = recall(truth, annIvf)
-    val scanFrac = pairsIvf.toDouble / pairsFlat
+    val pairsFlat = ProbeRig.timed(3)(adcScored(pruned = false).count())
+    val pairsIvf = ProbeRig.timed(3)(adcScored(pruned = true).count())
+    val annFlat = ProbeRig.timed(3)(annTop(pruned = false))
+    val annIvf = ProbeRig.timed(3)(annTop(pruned = true))
+    val rFlat = recall(truth, annFlat.result)
+    val rIvf = recall(truth, annIvf.result)
+    val scanFrac = pairsIvf.result.toDouble / pairsFlat.result
 
     // B: write the code table PARTITIONED BY list id, then measure the
     // rows a one-query probed scan actually reads from the source
@@ -325,14 +304,14 @@ object VecScaleProbe {
       "load_start" -> f"$loadStart%.2f",
       "n" -> n.toString, "k" -> k.toString, "nprobe" -> nprobe.toString,
       "m" -> m.toString, "sub_k" -> subK.toString,
-      "brute_s" -> f"$tBrute%.1f",
-      "pairs_flat" -> pairsFlat.toString,
-      "pairs_ivfpq" -> pairsIvf.toString,
+      "brute_s" -> f"${brute.wallS}%.1f",
+      "pairs_flat" -> pairsFlat.result.toString,
+      "pairs_ivfpq" -> pairsIvf.result.toString,
       "adc_scan_frac" -> f"$scanFrac%.4f",
-      "pairs_flat_s" -> f"$tPairsFlat%.1f",
-      "pairs_ivfpq_s" -> f"$tPairsIvf%.1f",
-      "flat_topk_s" -> f"$tFlat%.1f",
-      "ivfpq_topk_s" -> f"$tIvf%.1f",
+      "pairs_flat_s" -> f"${pairsFlat.wallS}%.1f",
+      "pairs_ivfpq_s" -> f"${pairsIvf.wallS}%.1f",
+      "flat_topk_s" -> f"${annFlat.wallS}%.1f",
+      "ivfpq_topk_s" -> f"${annIvf.wallS}%.1f",
       "recall_flat" -> f"$rFlat%.3f",
       "recall_ivfpq" -> f"$rIvf%.3f",
       "source_full_rows" -> fullRead.toString,

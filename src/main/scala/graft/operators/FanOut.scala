@@ -25,13 +25,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * sort-before-repartition keeps that retry-safe too).
   */
 object FanOut {
-  /** Session kill-switch (`spark.graft.fanout=false`) for deployment
-    * A/Bs. */
-  val ConfKey = "spark.graft.fanout"
-
   def apply(df: DataFrame, keys: Column*): DataFrame = {
-    if (!df.sparkSession.conf.get(ConfKey, "true").trim.equalsIgnoreCase("true"))
-      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else if (keys.nonEmpty) df.repartition(target, keys: _*)

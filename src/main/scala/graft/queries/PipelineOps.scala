@@ -29,7 +29,7 @@ object PipelineOps {
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Document corpus scan — the BARE reader, same doctrine as
-    * [[TextOps.docs]]: the fresh-JVM `spark.graft.fanout` A/B showed a
+    * [[TextOps.docs]]: the fresh-JVM fan-out on/off A/B showed a
     * wholesale fan-out exchange costs 1.4–2.9× on every cheap per-doc
     * kernel row (mm_scene_cut, mm_video_neardup, pipe_dsir_weights,
     * dedup_chunk_exact …) and only pays where the fused kernel is
@@ -51,8 +51,8 @@ object PipelineOps {
     // hash kernel is the one fused pipe kernel expensive enough to
     // outweigh the exchange when a single-row-group scan plans one
     // task (measured 0.5+ CPU-s single-threaded in the
-    // dedup_substring_pairs profile; fresh-JVM A/B over the
-    // spark.graft.fanout toggle quoted in OPTIMIZATION_r21.md)
+    // dedup_substring_pairs profile; fresh-JVM fan-out on/off A/B
+    // quoted in OPTIMIZATION_r21.md)
     graft.operators.FanOut(d.select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>

@@ -77,7 +77,7 @@ object SearchOps extends Serializable {
   /** Corpus scan — the BARE reader (the [[TextOps.docs]] doctrine):
     * the direct consumers (chunking, positional postings) are cheap
     * per-doc kernels that a wholesale fan-out exchange made 1.4–2×
-    * slower in the fresh-JVM `spark.graft.fanout` A/B. The one heavy
+    * slower in the fresh-JVM fan-out on/off A/B. The one heavy
     * stage — the tokenize→tf build of [[tfStage]], paid once per
     * session — fans out its own input below, and its checkpoint keeps
     * that partitioning for every downstream retrieval consumer. */

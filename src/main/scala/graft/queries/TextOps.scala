@@ -316,8 +316,8 @@ object TextOps {
 
   /** Document corpus scan — the BARE reader. Fan-out is applied
     * selectively at the expensive fused-kernel call sites (the MinHash
-    * signature stage below), NOT here: a measured fresh-JVM A/B over
-    * the `spark.graft.fanout` toggle showed the wholesale exchange
+    * signature stage below), NOT here: a measured fresh-JVM A/B with
+    * fan-out on and off (OPTIMIZATION_r21.md) showed the wholesale exchange
     * costs 1.4–2.9× on every cheap per-doc kernel row (text_tokens
     * 0.21→0.36 s, dedup_exact_hash 0.35→0.74 s, text_doc_freq
     * 0.47→0.97 s …) while only kernels whose per-doc work dwarfs the

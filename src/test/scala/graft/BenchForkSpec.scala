@@ -177,7 +177,7 @@ class BenchForkSpec extends AnyFunSuite {
   }
 
   test("requeue child session is pinned to the bounded thread count") {
-    // BenchRig.buildSession reads SPARK_GRAFT_CPUS; freshJvmMeasure
+    // ProbeRig.session reads SPARK_GRAFT_CPUS; freshJvmMeasure
     // sets it to requeueChildCpus before the caller's overrides. The
     // default bound must stay single-digit-ish: the child runs NEXT
     // TO the parent's local[32] session.

@@ -7,8 +7,8 @@ import graft.sources.SparkTestSession
   * this round's machinery"): the conditional repartition fires exactly
   * when the planned input has fewer partitions than the session's
   * default parallelism, is an identity otherwise (the 100 TB case —
-  * thousands of scan splits), honors the kill-switch, and hash-
-  * partitions when keys are given. */
+  * thousands of scan splits), and hash-partitions when keys are
+  * given. */
 class FanOutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -29,14 +29,6 @@ class FanOutSpec extends AnyFunSuite {
     assert(out eq wide, "FanOut must be an identity at scan parallelism >= cores")
     val exact = spark.range(0, 1000).repartition(target).toDF("id")
     assert(FanOut(exact) eq exact, "equal partition count is already enough")
-  }
-
-  test("kill-switch disables the exchange") {
-    spark.conf.set(FanOut.ConfKey, "false")
-    try {
-      val one = spark.range(0, 10).coalesce(1).toDF("id")
-      assert(FanOut(one) eq one)
-    } finally spark.conf.unset(FanOut.ConfKey)
   }
 
   test("keys hash-partition deterministically") {

@@ -27,8 +27,7 @@ class BorderDedupSpec extends AnyFunSuite {
     (f.getAbsolutePath, dir)
   }
 
-  // name kept from the walk's earlier, ranges-only form
-  test("blobIdRanges agrees with the decoded elements per blob") {
+  test("blob summary id spans agree with the decoded elements per blob") {
     val (single, _) = mkWorld()
     val blobs = graft.pbf.OsmPbfFile.indexAll(single)
     val conf = graft.pbf.OsmPbfFile.sharedConf
